@@ -10,6 +10,10 @@ Defaults are chosen for the 100 TB design point but harmless locally:
   - Arrow on (vectorized pandas-UDF transfer for the Python-side operators)
   - shuffle partitions sized for the local harness; on a real cluster this is
     overridden by AQE's coalescing + `spark.sql.adaptive.advisoryPartitionSizeInBytes`
+  - generated-code cache sized to the engine's working set
+    (CODEGEN_CACHE_ENTRIES): one session compiles more than Spark's default
+    of 100 distinct classes, so the default LRU evicts and every repeated
+    query re-runs Janino and then the JIT on the evicted classes
 """
 
 from __future__ import annotations
@@ -17,6 +21,12 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# spark.sql.codegen.cache.maxEntries, a static conf read once per JVM.
+# Spark's default of 100 is below what one session compiles: the tier-1
+# suite's session compiles 4 289 distinct classes, the sf0.01 sweep of all
+# 235 queries 3 219. About 2x headroom, since the cache evicts per segment.
+CODEGEN_CACHE_ENTRIES = 8192
 
 
 def build_session(
@@ -58,6 +68,8 @@ def build_session(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         # Broadcast small dims (nation/region/supplier) automatically.
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # Keep every generated class of a session compiled (see CODEGEN_CACHE_ENTRIES).
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         # Timestamps: keep parquet INT96/µs semantics stable across engines.
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))

@@ -523,6 +523,43 @@ def compact_band_index(
     return len(committed)
 
 
+def _check_checkpoint_covers(ckpt: str, verdict_root: str) -> None:
+    """Refuse to drain when the checkpoint has lost committed batches.
+
+    Batch ids come from the checkpoint, and a batch whose verdict delta
+    exists is skipped as a replay. A lost or older checkpoint restarts ids
+    below the committed ones, so every batch would be skipped and the
+    drain would return the old verdicts for new input. Spark writes a
+    batch's offset-log entry before running it, so each committed verdict
+    delta has one. The offset log is checked, not the commit log, because
+    a crash between the verdict commit and Spark's commit entry is a
+    legitimate replay."""
+    import os
+
+    committed = max(
+        (
+            int(d.split("_")[1])
+            for d in os.listdir(verdict_root)
+            if d.startswith("delta_")
+        ),
+        default=-1,
+    )
+    offsets = os.path.join(ckpt, "offsets")
+    logged = (
+        max((int(f) for f in os.listdir(offsets) if f.isdigit()), default=-1)
+        if os.path.isdir(offsets)
+        else -1
+    )
+    if logged < committed:
+        raise RuntimeError(
+            f"{verdict_root} holds committed verdicts up to batch "
+            f"{committed}, but the checkpoint {ckpt} has logged batches "
+            f"only up to {logged}: the checkpoint was lost or replaced, and "
+            "draining would skip new batches as replays; drain into a fresh "
+            "out_root instead"
+        )
+
+
 def band_index_gate_drain(
     doc_stream: DataFrame, out_root: str, banding=None
 ) -> str:
@@ -542,7 +579,10 @@ def band_index_gate_drain(
     At 100 TB the index is a bucketed table on (band, key) and the probe
     join shuffles only the incoming batch; delta dirs are compacted on the
     same cadence a Delta/Iceberg deployment would (a handful exist per
-    drain here — AvailableNow batches of a staged corpus)."""
+    drain here — AvailableNow batches of a staged corpus).
+
+    Raises RuntimeError when `out_root/verdicts` holds committed batches
+    that the checkpoint never logged (see _check_checkpoint_covers)."""
     import os
 
     index_root = os.path.join(out_root, "index")
@@ -550,6 +590,7 @@ def band_index_gate_drain(
     ckpt = os.path.join(out_root, "ckpt")
     os.makedirs(index_root, exist_ok=True)
     os.makedirs(verdict_root, exist_ok=True)
+    _check_checkpoint_covers(ckpt, verdict_root)
 
     from ..operators.dedup import narrow_minhash_bands_arrow
 

@@ -1362,6 +1362,41 @@ def test_band_index_gate_matches_python_state_gate(spark, tmp_path):
     assert sum(1 for d in os.listdir(idx) if d.startswith("delta_")) == 3
 
 
+def test_band_index_gate_drain_refuses_lost_checkpoint(spark, tmp_path):
+    """Checkpoint loss is injected, not argued: after a drain, deleting
+    `ckpt` would restart batch ids at 0 against committed verdict deltas,
+    and every batch would be skipped as a replay (stale verdicts). The
+    drain must refuse instead. With the checkpoint intact, draining the
+    same out_root again stays a no-op."""
+    import os
+    import shutil
+
+    from mapreduce_simulation_spark.streaming.stateful import (
+        band_index_gate_drain,
+    )
+
+    src = _multibatch_doc_stage(spark, tmp_path, "lost_ckpt_src")
+    out = str(tmp_path / "lost_ckpt_out")
+
+    def drain():
+        return band_index_gate_drain(
+            spark.readStream.schema("doc_id bigint, text string")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src),
+            out,
+        )
+
+    ver = drain()
+    committed = sorted(os.listdir(ver))
+    assert committed == ["delta_00000", "delta_00001", "delta_00002"]
+    drain()  # intact checkpoint: nothing new, nothing re-gated
+    assert sorted(os.listdir(ver)) == committed
+    shutil.rmtree(os.path.join(out, "ckpt"))
+    with pytest.raises(RuntimeError, match="checkpoint .* was lost"):
+        drain()
+    assert sorted(os.listdir(ver)) == committed
+
+
 def test_band_index_gate_batch_replay_is_idempotent(spark, tmp_path):
     """Crash-replay contract of the foreachBatch body: (a) a fully
     committed batch (verdict delta present) is a no-op on replay; (b) a
