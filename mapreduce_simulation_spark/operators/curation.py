@@ -37,7 +37,7 @@ from .caching import persist_tracked
 
 from ..functions import hashing as H
 from ..tables import load_table
-from ..staging import read_staged
+from ..staging import read_staged, stage_once, stage_once_dir
 from .dedup import _SHINGLES_SQL, _shingles
 from .text import bigram_pairs, staged_tokenized_docs, tokens
 from .planmemo import memoized_plan
@@ -1579,17 +1579,9 @@ def _staged_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     importance-weight artifact the DSIR recipe trains offline and applies
     to every shard. logw is the round-6 double of an exact int64-product
     ratio; doubles roundtrip parquet bitwise, so scoring results are
-    unchanged. Temp-dir rename keeps a crashed first fit un-mistakable
-    for a completed stage."""
-    import os
+    unchanged."""
 
-    from ..staging import keyed_staging_dir
-
-    root, _ = keyed_staging_dir(
-        "dsir_w_", f"{sf_dir}|ws_v1|b{DSIR_BUCKETS}|{DSIR_TARGET_LANG}"
-    )
-    final = os.path.join(root, "w")
-    if not os.path.isdir(final):
+    def build() -> DataFrame:
         big = persist_tracked(
             staged_tokenized_docs(spark, sf_dir).select(
                 "lang",
@@ -1612,7 +1604,7 @@ def _staged_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("tt")
         )
         tr = big.agg(F.count(F.lit(1)).alias("tr"))
-        wtab = (
+        return (
             cr.join(ct, "bucket", "left")
             .na.fill({"ct": 0})
             .crossJoin(F.broadcast(tt))
@@ -1634,10 +1626,14 @@ def _staged_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("logw"),
             )
         )
-        tmp = os.path.join(root, "_tmp_w")
-        wtab.write.mode("overwrite").parquet(tmp)
-        os.rename(tmp, final)
-    return read_staged(spark, final)
+
+    return stage_once(
+        spark,
+        "dsir_w_",
+        f"{sf_dir}|ws_v1|b{DSIR_BUCKETS}|{DSIR_TARGET_LANG}",
+        "w",
+        build,
+    )
 
 
 @memoized_plan
@@ -2066,9 +2062,8 @@ def _staged_ccnet_lm(
     type tables per scoring query is the artificial part.  The tables are
     deterministic aggregates (string/long columns — parquet roundtrip is
     bitwise), so banding results are unchanged.  Shared by
-    ccnet_perplexity_buckets and curation_pipeline_v2 via the keyed
-    staging contract (staging.py); temp-dir rename makes a crashed first
-    training un-mistakable for a completed stage.
+    ccnet_perplexity_buckets and curation_pipeline_v2 via
+    ``staging.stage_once_dir``.
 
     The LM is built from staged_tokenized_docs(spark, sf_dir) HERE — not
     from a caller-supplied frame — because the artifact is keyed only by
@@ -2079,11 +2074,17 @@ def _staged_ccnet_lm(
     ccnet_buckets_from (spark/sf_dir unset)."""
     import os
 
-    from ..staging import keyed_staging_dir
+    lm = _ccnet_lm_dir(spark, sf_dir)
+    return tuple(
+        read_staged(spark, os.path.join(lm, t)) for t in ("c12", "c1", "v")
+    )
 
-    root, _ = keyed_staging_dir("ccnet_lm_", f"{sf_dir}|ws_v1")
-    final = os.path.join(root, "lm")
-    if not os.path.isdir(final):
+
+def _ccnet_lm_dir(spark: SparkSession, sf_dir: str) -> str:
+    """The staged LM dir of _staged_ccnet_lm, holding c12/, c1/ and v/."""
+    import os
+
+    def write(tmp: str) -> None:
         docs = staged_tokenized_docs(spark, sf_dir).select(
             "doc_id", "lang", "ws"
         )
@@ -2092,7 +2093,6 @@ def _staged_ccnet_lm(
             "lang", F.explode(bigram_pairs(ws)).alias("p")
         ).select("lang", "p.w1", "p.w2")
         tok = docs.select("lang", F.explode(ws).alias("w1"))
-        tmp = os.path.join(root, "_tmp_lm")
         big.groupBy("lang", "w1", "w2").agg(
             F.count(F.lit(1)).alias("c12")
         ).write.mode("overwrite").parquet(os.path.join(tmp, "c12"))
@@ -2101,12 +2101,8 @@ def _staged_ccnet_lm(
         spark.read.parquet(os.path.join(tmp, "c1")).groupBy("lang").agg(
             F.count(F.lit(1)).alias("v")
         ).write.mode("overwrite").parquet(os.path.join(tmp, "v"))
-        os.rename(tmp, final)
-    return (
-        read_staged(spark, os.path.join(final, "c12")),
-        read_staged(spark, os.path.join(final, "c1")),
-        read_staged(spark, os.path.join(final, "v")),
-    )
+
+    return stage_once_dir(spark, "ccnet_lm_", f"{sf_dir}|ws_v1", "lm", write)
 
 
 # Ceiling for broadcasting the folded bigram-type NLL table. Bigram TYPE
@@ -2135,15 +2131,11 @@ def _nll_broadcast(
 
     if spark is None or sf_dir is None:
         return F.broadcast(nlltab)
-    from ..staging import keyed_staging_dir
-
-    root, _ = keyed_staging_dir("ccnet_lm_", f"{sf_dir}|ws_v1")
-    c12_dir = os.path.join(root, "lm", "c12")
+    c12_dir = os.path.join(_ccnet_lm_dir(spark, sf_dir), "c12")
     size = 0
-    if os.path.isdir(c12_dir):
-        for entry in os.scandir(c12_dir):
-            if entry.is_file():
-                size += entry.stat().st_size
+    for entry in os.scandir(c12_dir):
+        if entry.is_file():
+            size += entry.stat().st_size
     if size > NLL_BROADCAST_MAX_BYTES:
         return nlltab
     return F.broadcast(nlltab)
@@ -2321,16 +2313,9 @@ def _staged_bpe_rules(
     re-paid the type-table collect + driver fit per invocation. Strings
     roundtrip parquet exactly, so the staged rules are bit-identical to
     a fresh fit and results are unchanged."""
-    import os
-
-    from ..staging import keyed_staging_dir, read_staged
     from ..tables import load_table
 
-    root, _ = keyed_staging_dir(
-        "bpe_rules_", f"{sf_dir}|n{BPE_N_MERGES}cap{BPE_TYPE_TABLE_CAP}_v1"
-    )
-    final = os.path.join(root, "rules")
-    if not os.path.isdir(final):
+    def build() -> DataFrame:
         docs = load_table(spark, sf_dir, "documents")
         type_rows = (
             docs.select(F.explode(tokens(F.col("text"))).alias("word"))
@@ -2343,13 +2328,18 @@ def _staged_bpe_rules(
         rules = _bpe_learn_driver(
             [(r["word"], int(r["cnt"])) for r in type_rows], BPE_N_MERGES
         )
-        tmp = os.path.join(root, "_tmp_rules")
-        spark.createDataFrame(
+        return spark.createDataFrame(
             [(rank, lhs, rhs) for rank, lhs, rhs, _m, _n in rules],
             "rank int, lhs string, rhs string",
-        ).repartition(1).write.mode("overwrite").parquet(tmp)
-        os.rename(tmp, final)
-    rows = read_staged(spark, final).collect()
+        ).repartition(1)
+
+    rows = stage_once(
+        spark,
+        "bpe_rules_",
+        f"{sf_dir}|n{BPE_N_MERGES}cap{BPE_TYPE_TABLE_CAP}_v1",
+        "rules",
+        build,
+    ).collect()
     return sorted((int(r.rank), r.lhs, r.rhs) for r in rows)
 
 

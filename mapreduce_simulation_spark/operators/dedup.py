@@ -38,7 +38,7 @@ from pyspark.sql.window import Window
 
 from ..functions import hashing as H
 from ..tables import load_table
-from ..staging import read_staged
+from ..staging import stage_once
 from .caching import persist_tracked
 from .text import tokens
 from .planmemo import memoized_plan
@@ -124,21 +124,14 @@ def staged_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline preprocesses the corpus into this shingle store once per
     snapshot, exactly like the tokenized frame curation_pipeline_v2
     shares in-plan.  Integer columns only, so the parquet roundtrip is
-    bitwise and every consumer's oracle is unchanged.  Temp-dir rename
-    keeps a crashed first build un-mistakable for a completed stage."""
-    import os
-
-    from ..staging import keyed_staging_dir
-
-    root, _ = keyed_staging_dir("shingles_", f"{sf_dir}|3gram_v1")
-    final = os.path.join(root, "sh")
-    if not os.path.isdir(final):
-        tmp = os.path.join(root, "_tmp_sh")
-        _shingles(load_table(spark, sf_dir, "documents")).write.mode(
-            "overwrite"
-        ).parquet(tmp)
-        os.rename(tmp, final)
-    return read_staged(spark, final)
+    bitwise and every consumer's oracle is unchanged."""
+    return stage_once(
+        spark,
+        "shingles_",
+        f"{sf_dir}|3gram_v1",
+        "sh",
+        lambda: _shingles(load_table(spark, sf_dir, "documents")),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -581,25 +574,14 @@ def staged_near_dup_pairs(
 
     The staged scan also REPLACES the per-consumer ``localCheckpoint``:
     a parquet source is already plan-truncated, so unions/self-references
-    over it re-read files instead of re-running the build.
-
-    First call per (sf_dir, params) pays build + write; the write goes to
-    a temp dir renamed into place so a crashed first build can never be
-    mistaken for a completed stage."""
-    import os
-
-    from ..staging import keyed_staging_dir
-
-    key = f"{sf_dir}|cap{SHINGLE_DF_CAP}|t{JACCARD_THRESHOLD}"
-    root, _ = keyed_staging_dir("neardup_pairs_", key)
-    final = os.path.join(root, "pairs")
-    if not os.path.isdir(final):
-        tmp = os.path.join(root, "_tmp_pairs")
-        _near_dup_pairs(
-            docs_full, sh=staged_shingles(spark, sf_dir)
-        ).write.mode("overwrite").parquet(tmp)
-        os.rename(tmp, final)
-    return read_staged(spark, final)
+    over it re-read files instead of re-running the build."""
+    return stage_once(
+        spark,
+        "neardup_pairs_",
+        f"{sf_dir}|cap{SHINGLE_DF_CAP}|t{JACCARD_THRESHOLD}",
+        "pairs",
+        lambda: _near_dup_pairs(docs_full, sh=staged_shingles(spark, sf_dir)),
+    )
 
 
 DEDUP_NGRAM_SQL = f"""
@@ -885,21 +867,15 @@ def _staged_minhash_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
     sizes the signature aggregation is |corpus|-scale work that belongs
     in the offline index build, exactly like the simhash and LSH-band
     artifacts."""
-    import os
-
-    from ..staging import keyed_staging_dir
-
-    root, _ = keyed_staging_dir("minhash_sig_", f"{sf_dir}|3gram_v1")
-    final = os.path.join(root, "sig")
-    if not os.path.isdir(final):
-        tmp = os.path.join(root, "_tmp_sig")
-        minhash_signatures(
+    return stage_once(
+        spark,
+        "minhash_sig_",
+        f"{sf_dir}|3gram_v1",
+        "sig",
+        lambda: minhash_signatures(
             None, with_sizes=True, sh=staged_shingles(spark, sf_dir)
-        ).repartition(spark.sparkContext.defaultParallelism).write.mode(
-            "overwrite"
-        ).parquet(tmp)
-        os.rename(tmp, final)
-    return read_staged(spark, final)
+        ).repartition(spark.sparkContext.defaultParallelism),
+    )
 
 
 @memoized_plan
@@ -1209,19 +1185,15 @@ def _staged_pair_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the minhash_jaccard_estimate plan (banded join, never corpus²),
     paid once — afterwards a threshold sweep's cost is one scan of the
     pair metrics, independent of how many sweeps the owner runs."""
-    import os
-
-    from ..staging import keyed_staging_dir
-
-    root, _ = keyed_staging_dir("pair_metrics_", f"{sf_dir}|3gram_v1")
-    final = os.path.join(root, "metrics")
-    if not os.path.isdir(final):
-        tmp = os.path.join(root, "_tmp_metrics")
-        minhash_jaccard_estimate(spark, sf_dir).select(
+    return stage_once(
+        spark,
+        "pair_metrics_",
+        f"{sf_dir}|3gram_v1",
+        "metrics",
+        lambda: minhash_jaccard_estimate(spark, sf_dir).select(
             "est_jaccard", "exact_jaccard"
-        ).write.mode("overwrite").parquet(tmp)
-        os.rename(tmp, final)
-    return read_staged(spark, final)
+        ),
+    )
 
 
 @memoized_plan
@@ -1967,23 +1939,17 @@ def _staged_simhash_fp(spark: SparkSession, sf_dir: str) -> DataFrame:
     columns — bitwise roundtrip; both sides of the banded self-join then
     read the parquet instead of re-running the 30-bit per-bit
     aggregation twice per query."""
-    import os
-
-    from ..staging import keyed_staging_dir
     from .retrieval import _staged_tf_index
 
-    root, _ = keyed_staging_dir("simhash_fp_", f"{sf_dir}|ws_v1")
-    final = os.path.join(root, "fp")
-    if not os.path.isdir(final):
+    def build() -> DataFrame:
         tok_cnt = _staged_tf_index(spark, sf_dir).select(
             "doc_id",
             F.col("w").alias("word"),
             F.col("tf").alias("cnt"),
         ).withColumn("h", H.char_hash(F.col("word")))
-        tmp = os.path.join(root, "_tmp_fp")
-        _simhash_from_counts(tok_cnt).write.mode("overwrite").parquet(tmp)
-        os.rename(tmp, final)
-    return read_staged(spark, final)
+        return _simhash_from_counts(tok_cnt)
+
+    return stage_once(spark, "simhash_fp_", f"{sf_dir}|ws_v1", "fp", build)
 
 
 def _simhash_from_counts(tok_cnt: DataFrame) -> DataFrame:

@@ -48,7 +48,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..tables import load_table
-from ..staging import read_staged
+from ..staging import stage_once
 from .planmemo import memoized_plan
 
 SCALE = 1_000_000
@@ -278,27 +278,25 @@ def _staged_logreg_weights(spark: SparkSession, sf_dir: str) -> list[int]:
     LOGREG_ITERS distributed aggregates with driver-held weights — then
     served from a 4-row parquet. Deterministic integer recurrence, so
     the staged vector is identical to a fresh fit on every host."""
-    import os
-
-    from ..staging import keyed_staging_dir
     from .caching import persist_tracked, release_tracked
 
-    root, _ = keyed_staging_dir(
-        "logreg_w_", f"{sf_dir}|i{LOGREG_ITERS}lr{LOGREG_LR}"
-    )
-    final = os.path.join(root, "w")
-    if not os.path.isdir(final):
+    def build() -> DataFrame:
         feat_cached = persist_tracked(_features(spark, sf_dir))
         try:
             w = _train_logreg_weights(feat_cached)
         finally:
             release_tracked()
-        tmp = os.path.join(root, "_tmp_w")
-        spark.createDataFrame(
+        return spark.createDataFrame(
             [(j, w[j]) for j in range(4)], "j int, w bigint"
-        ).repartition(1).write.mode("overwrite").parquet(tmp)
-        os.rename(tmp, final)
-    rows = read_staged(spark, final).collect()
+        ).repartition(1)
+
+    rows = stage_once(
+        spark,
+        "logreg_w_",
+        f"{sf_dir}|i{LOGREG_ITERS}lr{LOGREG_LR}",
+        "w",
+        build,
+    ).collect()
     out = [0, 0, 0, 0]
     for r in rows:
         out[r.j] = int(r.w)
@@ -574,23 +572,15 @@ def _staged_kmeans_centroids(
     corpus, the k×dim component table is served from parquet after —
     deterministic seed + integer arithmetic make the stored fit identical
     to a fresh one."""
-    import os
 
-    from ..staging import keyed_staging_dir
-
-    root, _ = keyed_staging_dir(
-        "kmeans_c_", f"{sf_dir}|k{KMEANS_K}i{KMEANS_ITERS}"
-    )
-    final = os.path.join(root, "c")
-    if not os.path.isdir(final):
+    def build() -> DataFrame:
         qe = _quantized_embeddings(spark, sf_dir)
         cents = _train_kmeans_centroids(spark, qe)
-        tmp = os.path.join(root, "_tmp_c")
-        _centroid_frame(spark, cents).repartition(1).write.mode(
-            "overwrite"
-        ).parquet(tmp)
-        os.rename(tmp, final)
-    rows = read_staged(spark, final).collect()
+        return _centroid_frame(spark, cents).repartition(1)
+
+    rows = stage_once(
+        spark, "kmeans_c_", f"{sf_dir}|k{KMEANS_K}i{KMEANS_ITERS}", "c", build
+    ).collect()
     dim = 1 + max(r.dim for r in rows)
     cents = [[0] * dim for _ in range(KMEANS_K)]
     for r in rows:
@@ -1164,19 +1154,15 @@ def streaming_logreg_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the drained result over the corpus equals the batch scoring pass
     and shares its bit-exact oracle. Four range-split input files
     exercise multi-batch scoring."""
-    from ..staging import keyed_staging_dir
+    from ..streaming.stateful import stage_stream_source
     from ..tables import load_table
 
     w = _staged_logreg_weights(spark, sf_dir)
     _z6, s6 = _iteration_exprs(w)
     docs = load_table(spark, sf_dir, "documents")
-    stage, already = keyed_staging_dir(
-        "docs_shard_ingest_", f"sf={sf_dir}"
+    stage = stage_stream_source(
+        spark, sf_dir, "documents", "docs_shard_ingest_", "doc_id"
     )
-    if not already:
-        docs.repartitionByRange(4, "doc_id").write.mode(
-            "overwrite"
-        ).parquet(stage)
     stream = (
         spark.readStream.schema(docs.schema)
         .option("maxFilesPerTrigger", 1)

@@ -9,24 +9,25 @@ these helpers give the repeated-call paths (micro-batch serves, the bench's
 repeat runs, the audit's per-variant sub-plans) the same shape.
 
 DataFrames are immutable logical plans, so reuse is safe — the
-``tables._DF_CACHE`` / ``staging.read_staged`` precedent (r14), one level
-up. Staleness is guarded by OBJECT IDENTITY of the signature-guarded
-loader caches: while a fixture or staged artifact is unchanged its loader
-returns the SAME DataFrame object; an overwrite or re-stage moves the
-dataset signature, the loader returns a NEW object, and the memoized plan
-is rebuilt (pinned by test_streaming_lsh_serve_survives_index_restaging
-for the serve path and test_planmemo_invalidation for the mechanism).
+``staging.cached_read`` precedent (r14), one level up. Staleness is
+guarded by OBJECT IDENTITY of the signature-guarded loader cache: while
+a fixture or staged artifact is unchanged its loader returns the SAME
+DataFrame object; an overwrite or re-stage moves the dataset signature,
+the loader returns a NEW object, and the memoized plan is rebuilt (pinned
+by test_streaming_lsh_serve_survives_index_restaging for the serve path
+and tests/test_planmemo.py for the mechanism).
 
 Dependencies are RECORDED, not declared: during a memoized build,
 ``tables.load_table`` and ``staging.read_staged`` report every DataFrame
 they hand out (``note_dep``), so the dep list can never drift from what
 the plan actually reads. A memo hit revalidates by re-invoking the same
 loaders (cheap os.stat signature checks) and replays its deps into any
-enclosing recording, so nested memoized builders compose. A build that
-touches ``caching.persist_tracked`` is TAINTED and never memoized: tracked
-persists are released after each query, and a plan embedding literals
-derived from a released range-partitioned persist (the distributed-rank
-offsets) must be rebuilt per call.
+enclosing recording, so nested memoized builders compose (a
+``staging.stage_once`` hit replays its build's sources the same way). A
+build that touches ``caching.persist_tracked`` is TAINTED and never
+memoized: tracked persists are released after each query, and a plan
+embedding literals derived from a released range-partitioned persist (the
+distributed-rank offsets) must be rebuilt per call.
 
 Plans only, never results: every execution still scans the parquet inputs
 — nothing here persists rows, so the bench's no-result-caching contract is
@@ -37,6 +38,7 @@ for pure serve-plan builders.
 
 from __future__ import annotations
 
+import contextlib
 import functools
 import threading
 import weakref
@@ -82,6 +84,19 @@ def note_dep(spec: tuple, obj: object) -> None:
         frame.deps[spec] = obj
 
 
+@contextlib.contextmanager
+def recording():
+    """Record, into a fresh frame, what loaders hand out on this thread
+    while the block runs; enclosing recordings keep receiving it too."""
+    frame = _Frame()
+    frames = _stack()
+    frames.append(frame)
+    try:
+        yield frame
+    finally:
+        frames.pop()
+
+
 def taint() -> None:
     """Mark every active recording on this thread as non-memoizable (see
     module note on tracked persists). No-op outside a memoized build."""
@@ -89,7 +104,7 @@ def taint() -> None:
         frame.tainted = True
 
 
-def _refetch(spark: SparkSession, spec: tuple) -> object:
+def refetch(spark: SparkSession, spec: tuple) -> object:
     """Re-invoke the loader behind ``spec`` — returns the loader's current
     (signature-revalidated) DataFrame object."""
     if spec[0] == "table":
@@ -109,16 +124,16 @@ def memo(
     """Return the memoized plan for ``key`` when every recorded dep's
     loader still returns the same object; otherwise run ``build`` under a
     fresh recording and memoize (unless the build was tainted)."""
-    from ..tables import _evict_stopped_sessions
+    from ..staging import evict_stopped_sessions
 
-    _evict_stopped_sessions(_CACHE)
+    evict_stopped_sessions(_CACHE)
     per_session = _CACHE.setdefault(spark, {})
     hit = per_session.get(key)
     if hit is not None:
         specs, df = hit
         try:
             fresh = all(
-                _refetch(spark, spec) is obj for spec, obj in specs.items()
+                refetch(spark, spec) is obj for spec, obj in specs.items()
             )
         except Exception:  # loader raised (artifact gone) — rebuild
             fresh = False
@@ -128,13 +143,8 @@ def memo(
                 note_dep(spec, obj)
             return df
         del per_session[key]
-    frame = _Frame()
-    frames = _stack()
-    frames.append(frame)
-    try:
+    with recording() as frame:
         df = build()
-    finally:
-        frames.pop()
     if not frame.tainted:
         per_session[key] = (frame.deps, df)
     return df

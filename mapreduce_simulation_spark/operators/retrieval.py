@@ -44,7 +44,7 @@ from pyspark.sql.window import Window
 
 
 from ..tables import load_table
-from ..staging import read_staged
+from ..staging import stage_once
 from .similarity import _as_double, _dot, _norm
 from .text import tokens
 from .planmemo import memoized_plan
@@ -87,24 +87,17 @@ def _staged_tf_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     from (index build vs. query serve).  Every other BM25 statistic
     derives from it with type-table aggregates: dl = Σ_w tf per doc,
     df = row count per w, avgdl from dl.  Integer/string columns —
-    bitwise roundtrip, oracles unchanged.  Temp-dir rename keeps a
-    crashed build un-mistakable for a completed stage."""
-    import os
-
-    from ..staging import keyed_staging_dir
-
-    root, _ = keyed_staging_dir("bm25_tf_", f"{sf_dir}|ws_v1")
-    final = os.path.join(root, "tf")
-    if not os.path.isdir(final):
-        docs = load_table(spark, sf_dir, "documents")
-        tmp = os.path.join(root, "_tmp_tf")
-        docs.select(
-            "doc_id", F.explode(tokens(F.col("text"))).alias("w")
-        ).groupBy("doc_id", "w").agg(
-            F.count(F.lit(1)).alias("tf")
-        ).write.mode("overwrite").parquet(tmp)
-        os.rename(tmp, final)
-    return read_staged(spark, final)
+    bitwise roundtrip, oracles unchanged."""
+    return stage_once(
+        spark,
+        "bm25_tf_",
+        f"{sf_dir}|ws_v1",
+        "tf",
+        lambda: load_table(spark, sf_dir, "documents")
+        .select("doc_id", F.explode(tokens(F.col("text"))).alias("w"))
+        .groupBy("doc_id", "w")
+        .agg(F.count(F.lit(1)).alias("tf")),
+    )
 
 
 def _staged_dl(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -112,19 +105,15 @@ def _staged_dl(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the staged tf index and stored beside it — the second half of
     the inverted-index artifact (a search system stores doc lengths with
     the postings). Integer columns — bitwise roundtrip."""
-    import os
-
-    from ..staging import keyed_staging_dir
-
-    root, _ = keyed_staging_dir("bm25_tf_", f"{sf_dir}|ws_v1")
-    final = os.path.join(root, "dl")
-    if not os.path.isdir(final):
-        tmp = os.path.join(root, "_tmp_dl")
-        _staged_tf_index(spark, sf_dir).groupBy("doc_id").agg(
-            F.sum("tf").cast("long").alias("dl")
-        ).write.mode("overwrite").parquet(tmp)
-        os.rename(tmp, final)
-    return read_staged(spark, final)
+    return stage_once(
+        spark,
+        "bm25_tf_",
+        f"{sf_dir}|ws_v1",
+        "dl",
+        lambda: _staged_tf_index(spark, sf_dir)
+        .groupBy("doc_id")
+        .agg(F.sum("tf").cast("long").alias("dl")),
+    )
 
 
 def _bm25_scores(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -123,6 +123,13 @@ def _corpus_with_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
     return emb.select("vec_id", v.alias("v"), _norm(v).alias("nrm"))
 
 
+def _note_corpus_source(spark: SparkSession, sf_dir: str) -> None:
+    """Called inside a stage-once build over a corpus frame its caller
+    passed in: loads the embeddings table that frame reads, so the build
+    records it as the artifact's source."""
+    load_table(spark, sf_dir, "embeddings")
+
+
 def brute_force_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact top-5 cosine neighbors for each query vector (vec_id < 10).
 
@@ -318,19 +325,16 @@ def _staged_band_signatures(
     vector) and was re-run by BOTH sides of the candidate self-join.
     Integer columns — bitwise roundtrip; written at cluster parallelism
     (the tokdocs lesson)."""
-    import os
 
-    from ..staging import keyed_staging_dir
-
-    root, _ = keyed_staging_dir("lsh_sigs_", f"{sf_dir}|pair_planes_v1")
-    final = os.path.join(root, "sigs")
-    if not os.path.isdir(final):
-        tmp = os.path.join(root, "_tmp_sigs")
-        _band_signatures(corpus).repartition(
+    def build() -> DataFrame:
+        _note_corpus_source(spark, sf_dir)
+        return _band_signatures(corpus).repartition(
             spark.sparkContext.defaultParallelism
-        ).write.mode("overwrite").parquet(tmp)
-        os.rename(tmp, final)
-    return read_staged(spark, final)
+        )
+
+    return stage_once(
+        spark, "lsh_sigs_", f"{sf_dir}|pair_planes_v1", "sigs", build
+    )
 
 
 @memoized_plan
@@ -503,22 +507,20 @@ def _staged_multitable_signatures(
     warm at sf0.1 — the r15 verdict's one `weak`); now a serve is a
     staged integer-parquet scan + probe join. Written at cluster
     parallelism; ids/longs only — bitwise roundtrip."""
-    import os
 
-    from ..staging import keyed_staging_dir
+    def build() -> DataFrame:
+        _note_corpus_source(spark, sf_dir)
+        return _multitable_signatures(corpus, n_planes=n_planes).repartition(
+            spark.sparkContext.defaultParallelism
+        )
 
-    root, _ = keyed_staging_dir(
+    return stage_once(
+        spark,
         "lsh_mt_sigs_",
         f"{sf_dir}|mt{N_LSH_TABLES}x{n_planes}_{part}_v1",
+        "sigs",
+        build,
     )
-    final = os.path.join(root, "sigs")
-    if not os.path.isdir(final):
-        tmp = os.path.join(root, "_tmp_sigs")
-        _multitable_signatures(corpus, n_planes=n_planes).repartition(
-            spark.sparkContext.defaultParallelism
-        ).write.mode("overwrite").parquet(tmp)
-        os.rename(tmp, final)
-    return read_staged(spark, final)
 
 
 def lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -783,27 +785,28 @@ def streaming_lsh_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import os
 
-    from ..staging import keyed_staging_dir, staging_dir
+    from ..staging import staging_dir
 
     corpus = _corpus_with_norm(spark, sf_dir)
     # build (or reuse) the staged index BEFORE the drain so per-batch
     # cost is the serve join, not a racing first-touch index build
     _staged_multitable_signatures(spark, sf_dir, corpus)
-    queries = load_table(spark, sf_dir, "embeddings").where(
-        F.col("vec_id") < N_QUERIES
+
+    def queries() -> DataFrame:
+        return load_table(spark, sf_dir, "embeddings").where(
+            F.col("vec_id") < N_QUERIES
+        )
+
+    stage = stage_once_dir(
+        spark,
+        "lsh_query_stream_",
+        f"sf={sf_dir}",
+        "queries",
+        lambda tmp: queries()
+        .repartitionByRange(5, "vec_id")
+        .write.mode("overwrite")
+        .parquet(tmp),
     )
-    # isdir-guard + tmp + rename like every other staged artifact
-    # (_staged_multitable_signatures): if the write raises mid-way, no
-    # final dir exists, so a same-process retry re-stages instead of
-    # streaming a partial query set (ADVICE r16).
-    root, _ = keyed_staging_dir("lsh_query_stream_", f"sf={sf_dir}")
-    stage = os.path.join(root, "queries")
-    if not os.path.isdir(stage):
-        tmp = os.path.join(root, "_tmp_queries")
-        queries.repartitionByRange(5, "vec_id").write.mode(
-            "overwrite"
-        ).parquet(tmp)
-        os.rename(tmp, stage)
     out_root = staging_dir("lsh_serve_")
 
     def _serve_batch(batch: DataFrame, batch_id: int) -> None:
@@ -811,8 +814,8 @@ def streaming_lsh_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
         if not ids:
             return
         # serve through the OUTER session, not batch.sparkSession: the
-        # micro-batch clone would populate per-session DataFrame caches
-        # (tables._DF_CACHE / staging read cache) keyed on a session that
+        # micro-batch clone would populate the per-session DataFrame cache
+        # (staging.cached_read) keyed on a session that
         # is never individually stopped — one leaked cache dict per
         # streaming run (ADVICE r16; the documented r15 leak shape).
         # Per-batch plan cost is one .where() on the memoized prepared
@@ -823,7 +826,7 @@ def streaming_lsh_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).parquet(os.path.join(out_root, f"b{batch_id}"))
 
     q = (
-        spark.readStream.schema(queries.schema)
+        spark.readStream.schema(queries().schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(stage)
         .writeStream.foreachBatch(_serve_batch)
@@ -1011,14 +1014,16 @@ def streaming_lsh_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..staging import keyed_staging_dir
 
     emb = load_table(spark, sf_dir, "embeddings")
-    root, _ = keyed_staging_dir("lsh_ingest_stream_", f"sf={sf_dir}")
-    stage = os.path.join(root, "vectors")
-    if not os.path.isdir(stage):
-        tmp = os.path.join(root, "_tmp_vectors")
-        emb.repartitionByRange(5, "vec_id").write.mode(
-            "overwrite"
-        ).parquet(tmp)
-        os.rename(tmp, stage)
+    stage = stage_once_dir(
+        spark,
+        "lsh_ingest_stream_",
+        f"sf={sf_dir}",
+        "vectors",
+        lambda tmp: load_table(spark, sf_dir, "embeddings")
+        .repartitionByRange(5, "vec_id")
+        .write.mode("overwrite")
+        .parquet(tmp),
+    )
     # keyed (not fresh-per-call) so tests can locate the delta log and
     # assert multi-batch accumulation; re-drains rewrite identical bytes
     out_root, _ = keyed_staging_dir("lsh_census_ingest_", f"sf={sf_dir}")
@@ -1242,27 +1247,23 @@ def _staged_ivf_assign(
     """The IVF assignment table (vec_id, cell, v, nrm), built once per
     (corpus, codebook ``variant``) and served from parquet. Doubles and longs —
     bitwise roundtrip, so the exact re-score and tie-breaks are unchanged.
-    Written at cluster parallelism (the tokdocs lesson); temp-dir rename
-    keeps a crashed build un-mistakable for a completed stage.
+    Written at cluster parallelism (the tokdocs lesson).
 
     Honest local measurement (r8): NEUTRAL at sf0.1 (~0.78 s either way —
     the staged vector scan costs what the 16-dot-product assignment pass
     cost). Kept for the scale story: at real corpus sizes the per-query
     corpus × codebook assignment is the dominant cost and belongs in the
     offline index build, which is how every IVF deployment works."""
-    import os
 
-    from ..staging import keyed_staging_dir
-
-    root, _ = keyed_staging_dir("ivf_idx_", f"{sf_dir}|{variant}")
-    final = os.path.join(root, "assign")
-    if not os.path.isdir(final):
-        tmp = os.path.join(root, "_tmp_assign")
-        _ivf_assign(corpus, cents).repartition(
+    def build() -> DataFrame:
+        _note_corpus_source(spark, sf_dir)
+        return _ivf_assign(corpus, cents).repartition(
             spark.sparkContext.defaultParallelism
-        ).write.mode("overwrite").parquet(tmp)
-        os.rename(tmp, final)
-    return read_staged(spark, final)
+        )
+
+    return stage_once(
+        spark, "ivf_idx_", f"{sf_dir}|{variant}", "assign", build
+    )
 
 
 # Codebook training sample cap: k-means for a k≤16 codebook needs a few
@@ -1285,7 +1286,7 @@ CB_ITERS = 3
 CB_SCALE = 1_000_000
 
 from ..functions.hashing import MINHASH_PERMS as _PERMS, P as _HASH_P
-from ..staging import read_staged
+from ..staging import read_staged, stage_once, stage_once_dir
 
 (_CB_A, _CB_B) = _PERMS[2]  # distinct stream from MinHash/HLL uses
 
@@ -1376,37 +1377,32 @@ def _staged_trained_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     (k rows) and broadcast at search time. Seeded fit + parquet
     double roundtrip → the staged codebook is bit-identical to the
     in-path one, so recall/results are unchanged."""
-    import os
+    from .planmemo import memo
 
-    from ..staging import keyed_staging_dir
-
-    root, _ = keyed_staging_dir(
-        "ivf_cb_", f"{sf_dir}|k{N_CENTROIDS}i{CB_ITERS}cap{TRAIN_CAP}_v3"
-    )
-    final = os.path.join(root, "cents")
-    if not os.path.isdir(final):
+    def build() -> DataFrame:
         centers = _int_lloyd(_int_train_sample(spark, sf_dir), N_CENTROIDS)
-        tmp = os.path.join(root, "_tmp_cents")
         # components served as c6/1e6 — a single IEEE division of exact
         # operands, identical to the oracle's CAST(c6 AS DOUBLE)/1e6
-        spark.createDataFrame(
+        return spark.createDataFrame(
             [
                 (i, [int(x) / float(CB_SCALE) for x in c])
                 for i, c in enumerate(centers)
             ],
             "cid bigint, cv array<double>",
-        ).repartition(1).write.mode("overwrite").parquet(tmp)
-        os.rename(tmp, final)
-    from .planmemo import memo
+        ).repartition(1)
 
     # plan-memo the norm projection so callers get an identity-stable
     # codebook frame (three HOF builds saved per call).
     return memo(
         spark,
-        ("trained_cents", final),
-        lambda: read_staged(spark, final).select(
-            "cid", "cv", _norm(F.col("cv")).alias("cn")
-        ),
+        ("trained_cents", sf_dir),
+        lambda: stage_once(
+            spark,
+            "ivf_cb_",
+            f"{sf_dir}|k{N_CENTROIDS}i{CB_ITERS}cap{TRAIN_CAP}_v3",
+            "cents",
+            build,
+        ).select("cid", "cv", _norm(F.col("cv")).alias("cn")),
     )
 
 
@@ -2084,16 +2080,7 @@ def _staged_pq_index(
     corpus, shuffling one (vec_id, 8 small ints) row per vector."""
     import os
 
-    from ..staging import keyed_staging_dir
-
-    root, _ = keyed_staging_dir(
-        "pq_idx_",
-        f"{sf_dir}|m{PQ_SUBSPACES}k{PQ_CODEBOOK}i{CB_ITERS}"
-        f"cap{TRAIN_CAP}_v3",
-    )
-    cents_final = os.path.join(root, "cents")
-    codes_final = os.path.join(root, "codes")
-    if not (os.path.isdir(cents_final) and os.path.isdir(codes_final)):
+    def write(tmp: str) -> None:
         corpus = _corpus_with_norm(spark, sf_dir)
         base = corpus.where(F.col("vec_id") >= N_QUERIES)
 
@@ -2156,18 +2143,25 @@ def _staged_pq_index(
             )["cid"].cast("bigint"),
         )
         codes = base.select("vec_id", codes_col.alias("codes"))
-        tmp_c = os.path.join(root, "_tmp_cents")
-        cents.repartition(1).write.mode("overwrite").parquet(tmp_c)
-        os.rename(tmp_c, cents_final)
-        tmp_e = os.path.join(root, "_tmp_codes")
+        cents.repartition(1).write.mode("overwrite").parquet(
+            os.path.join(tmp, "cents")
+        )
         # No repartition: the encode is a projection, so the write inherits
         # the scan's parallelism — repartitioning would add the only
         # shuffle in the build.
-        codes.write.mode("overwrite").parquet(tmp_e)
-        os.rename(tmp_e, codes_final)
+        codes.write.mode("overwrite").parquet(os.path.join(tmp, "codes"))
+
+    index = stage_once_dir(
+        spark,
+        "pq_idx_",
+        f"{sf_dir}|m{PQ_SUBSPACES}k{PQ_CODEBOOK}i{CB_ITERS}"
+        f"cap{TRAIN_CAP}_v3",
+        "pq",
+        write,
+    )
     return (
-        read_staged(spark, cents_final),
-        read_staged(spark, codes_final),
+        read_staged(spark, os.path.join(index, "cents")),
+        read_staged(spark, os.path.join(index, "codes")),
     )
 
 

@@ -19,7 +19,7 @@ from .caching import persist_tracked
 
 from ..functions.hashing import char_hash
 from ..tables import load_table
-from ..staging import read_staged
+from ..staging import stage_once
 from .planmemo import memoized_plan
 
 # Tiny multilingual stopword marker sets for the language-ID heuristic.
@@ -77,33 +77,28 @@ def staged_tokenized_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Exactness: ``ws`` is exactly ``tokens(text)`` (string arrays roundtrip
     parquet bitwise) and ``fp`` exactly ``char_hash(text)`` (int64), so
     every consumer's DuckDB oracle — which tokenizes the raw text itself —
-    is unchanged. Temp-dir rename keeps a crashed first build
-    un-mistakable for a completed stage."""
-    import os
-
-    from ..staging import keyed_staging_dir
-
-    root, _ = keyed_staging_dir("tokdocs_", f"{sf_dir}|ws_v1")
-    final = os.path.join(root, "docs")
-    if not os.path.isdir(final):
-        tmp = os.path.join(root, "_tmp_docs")
-        # Repartition to cluster parallelism before the write: the narrow
-        # build would otherwise inherit the source's split count (ONE file
-        # for a small corpus) and every consumer would scan the store
-        # serially — token-array parquet pages don't split within a file
-        # the way the raw text column's row groups effectively did.
-        load_table(spark, sf_dir, "documents").select(
+    is unchanged."""
+    # Repartition to cluster parallelism before the write: the narrow
+    # build would otherwise inherit the source's split count (ONE file
+    # for a small corpus) and every consumer would scan the store
+    # serially — token-array parquet pages don't split within a file
+    # the way the raw text column's row groups effectively did.
+    return stage_once(
+        spark,
+        "tokdocs_",
+        f"{sf_dir}|ws_v1",
+        "docs",
+        lambda: load_table(spark, sf_dir, "documents")
+        .select(
             "doc_id",
             "lang",
             "source",
             "n_chars",
             char_hash(F.col("text")).alias("fp"),
             tokens(F.col("text")).alias("ws"),
-        ).repartition(spark.sparkContext.defaultParallelism).write.mode(
-            "overwrite"
-        ).parquet(tmp)
-        os.rename(tmp, final)
-    return read_staged(spark, final)
+        )
+        .repartition(spark.sparkContext.defaultParallelism),
+    )
 
 
 @memoized_plan

@@ -3516,14 +3516,19 @@ def dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     repeated builds in one process reuse the already-partitioned copy —
     a real warehouse has the fact table laid out once, and re-writing it
     per run would measure the write, not the DPP join."""
-    from ..staging import keyed_staging_dir
+    from ..staging import stage_once_dir
 
-    stage, staged = keyed_staging_dir("dpp_orders_", sf_dir)
-    if not staged:
-        orders = load_table(spark, sf_dir, "orders")
-        orders.withColumn(
-            "month", F.date_format("o_orderdate", "yyyy-MM")
-        ).write.mode("overwrite").partitionBy("month").parquet(stage)
+    stage = stage_once_dir(
+        spark,
+        "dpp_orders_",
+        sf_dir,
+        "",
+        lambda path: load_table(spark, sf_dir, "orders")
+        .withColumn("month", F.date_format("o_orderdate", "yyyy-MM"))
+        .write.mode("overwrite")
+        .partitionBy("month")
+        .parquet(path),
+    )
     fact = read_staged(spark, stage)
     li = load_table(spark, sf_dir, "lineitem")
     dim = (

@@ -34,37 +34,14 @@ def register(name: str, fn: QueryFn, oracle: str | None) -> None:
     _REGISTRY[name] = (fn, oracle)
 
 
-# The driver's correctness gate hashes only the FIRST 50 entries of
-# ``queries()`` (dict insertion order).  Registration order below follows the
-# module layout, so without intervention whole operator families (pipe,
-# streaming, multimodal) would sit outside the checked window while redundant
-# twins occupy slots.  ``_PROMOTE`` pulls one representative of each family
-# into the window; ``_DEMOTE`` pushes exhaustive/no-oracle twins (each still
-# verified by tests + tools/verify_local.py) behind position 50.
-#
-# ROTATION POLICY (round 9+): a window slot occupied by a query that is
-# already driver-green in a prior round is wasted evidence — the union of
-# CORRECTNESS_r01-r08 greens covers 95/192 registry entries, so every
-# round the whole window rotates to oracle-exact entries that have NEVER
-# had a driver row. Rotated-out names stay verified every round by the
-# full-registry sweep (tools/verify_local.py, same DuckDB comparator) and
-# pytest. Only exact-oracle entries are promoted: bounded/recall/rows-only
-# entries would downgrade their slot to the driver's weaker rows-only
-# check and get their stronger checks locally anyway.
+# The external correctness gate that calls ``__spark_entry__`` hashes only
+# the FIRST 50 entries of ``queries()`` (dict insertion order), so the
+# order below is frozen (tests/test_schema_contract.py pins the first 50).
+# A registered name not listed here follows the listed ones in
+# registration order.
 _PROMOTE = (
-    # ---- round-18 window: pure staleness rotation (the r17 window came
-    # back 50/50 driver-green, zero err — CORRECTNESS_r17.json), applied
-    # verbatim from the PLANS.md draft committed in r17. FIRST the two
-    # late-r17 registrations that have never had a driver row (registry
-    # 233 → 235: the re-planing actuator + the online index ingest — a
-    # green pair restores cumulative coverage to 235/235, every registry
-    # name driver-proven at least once). THEN the 33 remaining r13-stale
-    # greens, THEN the first 15 r14-stale greens (alphabetical within a
-    # round). ----
-    # never driver-checked (late-r17 additions)
     "lsh_index_replane",
     "streaming_lsh_index_ingest",
-    # r13-stale greens (remaining 33, alphabetical back-fill)
     "exact_global_percentiles",
     "funnel_conversion",
     "incremental_dedup",
@@ -98,7 +75,6 @@ _PROMOTE = (
     "training_shuffle",
     "word_count",
     "xml_source_customers",
-    # r14-stale greens (alphabetical back-fill, first 15)
     "above_avg_orders",
     "association_rules",
     "balance_distribution",
@@ -114,22 +90,9 @@ _PROMOTE = (
     "feature_drift_stats",
     "fuzzy_name_pairs",
     "heavy_change_terms",
-    # ---- history: round-17 window, 50/50 driver-green in r17 ----
-    # ---- round-17 window: pure staleness rotation (the r16 window came
-    # back 50/50 driver-green, zero err — CORRECTNESS_r16.json), applied
-    # verbatim from the PLANS.md draft committed in r16. FIRST the THREE
-    # late-r16 registrations that have never had a driver row (registry
-    # 230 → 233: the ANN serve/ops tier — a green trio restores cumulative
-    # coverage to 233/233, every registry name driver-proven at least
-    # once). THEN the 30 remaining r12-stale greens, THEN the first 17
-    # r13-stale greens (alphabetical within a round;
-    # exact_global_percentiles, displaced by the third lead, queues for
-    # r18). ----
-    # never driver-checked (late-r16 additions)
-    "lsh_index_stats",               # collision-mass census of staged index
-    "streaming_lsh_serve",           # online ANN serving from staged index
-    "lsh_index_upsert_stats",        # append-only delta ingest == rebuild
-    # r12-stale greens (remaining 30, alphabetical back-fill)
+    "lsh_index_stats",
+    "streaming_lsh_serve",
+    "lsh_index_upsert_stats",
     "kvtext_source_stats",
     "lang_id",
     "lm_perplexity_score",
@@ -160,7 +123,6 @@ _PROMOTE = (
     "tfidf_top_terms",
     "token_count_bpe",
     "window_top_customers",
-    # r13-stale greens (alphabetical back-fill, first 17)
     "bigram_lm_counts",
     "bigram_perplexity",
     "binary_file_source",
@@ -178,24 +140,10 @@ _PROMOTE = (
     "domain_cap_sample",
     "embedding_argmax_arrow",
     "ewma_daily_revenue",
-    # ---- history: round-16 window, 50/50 driver-green in r16 ----
-    # ---- round-16 window: pure staleness rotation (the r15 window came
-    # back 50/50 driver-green, zero err — CORRECTNESS_r15.json), applied
-    # verbatim from the PLANS.md draft committed in r15. FIRST the FOUR
-    # late-r15 registrations that have never had a driver row (registry
-    # 226 → 230: the measured-recall QA tier + the streaming containment
-    # gate — a green first-4 restores cumulative coverage to 230/230,
-    # every registry name driver-proven at least once). THEN all 26
-    # r11-stale greens (the 24 r11 leftovers plus monthly_revenue and
-    # nation_top_customer_lists, displaced from the r15 draft by its two
-    # amendments), THEN the first 20 r12-stale greens (alphabetical
-    # within a round; kvtext_source_stats queues for r17). ----
-    # never driver-checked (late-r15 additions)
-    "ann_recall_audit",              # measured recall@5 of all 4 ANN paths
-    "containment_recall_audit",      # pane-bounded containment recall
-    "streaming_containment_dedup",   # band-gate streaming containment
-    "tokenizer_fertility_stats",     # BPE fertility / compression stats
-    # r11-stale greens (remaining 26, alphabetical back-fill)
+    "ann_recall_audit",
+    "containment_recall_audit",
+    "streaming_containment_dedup",
+    "tokenizer_fertility_stats",
     "monthly_revenue",
     "nation_top_customer_lists",
     "ols_residuals_corpus",
@@ -222,7 +170,6 @@ _PROMOTE = (
     "top_orders",
     "udtf_word_count",
     "union_sources",
-    # r12-stale greens (alphabetical back-fill, first 20)
     "asof_join_purchases",
     "banding_threshold_curve",
     "bm25_topk",
@@ -243,22 +190,8 @@ _PROMOTE = (
     "dsir_importance",
     "embedding_near_dup_bucketed",
     "gopher_quality_rules",
-    # ---- history: round-15 window, 50/50 driver-green in r15 ----
-    # ---- round-15 window: pure staleness rotation (the r14 window came
-    # back 50/50 driver-green, zero err — CORRECTNESS_r14.json), applied
-    # verbatim from the PLANS.md draft committed in r14, including its two
-    # amendments: `containment_dedup` and `ngram_novelty_score` landed
-    # late-r14 (registry 224 → 226) and have NEVER had a driver row, so
-    # per the rotation policy they go FIRST — a green pair makes the
-    # cumulative driver union 226/226, every registry name driver-proven
-    # at least once. THEN the 24 remaining r10-stale greens, THEN the
-    # first 24 r11-stale greens (alphabetical within a round); the two
-    # names the amendments displaced (monthly_revenue,
-    # nation_top_customer_lists) queue for r16. ----
-    # never driver-checked (late-r14 additions)
-    "containment_dedup",             # asymmetric doc-contains-doc pairs
-    "ngram_novelty_score",           # corpus-vs-corpus shingle novelty
-    # r10-stale greens (alphabetical back-fill)
+    "containment_dedup",
+    "ngram_novelty_score",
     "media_resize",
     "min_cost_supplier",
     "moving_avg_orders",
@@ -283,7 +216,6 @@ _PROMOTE = (
     "trailing_window_revenue",
     "volume_shipping",
     "zorder_layout",
-    # r11-stale greens (alphabetical back-fill, first 24)
     "anti_join_customers",
     "bracket_discount_revenue",
     "broadcast_dim_join",
@@ -308,27 +240,11 @@ _PROMOTE = (
     "left_outer_order_counts",
     "linestatus_priority_counts",
     "logreg_score_corpus",
-    # ---- history: round-14 window, 50/50 driver-green in r14 ----
-    # ---- round-14 window: pure staleness rotation (the r13 window came
-    # back 50/50 driver-green, zero err — CORRECTNESS_r13.json), applied
-    # verbatim from the PLANS.md draft committed in r13 (e82aae7). FIRST
-    # the seven names that have NEVER had a driver row (the six late-r13
-    # registrations plus the TWS ValueState twin, runnable since the
-    # vendored mini-protobuf runtime landed in r13 and un-pinned from
-    # _DEMOTE this round). A green first-7 makes the cumulative driver
-    # union 224/224 — every registry name driver-proven at least once.
-    # THEN the remaining r9-stale greens, THEN r10-stale greens
-    # (alphabetical within a round), per-name staleness replayed from
-    # CORRECTNESS_r01..r13. ----
-    # never driver-checked (late-r13 additions + un-pinned TWS twin)
-    "kmv_month_overlap",             # KMV bottom-k distinct/overlap sketch
-    "streaming_kmv_sketch_ingest",   # online KMV ingest == batch
-    "feature_drift_stats",           # integer-scaled TVD/KS era drift
-    "stateful_user_type_rollup_tws",  # transformWithState MapState
-    "stateful_user_delta_log_tws",   # transformWithState ListState
-    "heavy_change_terms",            # top-k vocabulary shift between eras
-    "stateful_user_rollup_tws",      # transformWithState ValueState
-    # r9-stale greens (alphabetical back-fill)
+    "kmv_month_overlap",
+    "streaming_kmv_sketch_ingest",
+    "stateful_user_type_rollup_tws",
+    "stateful_user_delta_log_tws",
+    "stateful_user_rollup_tws",
     "percentile_trim",
     "pii_scrub",
     "pivot_revenue_by_status",
@@ -349,20 +265,6 @@ _PROMOTE = (
     "unpivot_revenue",
     "variant_props_extract",
     "vocab_encode",
-    # r10-stale greens (alphabetical back-fill)
-    "above_avg_orders",
-    "association_rules",
-    "balance_distribution",
-    "cms_word_freq",
-    "customer_balance_ntiles",
-    "distributed_kmeans_train",
-    "distributed_logreg_train",
-    "dynamic_partition_pruning",
-    "embedding_label_stats",
-    "event_peak_concurrency",
-    "exact_ols_train",
-    "exists_returned_orders",
-    "fuzzy_name_pairs",
     "idle_high_balance_customers",
     "important_parts",
     "intersect_segments",
@@ -373,397 +275,12 @@ _PROMOTE = (
     "max_revenue_supplier",
     "media_frame_sample",
     "media_metadata",
-    # ---- history: round-13 window, 50/50 driver-green in r13 ----
-    # ---- round-13 window: pure staleness rotation (the r12 window came
-    # back 50/50 driver-green, zero err — CORRECTNESS_r12.json). Per the
-    # r12 verdict's recipe and the PLANS.md draft: FIRST the four late-r12
-    # registrations that have never had a driver row (registry grew
-    # 214→218 after the r12 window froze), THEN the 16 r8-stale greens
-    # left out of the r12 window by the alphabetical tiebreak, THEN r9
-    # greens oldest-first (alphabetical within the round). Excludes only
-    # the env-gated stateful_user_rollup_tws, pinned behind the window. ----
-    # never driver-checked (late-r12 additions)
-    "quantile_sketch_monthly",          # mergeable dyadic-histogram quantiles
-    "bloom_membership_audit",           # explicit cross-engine Bloom filter
-    "streaming_quantile_sketch_ingest",  # online sketch ingest == batch
-    "pipe_syntax_revenue",              # Spark 4 SQL PIPE syntax surface
-    # the 16 r8-stale leftovers (alphabetical)
-    "sequence_packing",
-    "similarity_ivf_topk",
-    "similarity_lsh_topk",
-    "sole_blame_suppliers",
-    "sql_table_function_word_count",
-    "sql_udf_pricing",
-    "streaming_custom_source_rollup",
-    "streaming_events_hourly",
-    "streaming_kvtext_sink_roundtrip",
-    "streaming_upsert_profiles",
-    "substring_dedup_spans",
-    "text_stats",
-    "training_data_pipeline",
-    "training_shuffle",
-    "word_count",
-    "xml_source_customers",
-    # r9-stale greens, oldest-first back-fill (alphabetical)
-    "bigram_lm_counts",
-    "bigram_perplexity",
-    "binary_file_source",
-    "chunk_for_training",
-    "co_purchase_pairs",
-    "cohort_retention",
-    "contrastive_triples",
-    "csv_bad_records",
-    "csv_source_revenue",
-    "cube_revenue",
-    "dedup_canonical",
-    "densify_daily_revenue",
-    "deterministic_sample",
-    "domain_cap_sample",
-    "embedding_argmax_arrow",
-    "ewma_daily_revenue",
-    "exact_global_percentiles",
-    "funnel_conversion",
-    "incremental_dedup",
-    "json_source_segments",
-    "lateral_top_suppliers",
-    "media_ahash_near_dup",
-    "media_decode",
-    "media_dedup",
-    "merge_upsert_orders",
-    "metadata_agg_pushdown",
-    "orc_source_parts",
-    "pandas_api_priority_stats",
-    "pandas_group_rank",
-    "pandas_scalar_digit_stats",
-    # ---- history: round-12 window, 50/50 driver-green in r12 ----
-    # ---- round-12 window: pure staleness rotation (the r11 window went
-    # 50/50 green, so no fixed reds remain). Composition, per the r11
-    # verdict's recipe: the 3 never-driver-checked late-r11 sketch
-    # queries FIRST, then every name whose last hash-green driver row is
-    # r6 (3) or r7 (10), then 34 of the 50 r8-stale names (alphabetical
-    # tiebreak within the round — all carry identical staleness; the 16
-    # leftover r8 names queue for the r13 window and are listed at the
-    # bottom of this file). Excludes only the env-gated
-    # stateful_user_rollup_tws, pinned behind the window. ----
-    # never driver-checked (registry grew 211->214 after the r11 freeze)
-    "minhash_jaccard_estimate",   # MinHash Jaccard estimator calibration
-    "banding_threshold_curve",    # LSH banding S-curve sweep
-    "streaming_hll_sketch_ingest",  # online HLL register ingest == batch
-    # last green r6
-    "span_dedup",                 # stride-k span dedup
-    "tfidf_top_terms",            # TF-IDF top terms per doc
-    "window_top_customers",       # dense_rank window top-k
-    # last green r7
-    "bucketed_join_revenue",      # bucketed co-located join
-    "corpus_mix",                 # weighted corpus mixing
-    "decontaminate",              # eval-set n-gram decontamination
-    "embedding_near_dup_bucketed",  # LSH-bucketed embedding near-dup
-    "lang_id",                    # n-gram language ID
-    "partitioned_source_pruned",  # hive-partition pruning scan
-    "sessionize_events",          # gap-based sessionization
-    "similarity_topk",            # brute-force cosine top-k (JVM fold)
-    "stratified_sample",          # per-stratum deterministic sample
-    "token_count_bpe",            # BPE-ish regex token counting
-    # last green r8 (34 of 50, alphabetical; remainder queued for r13)
-    "asof_join_purchases",
-    "bm25_topk",
-    "bpe_apply_merges",
-    "bpe_learn_merges",
-    "ccnet_perplexity_buckets",
-    "cdc_chunking",
-    "centroid_classify",
-    "curation_pipeline_v2",
-    "dedup_connected_components",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "dedup_ngram_jaccard",
-    "dedup_simhash",
-    "dsir_importance",
-    "gopher_quality_rules",
-    "kvtext_source_stats",
-    "lm_perplexity_score",
-    "media_features",
-    "mmr_rerank",
-    "multiset_set_ops",
-    "not_in_customers",
-    "pagerank_order_chain",
-    "pandas_grouped_agg_median",
-    "pipe_grep",
-    "pipe_word_count",
-    "polymorphic_udtf_props",
-    "pricing_summary",
-    "recursive_order_chain",
-    "revenue_by_nation",
-    "rfm_segmentation",
-    "rrf_hybrid_topk",
-    "runtime_filtered_join",
-    "schema_evolution_union",
-    "semantic_dedup",
-    # ---- history: round-11 window, 50/50 driver-green in r11 ----
-    # ---- round-11 window: every registry name with NO hash-green driver
-    # row (23 = the 3 r10 reds now fixed, the 6 formerly no-oracle queries
-    # that gained exact oracles this round, and the 14 r10 additions that
-    # missed the r10 window), back-filled to 50 with the STALEST
-    # hash-greens (last driver contact r1-r6, oldest first — computed from
-    # CORRECTNESS_r01-r10). Excludes only the env-gated
-    # stateful_user_rollup_tws, pinned behind the window. ----
-    # the three r10 driver reds, root-caused and fixed this round
-    "decision_stump_split",      # oracle HUGEINT→BIGINT cast fix
-    "quantiles_summary",         # scalarized (one row per quantile p)
-    "nation_top_customer_lists",  # list serialized as CSV string
-    # formerly no-oracle, now exact-hash-checked
-    "similarity_topk_pandas",    # BLAS preselect + strict-fold re-score
-    "similarity_ivf_trained_topk",  # integer-exact Lloyd + CTE replay
-    "similarity_pq_topk",        # integer-exact PQ codebooks + CTE replay
-    "events_daily_approx",       # deterministic cross-engine HLL
-    "hll_monthly_users",         # mergeable HLL rollup (deterministic)
-    "heavy_hitters_sketch",      # two-pass MG: exact heavy-hitter set
-    # r10 additions with no driver row yet
-    "gated_dedup_pipeline",      # streaming gate → batch dedup composition
-    "streaming_shard_ingest",    # exactly-once shard ingest
-    "shard_export_manifest",     # training-shard export manifest
-    "logreg_score_corpus",       # train→serve: logistic scorer
-    "kmeans_assign_corpus",      # train→serve: cluster assignment
-    "ols_residuals_corpus",      # train→serve: OLS residuals
-    "stump_classify_corpus",     # train→serve: stump classifier
-    "streaming_logreg_score",    # online scoring ≡ batch scorer
-    "entity_resolution_pipeline",  # block → verify → cluster → canonicalize
-    "returned_item_revenue",     # TPC-H Q10 shape
-    "linestatus_priority_counts",  # TPC-H Q12 shape
-    "customer_order_distribution",  # TPC-H Q13 shape
-    "small_quantity_revenue",    # TPC-H Q17 shape
-    "bracket_discount_revenue",  # TPC-H Q19 shape
-    # back-fill: stalest driver evidence first (last green round in ())
-    "streaming_dedup_keys",          # (r1) streaming dropDuplicates
-    "constant_key_collapse",         # (r3) constant-key single-group agg
-    "dedup_connected_components_stars",  # (r3) star-contraction CC
-    "embedding_near_dup",            # (r3) exhaustive near-dup pairs
-    "union_sources",                 # (r3) multi-source union
-    "distinct_words",                # (r4) distinct projection
-    "global_sort",                   # (r4) total-order sort
-    "grep",                          # (r4) filter+project param query
-    "text_dir_word_count",           # (r4) text-directory source
-    "udtf_word_count",               # (r4) UDTF tokenizer tier
-    "anti_join_customers",           # (r5) anti join
-    "broadcast_dim_join",            # (r5) broadcast join strategy
-    "identity_projection",           # (r5) identity map (reference Q6)
-    "left_outer_order_counts",       # (r5) left outer join
-    "monthly_revenue",               # (r5) date-trunc scalar agg
-    "rollup_revenue",                # (r5) ROLLUP aggregate
-    "running_order_totals",          # (r5) running-total window
-    "set_ops_segments",              # (r5) set operations
-    "text_normalize",                # (r5) string normalization battery
-    "top_orders",                    # (r5) global top-k
-    "doc_fingerprint",               # (r6) content fingerprint fold
-    "events_daily",                  # (r6) events daily rollup
-    "grouping_sets_revenue",         # (r6) GROUPING SETS
-    "quality_score",                 # (r6) doc quality scoring
-    "repetition_stats",              # (r6) repetition/dup-ngram stats
-    "semi_join_customers",           # (r6) semi join
-    "shipping_priority",             # (r6) TPC-H Q3 shape top-k
-    # ---- history: the round-10 window, 47/50 driver-green in r10 (the 3
-    # reds are re-windowed above) ----
-    # round-9 additions (first driver exposure)
-    "streaming_minhash_dedup",   # streaming LSH ingestion dedup gate
-    "distributed_logreg_train",  # GD as one aggregate per iteration
-    "distributed_kmeans_train",  # EM (Lloyd's) as exploded-join argmin
-    "decision_stump_split",      # histogram-scan split finding
-    "exact_ols_train",           # closed-form normal equations
-    # relational / TPC-H-adjacent shapes
-    "above_avg_orders",          # correlated scalar-subquery filter
-    "exists_returned_orders",    # EXISTS semi-join shape
-    "large_quantity_orders",     # HAVING on grouped sum (Q18 shape)
-    "important_parts",           # IN-subquery with aggregate threshold
-    "min_cost_supplier",         # per-group argmin join-back (Q2 shape)
-    "max_revenue_supplier",      # per-group argmax with view CTE (Q15)
-    "market_share",              # two-level agg ratio (Q8 shape)
-    "profit_by_nation_year",     # multi-join profit rollup (Q9 shape)
-    "volume_shipping",           # cross-nation volume matrix (Q7 shape)
-    "promo_revenue_ratio",       # conditional-sum ratio (Q14 shape)
-    "idle_high_balance_customers",  # NOT EXISTS + avg-threshold (Q22)
-    # window / sequence analytics
-    "moving_avg_orders",         # row-frame moving average
-    "trailing_window_revenue",   # range-frame trailing window
-    "order_gap_days",            # lag-based gap analysis
-    "customer_balance_ntiles",   # global ntile banding
-    "event_peak_concurrency",    # interval sweep-line max overlap
-    "price_trend_by_nation",     # per-group OLS slope via window stats
-    # aggregation / profiling
-    "quantiles_summary",         # exact multi-quantile summary
-    "priority_conditional_agg",  # FILTER-clause conditional aggregates
-    "stats_correlation",         # corr/covar/stddev battery
-    "table_profile_orders",      # per-column null/distinct/minmax profile
-    "table_checksum",            # order-insensitive whole-table checksum
-    "balance_distribution",      # width_bucket balance histogram
-    "price_histogram",           # equi-width price histogram
-    "key_skew_profile",          # per-key skew stats (top heavy keys)
-    "skewed_distinct_users",     # high-cardinality distinct under skew
-    "referential_audit",         # FK orphan audit across tables
-    "priority_transition_matrix",  # Markov transition counts
-    # semi-structured / json
-    "json_props_extract",        # JSON path extraction
-    "props_map_explode",         # map explode + pivot on props
-    # set ops / sampling / layout
-    "intersect_segments",        # INTERSECT on derived segments
-    "observed_quality_gate",     # quality-rule gate with observed stats
-    "zorder_layout",             # interleaved-bit z-order layout key
-    "dynamic_partition_pruning",  # DPP-shaped star filter join
-    "salted_supplier_revenue",   # skew-salted two-phase aggregate
-    # text / retrieval / graph
-    "cms_word_freq",             # count-min sketch (seeded, exact twin)
-    "fuzzy_name_pairs",          # edit-distance blocked self-join
-    "association_rules",         # co-occurrence lift/confidence rules
-    "embedding_label_stats",     # per-label embedding norm stats
-    "nation_top_customer_lists",  # per-group collect_list top-k
-    # back-fill: greens last driver-checked in ROUND 1 (stalest evidence)
-    "media_frame_sample",        # multimodal frame sampling
-    "media_metadata",            # multimodal metadata projection
-    "media_resize",              # multimodal resize plumbing
-    "stateful_user_rollup",      # applyInPandasWithState rollup
-    "streaming_click_attribution",  # stream-stream inner join
-    # ---- history: the round-9 window, all 50 driver-green in r9 ----
-    # sources / formats
-    "csv_source_revenue",        # CSV source (schema'd read)
-    "csv_bad_records",           # CSV PERMISSIVE corrupt-record capture
-    "json_source_segments",      # JSON lines source
-    "orc_source_parts",          # ORC source
-    "binary_file_source",        # binaryFile source
-    "metadata_agg_pushdown",     # scan-level aggregate pushdown
-    "variant_props_extract",     # VARIANT semi-structured extraction
-    # multimodal
-    "media_decode",              # binary blob decode (WAV/PNG)
-    "media_dedup",               # exact blob dedup (content hash)
-    "media_ahash_near_dup",      # aHash perceptual near-dup
-    # streaming
-    "streaming_sessions",        # session windows (gap-based)
-    "streaming_events_sliding",  # sliding windows
-    "streaming_dedup_within_watermark",  # dropDuplicates + watermark
-    "streaming_static_enrichment",       # stream-static join
-    "streaming_attribution_outer",       # stream-stream outer join
-    "streaming_events_hourly_append",    # append-mode watermark agg
-    # pandas / Arrow UDF tiers
-    "pandas_api_priority_stats",  # pandas-on-Spark API
-    "pandas_group_rank",          # grouped-map pandas UDF
-    "pandas_scalar_digit_stats",  # scalar pandas UDF
-    "embedding_argmax_arrow",     # Arrow-optimized Python UDF
-    # lakehouse / CDC shapes
-    "merge_upsert_orders",        # MERGE-style upsert reconciliation
-    "scd2_point_in_time",         # SCD2 as-of reconstruction
-    "scd2_priority_history",      # SCD2 history build (gaps/islands)
-    "snapshot_diff",              # snapshot delta (changed/added/removed)
-    # sampling / curation
-    "deterministic_sample",       # hash-based deterministic sample
-    "domain_cap_sample",          # per-domain cap (rank within source)
-    "pps_sample",                 # probability-proportional-to-size
-    "temperature_sample",         # temperature-scaled corpus mix
-    "percentile_trim",            # percentile-banded outlier trim
-    # text / LLM-pipeline
-    "bigram_lm_counts",           # bigram LM type-table build
-    "bigram_perplexity",          # add-one bigram perplexity scoring
-    "vocab_encode",               # vocab build + id encoding
-    "chunk_for_training",         # fixed-size token chunking
-    "contrastive_triples",        # anchor/positive/negative mining
-    "pii_scrub",                  # regex PII scrubbing
-    "pseudonymize_customers",     # deterministic keyed pseudonyms
-    "dedup_canonical",            # canonical-doc selection per cluster
-    "incremental_dedup",          # new-batch-vs-corpus incremental dedup
-    # graph / behavioral
-    "co_purchase_pairs",          # co-occurrence pair mining
-    "triangle_count_nations",     # triangle counting
-    "funnel_conversion",          # ordered-event funnel
-    "cohort_retention",           # cohort retention matrix
-    # relational / analytic
-    "cube_revenue",               # CUBE aggregate
-    "pivot_revenue_by_status",    # pivot
-    "unpivot_revenue",            # unpivot / melt
-    "lateral_top_suppliers",      # correlated lateral top-k
-    "range_join_promos",          # range (interval) join
-    "exact_global_percentiles",   # exact distributed percentiles
-    "ewma_daily_revenue",         # recursive EWMA (sequential recurrence)
-    "densify_daily_revenue",      # date-spine densification
-    # ---- history: rounds 1-8 promotions, all driver-green at least once
-    # (CORRECTNESS_r01-r08); they keep their front-of-mid positions so the
-    # flagship/bench set stays just behind the window ----
-    "pipe_word_count",          # reference executable contract (map side)
-    "pipe_grep",                # reference executable contract (reduce side)
-    "streaming_events_hourly",  # Structured Streaming family
-    "media_features",           # multimodal family
-    "similarity_ivf_topk",      # ANN scale path (IVF), oracle-checked
-    # round-5 cohort: one representative per still-unchecked family
-    "kvtext_source_stats",      # custom Python DataSource (S5 evidence)
-    "recursive_order_chain",    # recursive-CTE / iterative plan family
-    "asof_join_purchases",      # as-of (range) join family
-    "pandas_grouped_agg_median",  # GROUPED_AGG pandas UDF tier
-    "xml_source_customers",     # XML source family
-    # round-6 cohort: one representative per family still outside the window
-    "streaming_upsert_profiles",  # foreachBatch MERGE-style upsert sink
-    "substring_dedup_spans",      # stride-1 substring (span) dedup
-    "semantic_dedup",             # SemDeDup embedding-cell dedup
-    "curation_pipeline_v2",       # composite Gopher+CCNet+dedup pipeline
-    "ccnet_perplexity_buckets",   # grouped distributed ntile
-    "sole_blame_suppliers",       # TPC-H Q21 EXISTS/NOT-EXISTS collapse
-    "bm25_topk",                  # sparse retrieval (BM25)
-    "cdc_chunking",               # content-defined chunking
-    "sql_table_function_word_count",  # SQL-defined table function tier
-    "polymorphic_udtf_props",     # analyze-time polymorphic UDTF schema
-    # round-7 cohort: one representative per family still outside the window
-    "mmr_rerank",                 # diversified (MMR) rerank
-    "runtime_filtered_join",      # bloom-pruned shuffle join
-    "centroid_classify",          # oracle-exact ML inference (centroids)
-    "not_in_customers",           # null-aware anti join (NOT IN)
-    "rrf_hybrid_topk",            # hybrid retrieval (reciprocal-rank fusion)
-    "streaming_custom_source_rollup",   # custom streaming source loop
-    "streaming_kvtext_sink_roundtrip",  # custom streaming sink loop
-    "sql_udf_pricing",            # SQL scalar UDF tier
-    "multiset_set_ops",           # INTERSECT/EXCEPT ALL (bag semantics)
-    "similarity_lsh_topk",        # oracle-exact hyperplane LSH top-k
-    # round-8 cohort: one representative per family still outside the window
-    "gopher_quality_rules",       # Gopher quality-filter rule battery
-    "dsir_importance",            # DSIR n-gram importance weighting
-    "lm_perplexity_score",        # KenLM-style LM perplexity scoring
-    "sequence_packing",           # greedy first-fit sequence packing
-    "training_shuffle",           # deterministic hash-based epoch shuffle
-    "bpe_learn_merges",           # BPE merge-rule learning (driver loop)
-    "bpe_apply_merges",           # BPE merge application (array folds)
-    "pagerank_order_chain",       # Pregel-shape iterative PageRank
-    "rfm_segmentation",           # distributed-ntile RFM segmentation
-    "schema_evolution_union",     # schema-evolution union (mergeSchema)
-)
-# Round-11 rotation APPLIED above: every name with no hash-green driver
-# row is in the window (the env-gated stateful_user_rollup_tws excepted),
-# and since round 11 EVERY registry entry carries an exact value-hash
-# oracle — the bounded/recall/sketch tiers are empty. A green r11 window
-# brings the cumulative driver-green union to 210/211 (all but the
-# protobuf-gated TWS twin, which tests + sweeps cover).
-#
-# Round-13 rotation APPLIED above (r12 came back 50/50 green so the
-# drafted composition was valid verbatim): the 4 late-r12 never-checked
-# names, the 16 r8-stale leftovers, and 30 r9-stale greens. A green r13
-# window brings the cumulative driver-green union to 217/224 (all but
-# the TWS twin — runnable since r13 via the vendored mini-protobuf
-# runtime — and the 6 late-r13 additions).
-#
-# Round-14 rotation APPLIED above (r13 came back 50/50 green so the
-# drafted composition was valid verbatim): the seven never-driver-checked
-# names first (6 late-r13 additions + the un-pinned TWS ValueState twin),
-# then 20 r9-stale and 23 r10-stale greens. A green first-7 brings the
-# cumulative driver-green union to 224/224 — the whole registry
-# driver-proven at least once.
-_DEMOTE: tuple[str, ...] = (
-    # Empty since round 14: the TWS ValueState twin — the last pinned
-    # name — rotated INTO the window once the vendored mini-protobuf
-    # runtime (landed r13) made it runnable in this container. Kept as a
-    # mechanism for any future entry that must stay behind position 50.
 )
 
 
 def _ordered() -> dict[str, tuple[QueryFn, str | None]]:
     front = {n: _REGISTRY[n] for n in _PROMOTE if n in _REGISTRY}
-    back = {n: _REGISTRY[n] for n in _DEMOTE if n in _REGISTRY}
-    mid = {
-        n: v for n, v in _REGISTRY.items() if n not in front and n not in back
-    }
-    return {**front, **mid, **back}
+    return {**front, **{n: v for n, v in _REGISTRY.items() if n not in front}}
 
 
 def queries() -> dict[str, QueryFn]:
@@ -1670,9 +1187,7 @@ from ..streaming.stateful import (  # noqa: E402
 # TWS state protocol's protobuf dependency is satisfied by the vendored
 # mini-runtime (vendor/pypath, activated only when the real wheel is
 # absent), so the former env skip is gone — the query is sweep- and
-# oracle-verified like every other entry. Since round 14 it sits INSIDE
-# the driver's 50-entry hash window (_PROMOTE position 7) to earn its
-# first driver row.
+# oracle-verified like every other entry.
 register("stateful_user_rollup_tws", _stateful_tws, _stateful_sql)
 
 # Stream-stream watermarked join (attribution shape); single-batch staging

@@ -1,5 +1,6 @@
-"""Process-lifetime staging directories for queries that re-materialize a
-table in another format (text dir, CSV, file streams).
+"""Process-lifetime staging directories, the stage-once helper that builds
+per-corpus artifacts into them, and the per-session DataFrame read cache
+shared by ``tables.load_table`` and ``read_staged``.
 
 The staged files must outlive the *builder* call — the returned DataFrame
 or drained memory-sink table may be executed (or re-executed) by the
@@ -11,10 +12,17 @@ engine get bounded /tmp usage instead of a leak per query build.
 from __future__ import annotations
 
 import atexit
+import os
 import shutil
 import tempfile
+import weakref
+from typing import Callable
 
 _DIRS: list[str] = []
+_KEYED: dict[tuple[str, str], str] = {}
+# committed artifact path → {dep spec: _file_sig of its source} as recorded
+# by the artifact's build; an artifact without an entry is not committed
+_SOURCES: dict[str, dict[tuple, tuple | None]] = {}
 
 
 def staging_dir(prefix: str) -> str:
@@ -24,83 +32,219 @@ def staging_dir(prefix: str) -> str:
     return path
 
 
-_KEYED: dict[tuple[str, str], str] = {}
-
-
 def keyed_staging_dir(prefix: str, key: str) -> tuple[str, bool]:
     """A staging directory REUSED for the lifetime of the process when the
-    same (prefix, key) is requested again — for deterministic layout
-    steps (e.g. the month-partitioned DPP fact copy of one sf_dir) whose
-    re-write per repeated build would otherwise dominate the query being
-    measured. Returns (path, already_staged): the caller skips its write
-    when already_staged is True. Cleanup at exit as usual.
+    same (prefix, key) is requested again. Returns (path, already_staged),
+    already_staged being True when the directory was handed out before
+    and still exists. Cleanup at exit as usual.
 
-    No invalidation: the cache assumes the source data behind ``key`` is
-    immutable for the process lifetime (true for the bench/verify
-    lifecycle, where testdata directories are only regenerated between
-    driver rounds, i.e. between processes). If in-process regeneration of
-    a source path ever becomes possible, callers should fold a cheap
-    content fingerprint (e.g. source-parquet mtime) into ``key``.
-
-    Single-threaded driver assumed (like invalidation above): callers
-    follow an isdir-then-build-then-os.rename pattern inside the returned
-    directory, so two concurrent builders of the same key would race on
-    the shared _tmp_* dir and the rename. That matches Spark's driver
-    model — one query plan is built at a time on the driver thread; a
-    multi-threaded embedding would need a per-key lock around the build
-    or a unique tmp suffix plus rename-if-absent (first rename wins,
-    losers discard)."""
-    import os
-
+    For output roots that callers locate by key (the streaming delta
+    logs). Artifacts derived from source data go through
+    :func:`stage_once` instead, which commits a build only once it
+    succeeded and rebuilds when a source changes."""
     k = (prefix, key)
     if k in _KEYED and os.path.isdir(_KEYED[k]):
         return _KEYED[k], True
-    path = tempfile.mkdtemp(prefix=prefix)
-    _DIRS.append(path)
-    _KEYED[k] = path
-    return path, False
+    _KEYED[k] = staging_dir(prefix)
+    return _KEYED[k], False
 
 
-_READ_CACHE = None  # lazily-built WeakKeyDictionary[SparkSession, dict]
+def stage_once_dir(
+    spark, prefix: str, key: str, name: str, write: Callable[[str], None]
+) -> str:
+    """The committed artifact ``name`` of the keyed dir (prefix, key), or
+    the keyed dir itself when ``name`` is empty: ``write(dir)`` builds it
+    once, and it is served while every source its build read is unchanged.
+
+    A named artifact is written to ``_tmp_<name>`` and renamed into place,
+    so several artifacts can share one keyed dir; an unnamed one is
+    written into a fresh keyed dir. Either way it counts as committed only
+    once ``write`` returned, so a failed build is rebuilt on the next call
+    instead of being served half-written.
+
+    Sources are recorded, not declared: every loader output the build
+    receives (``planmemo.note_dep``) is stored with its ``_file_sig``, and
+    when one of those signatures moves the artifact is rebuilt into a
+    fresh keyed dir. The build must therefore read its inputs through the
+    loaders, not close over frames loaded before the call. A hit replays
+    the recorded sources into any enclosing plan-memo recording, exactly
+    as the build would have noted them, so a plan built over an
+    already-staged artifact still invalidates when the corpus changes.
+
+    Builds are assumed to run one at a time, on the thread that builds
+    query plans: two concurrent builders of the same key would race on the
+    shared ``_tmp_<name>`` dir."""
+    from .operators.planmemo import recording
+
+    k = (prefix, key)
+    root = _KEYED.get(k)
+    path = root and (os.path.join(root, name) if name else root)
+    deps = _SOURCES.get(path)
+    if deps is not None and os.path.isdir(path):
+        if all(_file_sig(_source_path(s)) == sig for s, sig in deps.items()):
+            _replay(spark, deps)
+            return path
+    if not (name and root and os.path.isdir(root)) or os.path.exists(path):
+        # unnamed, never staged, cleaned up or stale: a fresh keyed dir
+        root = _KEYED[k] = staging_dir(prefix)
+        path = os.path.join(root, name) if name else root
+    with recording() as frame:
+        if name:
+            tmp = os.path.join(root, f"_tmp_{name}")
+            shutil.rmtree(tmp, ignore_errors=True)
+            write(tmp)
+            os.rename(tmp, path)
+        else:
+            write(root)
+    _SOURCES[path] = {s: _file_sig(_source_path(s)) for s in frame.deps}
+    return path
+
+
+def stage_once(spark, prefix: str, key: str, name: str, build: Callable):
+    """:func:`stage_once_dir` for an artifact that is one DataFrame:
+    ``build()`` is written as parquet, and the staged copy is served
+    through :func:`read_staged`."""
+    path = stage_once_dir(
+        spark,
+        prefix,
+        key,
+        name,
+        lambda tmp: build().write.mode("overwrite").parquet(tmp),
+    )
+    return read_staged(spark, path)
+
+
+def _source_path(spec: tuple) -> str:
+    """The file or dataset dir behind a plan-memo dep spec."""
+    if spec[0] == "staged":
+        return spec[1]
+    from .tables import table_path
+
+    return table_path(spec[1], spec[2])
+
+
+def _replay(spark, deps: dict) -> None:
+    """Note each recorded source into the active plan-memo recordings with
+    the DataFrame its loader currently serves: the session's cached one,
+    else the loader's own (which notes itself)."""
+    from .operators.planmemo import note_dep, refetch
+
+    per_session = _READS.get(spark, {})
+    v1list = _v1list(spark)
+    for spec, sig in deps.items():
+        hit = per_session.get((_source_path(spec), v1list))
+        if hit is not None and hit[0] == sig:
+            note_dep(spec, hit[1])
+        else:
+            refetch(spark, spec)
+
+
+# ---------------------------------------------------------------------------
+# Per-session DataFrame read cache
+# ---------------------------------------------------------------------------
+
+# Every ``spark.read.parquet`` call costs ~0.12-0.25 s of driver-side
+# py4j + file-listing + footer-schema work, and every query build calls
+# the loaders several times — a fixed plan-build floor (measured r14-r15
+# while bisecting the similarity_topk_pandas and dedup_minhash_lsh
+# builds). DataFrames are immutable logical plans, so reuse is safe; each
+# entry carries the dataset's ``_file_sig`` so an overwrite (scale
+# probes, staging rebuilds) re-reads instead of serving a stale FileIndex.
+# ``useV1SourceList`` is in the key because V1-vs-V2 relation resolution
+# happens at read time (metadata_agg_pushdown flips parquet to V2 for its
+# footer aggregation — caught by test_plan_shapes when the cache first
+# landed). Weak-keyed on the session so a stopped session's plans don't
+# outlive it.
+_READS: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
+
+
+def _dir_entries(path: str, depth: int) -> tuple:
+    """(name, mtime_ns, size[, child entries]) per directory entry, sorted.
+    ``depth`` levels of subdirectories are expanded so a partitioned
+    dataset (partition dir → part files) is covered: an in-place
+    same-name part rewrite nested under a partition dir moves neither the
+    top-level dir mtime nor the partition dir's (mtime, size), so a
+    depth-1 signature would serve a stale FileIndex for it (the depth-2
+    twin of the flat-dataset gotcha below)."""
+    try:
+        entries = []
+        for e in sorted(os.listdir(path)):
+            child = os.path.join(path, e)
+            try:
+                est = os.stat(child)
+            except OSError:
+                entries.append((e, -1, -1))
+                continue
+            row = (e, est.st_mtime_ns, est.st_size)
+            if depth > 1 and os.path.isdir(child):
+                row = row + (_dir_entries(child, depth - 1),)
+            entries.append(row)
+        return tuple(entries)
+    except OSError:
+        return ()
+
+
+def _file_sig(path: str) -> tuple | None:
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    if os.path.isdir(path):
+        # dataset dir: directory mtime only moves on create/delete/rename,
+        # so an in-place rewrite of a part file that keeps its name would
+        # slip past a names-only entry list — stat each entry and fold its
+        # (mtime_ns, size) into the signature too, expanding two levels of
+        # subdirectories (partition dir → part files) for partitioned
+        # datasets served through this cache.
+        return (st.st_mtime_ns, st.st_size, _dir_entries(path, depth=2))
+    return (st.st_mtime_ns, st.st_size)
+
+
+def evict_stopped_sessions(cache) -> None:
+    """Drop cache entries whose SparkSession has been stopped.
+
+    The cached DataFrame values strongly reference their session, so a
+    weak-keyed entry alone can never be collected (the value keeps the
+    key alive — the r15 ADVICE leak). Sessions are few, so a sweep per
+    lookup is O(1) in practice; a stopped session's plans are unusable
+    anyway, so dropping the whole per-session dict is always safe."""
+    for s in list(cache.keys()):
+        try:
+            stopped = s.sparkContext._jsc is None
+        except Exception:
+            stopped = True
+        if stopped:
+            try:
+                del cache[s]
+            except KeyError:
+                pass
+
+
+def _v1list(spark) -> str:
+    return spark.conf.get("spark.sql.sources.useV1SourceList", "")
+
+
+def cached_read(spark, path: str, read: Callable):
+    """The session's DataFrame for ``path``: the cached one while the
+    path's signature is unchanged, else a fresh ``read()``."""
+    evict_stopped_sessions(_READS)
+    sig = _file_sig(path)
+    per_session = _READS.setdefault(spark, {})
+    k = (path, _v1list(spark))
+    hit = per_session.get(k)
+    if hit is not None and sig is not None and hit[0] == sig:
+        return hit[1]
+    df = read()
+    per_session[k] = (sig, df)
+    return df
 
 
 def read_staged(spark, path: str):
-    """``spark.read.parquet`` with a per-session, signature-guarded
-    DataFrame cache — the staged-artifact twin of ``tables.load_table``'s
-    fixture cache (r14), applied registry-wide per the r14 verdict.
-
-    Every ``spark.read.parquet`` call costs ~0.12-0.25 s of driver-side
-    py4j + file-listing + footer-schema work. Operators that serve staged
-    integer artifacts (the shingle store, minhash signatures, tf index,
-    IVF/PQ codebooks) pay that on EVERY query construction — a fixed
-    plan-BUILD floor measured at ~0.5 s of dedup_minhash_lsh's 1.35 s
-    total (r15 stage bisection, two staged reads + fixtures). DataFrames
-    are immutable logical plans, so reuse is safe; the cache value is
-    guarded by the dataset signature (dir mtime_ns/size + each entry's
-    name/mtime_ns/size) so a staging rebuild or scale-probe overwrite
-    re-reads, and ``useV1SourceList`` is in the key because V1-vs-V2
-    relation resolution happens at read time (same two gotchas as the
-    load_table cache — see tables.py).
-    """
-    global _READ_CACHE
-    if _READ_CACHE is None:
-        import weakref
-
-        _READ_CACHE = weakref.WeakKeyDictionary()
-    from .tables import _evict_stopped_sessions, _file_sig
-
+    """``spark.read.parquet`` of a staged artifact through the per-session
+    read cache, noted as a plan-memo dependency."""
     from .operators.planmemo import note_dep
 
-    _evict_stopped_sessions(_READ_CACHE)
-    sig = _file_sig(path)
-    v1list = spark.conf.get("spark.sql.sources.useV1SourceList", "")
-    per_session = _READ_CACHE.setdefault(spark, {})
-    cached = per_session.get((path, v1list))
-    if cached is not None and sig is not None and cached[0] == sig:
-        note_dep(("staged", path), cached[1])
-        return cached[1]
-    df = spark.read.parquet(path)
-    per_session[(path, v1list)] = (sig, df)
+    df = cached_read(spark, path, lambda: spark.read.parquet(path))
     note_dep(("staged", path), df)
     return df
 
@@ -108,5 +252,6 @@ def read_staged(spark, path: str):
 @atexit.register
 def _cleanup() -> None:
     _KEYED.clear()
+    _SOURCES.clear()
     while _DIRS:
         shutil.rmtree(_DIRS.pop(), ignore_errors=True)

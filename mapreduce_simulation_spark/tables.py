@@ -10,9 +10,10 @@ predicate pushdown for free — verify with ``df.explain()``: look for
 from __future__ import annotations
 
 import os
-import weakref
 
 from pyspark.sql import DataFrame, SparkSession
+
+from .staging import cached_read
 
 TABLE_NAMES = (
     "region",
@@ -29,84 +30,15 @@ TABLE_NAMES = (
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-# Per-session DataFrame cache: `spark.read.parquet` costs ~0.12 s of
-# driver-side py4j + file-listing + footer-schema work PER CALL, and every
-# query calls load_table 1-3 times — a fixed floor on each of the ~224
-# registry queries (measured r14 while bisecting the similarity_topk_pandas
-# plan-build cost). DataFrames are immutable logical plans, so reuse is
-# safe; the cache key carries the file's (mtime_ns, size) signature so an
-# overwritten fixture (scale probes, staging twins) re-reads instead of
-# serving a stale FileIndex. Weak-keyed on the session so a stopped
-# session's plans don't outlive it.
-_DF_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    weakref.WeakKeyDictionary()
-)
 
-
-def _dir_entries(path: str, depth: int) -> tuple:
-    """(name, mtime_ns, size[, child entries]) per directory entry, sorted.
-    ``depth`` levels of subdirectories are expanded so a partitioned
-    dataset (partition dir → part files) is covered: an in-place
-    same-name part rewrite nested under a partition dir moves neither the
-    top-level dir mtime nor the partition dir's (mtime, size), so a
-    depth-1 signature would serve a stale FileIndex for it (the depth-2
-    twin of the flat-dataset gotcha below)."""
-    try:
-        entries = []
-        for e in sorted(os.listdir(path)):
-            child = os.path.join(path, e)
-            try:
-                est = os.stat(child)
-            except OSError:
-                entries.append((e, -1, -1))
-                continue
-            row = (e, est.st_mtime_ns, est.st_size)
-            if depth > 1 and os.path.isdir(child):
-                row = row + (_dir_entries(child, depth - 1),)
-            entries.append(row)
-        return tuple(entries)
-    except OSError:
-        return ()
-
-
-def _file_sig(path: str) -> tuple | None:
-    try:
-        st = os.stat(path)
-    except OSError:
-        return None
-    if os.path.isdir(path):
-        # dataset dir: directory mtime only moves on create/delete/rename,
-        # so an in-place rewrite of a part file that keeps its name would
-        # slip past a names-only entry list — stat each entry and fold its
-        # (mtime_ns, size) into the signature too, expanding two levels of
-        # subdirectories (partition dir → part files) for partitioned
-        # datasets served through this cache.
-        return (st.st_mtime_ns, st.st_size, _dir_entries(path, depth=2))
-    return (st.st_mtime_ns, st.st_size)
-
-
-def _evict_stopped_sessions(cache) -> None:
-    """Drop cache entries whose SparkSession has been stopped.
-
-    The cached DataFrame values strongly reference their session, so a
-    weak-keyed entry alone can never be collected (the value keeps the
-    key alive — the r15 ADVICE leak). Sessions are few, so a sweep per
-    lookup is O(1) in practice; a stopped session's plans are unusable
-    anyway, so dropping the whole per-session dict is always safe."""
-    for s in list(cache.keys()):
-        try:
-            stopped = s.sparkContext._jsc is None
-        except Exception:
-            stopped = True
-        if stopped:
-            try:
-                del cache[s]
-            except KeyError:
-                pass
+def table_path(sf_dir: str, name: str) -> str:
+    return os.path.join(sf_dir, f"{name}.parquet")
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one star-schema table. Parquet scan → Catalyst prunes/pushes.
+    Served through the per-session read cache (``staging.cached_read``)
+    and noted as a plan-memo dependency.
 
     ``events.ts`` has shipped as both TIMESTAMP(NANOS) (which Spark reads as
     nano-longs under ``nanosAsLong``) and plain ``timestamp[us]``; we detect
@@ -117,39 +49,29 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    sig = _file_sig(path)
-    # V1-vs-V2 relation resolution happens at spark.read time, so a plan
-    # cached under one useV1SourceList value is the WRONG relation under
-    # another (metadata_agg_pushdown flips parquet to V2 for its footer
-    # aggregation — caught by test_plan_shapes when the cache first
-    # landed); key on the conf so conf-guarded queries get their own entry.
-    v1list = spark.conf.get("spark.sql.sources.useV1SourceList", "")
-    _evict_stopped_sessions(_DF_CACHE)
-    per_session = _DF_CACHE.setdefault(spark, {})
     from .operators.planmemo import note_dep
 
-    cached = per_session.get((path, v1list))
-    if cached is not None and cached[0] == sig and sig is not None:
-        if name == "events":
-            # the events session confs are an engine contract — re-pin
-            # them on every load, cached or not (a caller may have
-            # changed the session zone between queries)
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-            spark.conf.set("spark.sql.session.timeZone", "UTC")
-        note_dep(("table", sf_dir, name), cached[1])
-        return cached[1]
+    path = table_path(sf_dir, name)
     if name == "events":
+        # The events session confs are an engine contract, re-pinned on
+        # every load, cached or not (a caller may have changed the session
+        # zone between queries). The ntz→ltz normalization below is
+        # value-preserving only when the session renders timestamps in
+        # UTC; pin it in case the caller's session was built without our
+        # session.py. Deliberate session-wide side effect: UTC sessions
+        # are an engine contract (session.py pins it; every oracle is
+        # tz-naive) — a caller wanting non-UTC rendering must convert at
+        # the edge, not via the session zone.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # The ntz→ltz normalization below is value-preserving only when the
-        # session renders timestamps in UTC; pin it in case the caller's
-        # session (e.g. the driver's) was built without our session.py.
-        # Deliberate session-wide side effect: UTC sessions are an engine
-        # contract (session.py pins it; every oracle is tz-naive) — a
-        # caller wanting non-UTC rendering must convert at the edge, not
-        # via the session zone.
         spark.conf.set("spark.sql.session.timeZone", "UTC")
-        df = spark.read.parquet(path)
+    df = cached_read(spark, path, lambda: _read(spark, path, name))
+    note_dep(("table", sf_dir, name), df)
+    return df
+
+
+def _read(spark: SparkSession, path: str, name: str) -> DataFrame:
+    df = spark.read.parquet(path)
+    if name == "events":
         from pyspark.sql import functions as F
 
         ts_type = dict(df.dtypes).get("ts")
@@ -159,12 +81,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # Downstream operators (unix_micros, watermarks) expect TIMESTAMP;
             # session tz is UTC so the cast is value-preserving vs the oracle.
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-        per_session[(path, v1list)] = (sig, df)
-        note_dep(("table", sf_dir, name), df)
-        return df
-    df = spark.read.parquet(path)
-    per_session[(path, v1list)] = (sig, df)
-    note_dep(("table", sf_dir, name), df)
     return df
 
 

@@ -179,6 +179,12 @@ def test_driver_hash_window_is_frozen():
     )
 
 
+def test_registry_order_list_has_no_duplicates():
+    from mapreduce_simulation_spark.plans import registry
+
+    assert len(set(registry._PROMOTE)) == len(registry._PROMOTE)
+
+
 def test_driver_window_queries_all_have_oracles():
     from mapreduce_simulation_spark.plans import registry
 
@@ -208,7 +214,7 @@ def test_file_sig_detects_in_place_part_overwrite(tmp_path):
     (mtime_ns, size) in — not just the sorted names."""
     import os
 
-    from mapreduce_simulation_spark.tables import _file_sig
+    from mapreduce_simulation_spark.staging import _file_sig
 
     d = tmp_path / "t.parquet"
     d.mkdir()
