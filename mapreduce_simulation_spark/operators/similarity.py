@@ -1009,11 +1009,8 @@ def streaming_lsh_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     tier, the streaming-ingest twin pattern of
     streaming_hll_sketch_ingest applied to the ANN index census.
     """
-    import os
+    from ..streaming.stateful import drain_delta_log
 
-    from ..staging import keyed_staging_dir
-
-    emb = load_table(spark, sf_dir, "embeddings")
     stage = stage_once_dir(
         spark,
         "lsh_ingest_stream_",
@@ -1024,34 +1021,20 @@ def streaming_lsh_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .write.mode("overwrite")
         .parquet(tmp),
     )
-    # keyed (not fresh-per-call) so tests can locate the delta log and
-    # assert multi-batch accumulation; re-drains rewrite identical bytes
-    out_root, _ = keyed_staging_dir("lsh_census_ingest_", f"sf={sf_dir}")
-    delta_dir = os.path.join(out_root, "deltas")
 
-    def _ingest_batch(batch_df: DataFrame, batch_id: int) -> None:
-        v = _as_double("embedding")
+    def occupancy(batch_df: DataFrame) -> DataFrame:
         sigs = _multitable_signatures(
-            batch_df.select("vec_id", v.alias("v"))
+            batch_df.select("vec_id", _as_double("embedding").alias("v"))
         )
-        delta = sigs.groupBy("tbl", "bucket").agg(
-            F.count(F.lit(1)).alias("c")
-        )
-        delta.repartition(1).write.mode("overwrite").parquet(
-            os.path.join(delta_dir, f"batch={batch_id}")
-        )
+        return sigs.groupBy("tbl", "bucket").agg(F.count(F.lit(1)).alias("c"))
 
-    q = (
-        spark.readStream.schema(emb.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-        .writeStream.foreachBatch(_ingest_batch)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    deltas = spark.read.option("basePath", delta_dir).parquet(
-        os.path.join(delta_dir, "batch=*")
+    deltas = drain_delta_log(
+        spark,
+        sf_dir,
+        stage,
+        load_table(spark, sf_dir, "embeddings").schema,
+        "lsh_census_ingest_",
+        occupancy,
     )
     occ = deltas.groupBy("tbl", "bucket").agg(F.sum("c").alias("c"))
     return _census_from_occ(occ)

@@ -1136,7 +1136,7 @@ from ..operators.dedup import (  # noqa: E402
 # window per the rotation policy. Streaming CONTAINMENT ingestion gate:
 # the online twin of containment_dedup (width-1 min-hash anchor bands →
 # the 1-(1-J)^m envelope that catches asymmetric pairs), sharing the
-# band-scheme-agnostic index/verdict/compaction machinery with the
+# band-scheme-agnostic verdict-log and compaction machinery with the
 # MinHash gate. Exact oracle (anchor keys are signature-value strings).
 register(
     "streaming_containment_dedup", _contain_gate, _contain_gate_sql

@@ -1355,11 +1355,11 @@ def test_band_index_gate_matches_python_state_gate(spark, tmp_path):
         by_doc[d] = by_doc.get(d, 0) + dup
     assert by_doc[10] == 0 and by_doc[20] == 0
     assert by_doc[30] == 8 and by_doc[55] == 8 and by_doc[12] == 8
-    # and the drain really ran one micro-batch per file (3 index deltas)
+    # and the drain really ran one micro-batch per file (3 verdict deltas)
     import os
 
-    idx = os.path.join(str(tmp_path / "gate_equiv_out"), "index")
-    assert sum(1 for d in os.listdir(idx) if d.startswith("delta_")) == 3
+    ver = os.path.join(str(tmp_path / "gate_equiv_out"), "verdicts")
+    assert sum(1 for d in os.listdir(ver) if d.startswith("delta_")) == 3
 
 
 def test_band_index_gate_drain_refuses_lost_checkpoint(spark, tmp_path):
@@ -1397,14 +1397,69 @@ def test_band_index_gate_drain_refuses_lost_checkpoint(spark, tmp_path):
     assert sorted(os.listdir(ver)) == committed
 
 
-def test_band_index_gate_batch_replay_is_idempotent(spark, tmp_path):
-    """Crash-replay contract of the foreachBatch body: (a) a fully
-    committed batch (verdict delta present) is a no-op on replay; (b) a
-    half-committed batch (index delta written, crash before the verdict
-    commit marker) recomputes IDENTICAL verdicts, because the body only
-    ever reads index deltas with id < its own batch id."""
+def _gate_batches(spark):
+    """Three banded micro-batches for the band-index gate's crash tests:
+    batch 2 repeats the texts of batches 0 and 1 under new ids, so its
+    verdicts depend on the claims of both earlier batches."""
+    from mapreduce_simulation_spark.operators.dedup import (
+        narrow_minhash_bands_arrow,
+    )
+
+    t_a = "the quick brown fox jumps over the lazy dog again and again"
+    t_b = "pack my box with five dozen liquor jugs every single day"
+    return [
+        narrow_minhash_bands_arrow(
+            spark.createDataFrame(rows, "doc_id bigint, text string")
+        )
+        for rows in (
+            [(10, t_a)],
+            [(20, t_b)],
+            [(30, t_a), (40, t_b), (50, "its own fresh sentence here")],
+        )
+    ]
+
+
+def _gate_verdicts(spark, root):
     import os
-    import shutil
+
+    return {
+        (r.doc_id, r.band): r.dup
+        for r in spark.read.option("recursiveFileLookup", "true")
+        .parquet(os.path.join(root, "verdicts"))
+        .collect()
+    }
+
+
+def _truncate_parts(path):
+    """Turn a complete parquet dir into a partial write: no success
+    marker, every part file cut short."""
+    import os
+
+    for f in os.listdir(path):
+        if f == "_SUCCESS":
+            os.remove(os.path.join(path, f))
+        elif f.startswith("part-"):
+            with open(os.path.join(path, f), "r+b") as fh:
+                fh.truncate(10)
+
+
+def _crash_on(monkeypatch, module, name, match):
+    """Make ``module.name`` raise once for a path argument ending in
+    ``match`` — the injected crash."""
+    real = getattr(module, name)
+
+    def crash(*args, **kwargs):
+        if str(args[-1]).rstrip("/").endswith(match):
+            raise OSError(f"injected crash at {name} {args[-1]}")
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(module, name, crash)
+
+
+def test_band_index_gate_batch_replay_is_idempotent(spark, tmp_path):
+    """Crash-replay contract of the foreachBatch body: a committed batch
+    (verdict delta present) is a no-op on replay."""
+    import os
 
     from mapreduce_simulation_spark.operators.dedup import (
         narrow_minhash_bands_arrow,
@@ -1423,210 +1478,148 @@ def test_band_index_gate_batch_replay_is_idempotent(spark, tmp_path):
     )
     banded = narrow_minhash_bands_arrow(docs)
     root = str(tmp_path / "gate_replay")
-    idx, ver = os.path.join(root, "index"), os.path.join(root, "verdicts")
-    os.makedirs(idx)
-    os.makedirs(ver)
-    _band_index_gate_batch(banded, 0, idx, ver)
-
-    def read_verdicts():
-        return {
-            (r.doc_id, r.band): r.dup
-            for r in spark.read.option("recursiveFileLookup", "true")
-            .parquet(ver)
-            .collect()
-        }
-
-    want = read_verdicts()
+    _band_index_gate_batch(banded, 0, root)
+    want = _gate_verdicts(spark, root)
     assert sum(d for _k, d in want.items()) == 8  # doc 2 flagged, 8 bands
-    # (a) full replay: both deltas exist → no-op, nothing duplicated
-    _band_index_gate_batch(banded, 0, idx, ver)
-    assert read_verdicts() == want
-    assert os.listdir(idx) == ["delta_00000"]
-    # (b) half-committed replay: index delta survived the crash, verdict
-    # delta did not → recompute must not see its own index delta
-    shutil.rmtree(os.path.join(ver, "delta_00000"))
-    _band_index_gate_batch(banded, 0, idx, ver)
-    assert read_verdicts() == want
+    _band_index_gate_batch(banded, 0, root)
+    assert _gate_verdicts(spark, root) == want
+    assert os.listdir(os.path.join(root, "verdicts")) == ["delta_00000"]
+
+
+def test_band_index_gate_crash_before_commit_rename(
+    spark, tmp_path, monkeypatch
+):
+    """A crash between the verdict write and its commit rename leaves a
+    partial ``verdicts/_tmp_<id>``. Readers of the verdict log must ignore
+    it, and the replay must commit verdicts identical to a crash-free
+    run."""
+    import os
+
+    from mapreduce_simulation_spark.streaming.stateful import (
+        _band_index_gate_batch,
+    )
+
+    banded = _gate_batches(spark)
+    ref = str(tmp_path / "ref")
+    for i, b in enumerate(banded):
+        _band_index_gate_batch(b, i, ref)
+    want = _gate_verdicts(spark, ref)
+    assert sum(d for (doc, _b), d in want.items() if doc == 30) == 8
+
+    root = str(tmp_path / "crash")
+    _band_index_gate_batch(banded[0], 0, root)
+    _band_index_gate_batch(banded[1], 1, root)
+    _crash_on(monkeypatch, os, "rename", "delta_00002")
+    with pytest.raises(OSError, match="injected crash"):
+        _band_index_gate_batch(banded[2], 2, root)
+    monkeypatch.undo()
+    ver = os.path.join(root, "verdicts")
+    _truncate_parts(os.path.join(ver, "_tmp_00002"))
+    assert _gate_verdicts(spark, root) == {
+        k: d for k, d in want.items() if k[0] in (10, 20)
+    }
+    _band_index_gate_batch(banded[2], 2, root)  # the replay
+    assert _gate_verdicts(spark, root) == want
+    assert sorted(os.listdir(ver)) == [
+        "delta_00000",
+        "delta_00001",
+        "delta_00002",
+    ]
 
 
 def test_band_index_compaction_preserves_gate_state(spark, tmp_path):
-    """compact_band_index folds the delta log into one base without
-    changing the claim set: a batch gated AFTER compaction gets verdicts
-    identical to the uncompacted continuation, the base's sentinel id is
-    -1 (visible to every future batch, batch 0 included), and the old
-    deltas are gone."""
+    """compact_band_index folds the claims into one base without changing
+    the claim set. Called after batch 0, batch 2 reads the base plus batch
+    1's delta; fired by the batch body at threshold 2, batch 2 reads the
+    base alone. Both give verdicts identical to the uncompacted run, and
+    the verdict log is untouched."""
     import os
 
-    from mapreduce_simulation_spark.operators.dedup import (
-        narrow_minhash_bands_arrow,
-    )
     from mapreduce_simulation_spark.streaming.stateful import (
         _band_index_gate_batch,
         compact_band_index,
     )
 
-    t_a = "the quick brown fox jumps over the lazy dog again and again"
-    t_b = "pack my box with five dozen liquor jugs every single day"
-    batches = [
-        spark.createDataFrame(rows, "doc_id bigint, text string")
-        for rows in (
-            [(10, t_a)],
-            [(20, t_b)],
-            [(30, t_a), (40, t_b), (50, "its own fresh sentence here")],
-        )
-    ]
-    banded = [narrow_minhash_bands_arrow(b) for b in batches]
+    banded = _gate_batches(spark)
 
-    def drive(root, compact_after_two):
-        idx, ver = os.path.join(root, "index"), os.path.join(root, "verd")
-        os.makedirs(idx)
-        os.makedirs(ver)
-        _band_index_gate_batch(banded[0], 0, idx, ver)
-        _band_index_gate_batch(banded[1], 1, idx, ver)
-        removed = (
-            compact_band_index(spark, idx, ver) if compact_after_two else 0
-        )
-        _band_index_gate_batch(banded[2], 2, idx, ver)
-        verdicts = {
-            (r.doc_id, r.band): r.dup
-            for r in spark.read.option("recursiveFileLookup", "true")
-            .parquet(ver)
-            .collect()
-        }
-        return idx, removed, verdicts
+    def drive(root, compact_after=None, threshold=16):
+        folded = 0
+        for i, b in enumerate(banded):
+            _band_index_gate_batch(b, i, root, threshold)
+            if i == compact_after:
+                folded = compact_band_index(spark, root)
+        return folded, _gate_verdicts(spark, root)
 
-    idx_c, removed, with_compact = drive(
-        str(tmp_path / "compacted"), True
-    )
-    _, _, without = drive(str(tmp_path / "plain"), False)
-    assert removed == 2
-    assert with_compact == without
-    # docs 30/40 flagged in all 8 bands from the COMPACTED state
+    want = drive(str(tmp_path / "plain"))[1]
+    # docs 30/40 flagged in all 8 bands from the earlier batches' claims
     flagged = {}
-    for (d, _b), dup in with_compact.items():
+    for (d, _b), dup in want.items():
         flagged[d] = flagged.get(d, 0) + dup
     assert flagged[30] == 8 and flagged[40] == 8 and flagged[50] == 0
-    from mapreduce_simulation_spark.streaming.stateful import (
-        _index_delta_id,
-    )
+    direct, auto = str(tmp_path / "direct"), str(tmp_path / "auto")
+    assert drive(direct, compact_after=0) == (1, want)
+    assert drive(auto, threshold=2) == (0, want)
+    for root, base in ((direct, "base_00000"), (auto, "base_00001")):
+        assert os.listdir(os.path.join(root, "index")) == [base]
+        assert sorted(os.listdir(os.path.join(root, "verdicts"))) == [
+            "delta_00000",
+            "delta_00001",
+            "delta_00002",
+        ]
 
-    names = sorted(
-        d for d in os.listdir(idx_c) if _index_delta_id(d) is not None
-    )
-    # one base (sentinel -1) + batch 2's delta — pre-compaction deltas gone
-    assert [_index_delta_id(d) for d in names] == [-1, 2]
 
-
-def test_band_index_compaction_skips_half_committed_batch(spark, tmp_path):
-    """The r12-advice crash window: batch 1's index delta renamed but its
-    verdict marker absent when compaction runs. The half-committed delta
-    must be EXCLUDED from the fold (else batch 1's replay reads its own
-    claims as prior state and flags the whole batch dup=1); the replay
-    after compaction must produce verdicts identical to the crash-free
-    run."""
+def test_band_index_compaction_crash_keeps_gate_state(
+    spark, tmp_path, monkeypatch
+):
+    """A crash inside compaction, at its two points: (a) before the base
+    rename, leaving a partial ``index/_tmp_compact``; (b) after the
+    rename, before the older base is deleted, leaving two bases. Either
+    way the next batch's verdicts equal those of an uncompacted run, and
+    the next compaction leaves one base."""
     import os
     import shutil
 
-    from mapreduce_simulation_spark.operators.dedup import (
-        narrow_minhash_bands_arrow,
-    )
     from mapreduce_simulation_spark.streaming.stateful import (
         _band_index_gate_batch,
-        _index_delta_id,
         compact_band_index,
     )
 
-    batches = [
-        spark.createDataFrame(rows, "doc_id bigint, text string")
-        for rows in (
-            [(10, "the quick brown fox jumps over the lazy dog again")],
-            [(20, "a completely distinct second document body here")],
-            [(30, "the quick brown fox jumps over the lazy dog again")],
-        )
-    ]
-    banded = [narrow_minhash_bands_arrow(b) for b in batches]
-
-    def read_verdicts(ver):
-        return {
-            (r.doc_id, r.band): r.dup
-            for r in spark.read.option("recursiveFileLookup", "true")
-            .parquet(ver)
-            .collect()
-        }
-
-    # crash-free reference run
+    banded = _gate_batches(spark)
     ref = str(tmp_path / "ref")
-    idx_r, ver_r = os.path.join(ref, "index"), os.path.join(ref, "verd")
-    os.makedirs(idx_r)
-    os.makedirs(ver_r)
-    for i in range(3):
-        _band_index_gate_batch(banded[i], i, idx_r, ver_r)
-    want = read_verdicts(ver_r)
-    assert sum(d for (doc, _b), d in want.items() if doc == 30) == 8
+    for i, b in enumerate(banded):
+        _band_index_gate_batch(b, i, ref)
+    want = _gate_verdicts(spark, ref)
 
-    # crashed run: batch 2 half-committed (index delta in, verdicts out)
-    root = str(tmp_path / "crash")
-    idx, ver = os.path.join(root, "index"), os.path.join(root, "verd")
-    os.makedirs(idx)
-    os.makedirs(ver)
-    for i in range(3):
-        _band_index_gate_batch(banded[i], i, idx, ver)
-    shutil.rmtree(os.path.join(ver, "delta_00002"))  # the crash
+    # (a) crash before the rename: the partial tmp dir is never read
+    root = str(tmp_path / "crash_rename")
+    idx = os.path.join(root, "index")
+    _band_index_gate_batch(banded[0], 0, root)
+    _band_index_gate_batch(banded[1], 1, root)
+    _crash_on(monkeypatch, os, "rename", "base_00001")
+    with pytest.raises(OSError, match="injected crash"):
+        compact_band_index(spark, root)
+    monkeypatch.undo()
+    _truncate_parts(os.path.join(idx, "_tmp_compact"))
+    _band_index_gate_batch(banded[2], 2, root)
+    assert _gate_verdicts(spark, root) == want
+    assert compact_band_index(spark, root) == 3
+    assert os.listdir(idx) == ["base_00002"]
 
-    removed = compact_band_index(spark, idx, ver)
-    assert removed == 2  # only committed batches 0 and 1 folded
-    survivors = sorted(
-        d for d in os.listdir(idx) if _index_delta_id(d) is not None
-    )
-    assert [_index_delta_id(d) for d in survivors] == [-1, 2]
-
-    _band_index_gate_batch(banded[2], 2, idx, ver)  # the replay
-    assert read_verdicts(ver) == want
-
-
-def test_band_index_base_visible_to_fresh_query_batch_zero(spark, tmp_path):
-    """A NEW streaming query restarts foreachBatch ids at 0 against a
-    persisted, compacted index. The base must be visible to batch 0 (the
-    r12 advice: a base parsed as id 0 failed `id < 0` and the gate forgot
-    every pre-compaction claim)."""
-    import os
-
-    from mapreduce_simulation_spark.operators.dedup import (
-        narrow_minhash_bands_arrow,
-    )
-    from mapreduce_simulation_spark.streaming.stateful import (
-        _band_index_gate_batch,
-        compact_band_index,
-    )
-
-    text = "the quick brown fox jumps over the lazy dog again and again"
-    other = "pack my box with five dozen liquor jugs every single day"
-    first = narrow_minhash_bands_arrow(
-        spark.createDataFrame([(10, text)], "doc_id bigint, text string")
-    )
-    filler = narrow_minhash_bands_arrow(
-        spark.createDataFrame([(11, other)], "doc_id bigint, text string")
-    )
-    # ingest two batches + compact under query A
-    root = str(tmp_path / "restart")
-    idx, ver_a = os.path.join(root, "index"), os.path.join(root, "verd_a")
-    os.makedirs(idx)
-    os.makedirs(ver_a)
-    _band_index_gate_batch(first, 0, idx, ver_a)
-    _band_index_gate_batch(filler, 1, idx, ver_a)
-    assert compact_band_index(spark, idx, ver_a) == 2
-
-    # query B: fresh checkpoint, ids restart at 0; same text, new doc id —
-    # every band bucket is already claimed, so all 8 bands must flag dup
-    second = narrow_minhash_bands_arrow(
-        spark.createDataFrame([(99, text)], "doc_id bigint, text string")
-    )
-    ver_b = os.path.join(root, "verd_b")
-    os.makedirs(ver_b)
-    _band_index_gate_batch(second, 0, idx, ver_b)
-    got = spark.read.option("recursiveFileLookup", "true").parquet(ver_b)
-    dups = [r.dup for r in got.collect()]
-    assert len(dups) == 8 and all(d == 1 for d in dups)
+    # (b) crash after the rename: an older base survives beside the newer
+    root = str(tmp_path / "crash_delete")
+    idx = os.path.join(root, "index")
+    _band_index_gate_batch(banded[0], 0, root)
+    assert compact_band_index(spark, root) == 1
+    _band_index_gate_batch(banded[1], 1, root)
+    _crash_on(monkeypatch, shutil, "rmtree", "base_00000")
+    with pytest.raises(OSError, match="injected crash"):
+        compact_band_index(spark, root)
+    monkeypatch.undo()
+    assert sorted(os.listdir(idx)) == ["base_00000", "base_00001"]
+    _band_index_gate_batch(banded[2], 2, root)
+    assert _gate_verdicts(spark, root) == want
+    assert compact_band_index(spark, root) == 1
+    assert os.listdir(idx) == ["base_00002"]
 
 
 def test_streaming_lsh_index_ingest_equals_batch_census(spark, sf_dir):
