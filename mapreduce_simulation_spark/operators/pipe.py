@@ -9,36 +9,44 @@ text before the first tab (md5-mod, :62-65,180-186), sorts each partition
 stdin (heapq.merge, :241-249), and a contiguous-key group is the reducer's
 unit of work.
 
-Spark-first re-expression (SURVEY.md §7 step 3):
-  pipe_map     RDD.pipe(cmd) per partition — one external process per
-               partition instead of per file (strictly fewer spawns than
-               the reference's Popen-per-input-file).
-  pipe_reduce  md5-mod key partitioning + sort-within-partition, then
-               RDD.pipe(cmd) — the reducer executable sees exactly the
-               reference's contract: its partition's lines, sorted
-               lexicographically by byte, contiguous groups per key.
+Spark-first re-expression (SURVEY.md §7 step 3), one JVM dataflow that
+starts no Python worker:
+  pipe_map     one process per partition (Spark's PipedRDD), not per file.
+  pipe_reduce  `key\\tvalue` lines placed by repartitionById on the md5-mod
+               of the key, byte-sorted by sortWithinPartitions (UTF8_BINARY
+               is LC_ALL=C `sort` order): each reducer sees contiguous key
+               groups. Both split output lines with text_dir.as_kv.
 
 Semantics notes:
-  - md5-mod partitioning reproduces the reference's *placement* function.
-    Query results never depend on it (any partitioning works); it exists so
-    executables that assume reference file-assignment behave identically.
-  - Sorting is byte-lexicographic on the whole line (LC_ALL=C `sort`
-    semantics) — matches the reference's subprocess sort on UTF-8 text.
-  - This is the engine's slow path: per-row Python→process→Python. Use
-    DataFrame expressions or pandas UDFs when the logic is known; pipe()
-    exists for binary compatibility with user executables.
-
-At scale: pipe stages are narrow (map) or single-shuffle (reduce), so they
-scale like any Spark job; the external process is the throughput ceiling.
+  - md5-mod placement exists for executables that assume the reference's
+    file assignment; query results never depend on it.
+  - The argv is ``shlex.split(command)`` (no shell reads the user's words),
+    run with an empty environment as PySpark's Python-side pipe did. Exit
+    codes are ignored, as by the reference's unchecked Popen, except
+    126/127: a command that cannot run fails the job.
+  - A NULL input line is sent as "", trailing newlines stripped before the
+    one terminator. An output line ends at ``\\n``, ``\\r\\n`` or a lone
+    ``\\r`` (Java's line reader; Hadoop's LineRecordReader splits input
+    files the same way).
+  - The executable is the throughput ceiling: pipe is for binary
+    compatibility with user executables, not a fast path.
 """
 
 from __future__ import annotations
 
 import hashlib
 import os
+import re
+import shlex
 
-from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..sources.text_dir import as_kv, lines_frame, read_text_dir
+from ..tables import load_table
+
+# Runs argv in an empty environment; only exit 126/127 (cannot run) fails.
+_RUN = 'env -i "$@"; s=$?; case $s in 126|127) exit $s;; esac'
 
 
 def _md5_mod(key: str, num_partitions: int) -> int:
@@ -48,6 +56,46 @@ def _md5_mod(key: str, num_partitions: int) -> int:
     return int(hashlib.md5(key.encode("utf-8")).hexdigest(), 16) % num_partitions
 
 
+def _md5_mod_col(key: Column, num_partitions: int) -> Column:
+    """:func:`_md5_mod` as a column: the md5 hex digest reduced mod n 32
+    bits at a time (Horner), so every step fits a long for any n < 2**31."""
+    r = F.lit(0)
+    for i in range(1, 33, 8):
+        chunk = F.conv(F.substring(F.md5(key), i, 8), 16, 10).cast("long")
+        r = (r * (1 << 32) + chunk) % num_partitions
+    return r.cast("int")
+
+
+def _strings(df: DataFrame):
+    """The single string column of ``df`` as a JVM Dataset[String]."""
+    jvm = df.sparkSession._jvm
+    return getattr(df._jdf, "as")(jvm.org.apache.spark.sql.Encoders.STRING())
+
+
+def _pipe(lines: DataFrame, command: str) -> DataFrame:
+    """Stream each partition of the single-column ``lines`` through one
+    ``command`` process; returns its output lines as DataFrame[value]."""
+    (col,) = lines.columns
+    text = F.coalesce(F.col(col).cast("string"), F.lit(""))
+    line = F.regexp_replace(text, r"\n+\z", "")
+    argv = ["/bin/sh", "-c", _RUN, "sh", *shlex.split(command)]
+    jlines = _strings(lines.select(line)).javaRDD()
+    piped = jlines.pipe(argv, {}, False, 1 << 16, "UTF-8")
+    return lines_frame(lines.sparkSession, piped)
+
+
+def _reduce(df: DataFrame, command: str, num_partitions: int) -> DataFrame:
+    """Reducer output lines: partition ``i`` holds exactly what reducer
+    ``i`` printed, in print order. NULL keys and values are sent as ""."""
+    key, value = (
+        F.coalesce(F.col(c).cast("string"), F.lit("")) for c in df.columns[:2]
+    )
+    line = F.concat(key, F.lit("\t"), value).alias("line")
+    pid = _md5_mod_col(key, num_partitions)
+    placed = df.select(line).repartitionById(num_partitions, pid)
+    return _pipe(placed.sortWithinPartitions("line"), command)
+
+
 def pipe_map(df: DataFrame, command: str) -> DataFrame:
     """Run an executable as a flatMap over lines (mapper contract).
 
@@ -55,38 +103,7 @@ def pipe_map(df: DataFrame, command: str) -> DataFrame:
     lines stream through one process instance; 0..n output lines per input
     line. Output schema: key/value split on the first tab.
     """
-    (col,) = df.columns
-    spark = df.sparkSession
-    lines = df.rdd.map(lambda r: r[0] if r[0] is not None else "")
-    piped = lines.pipe(command)
-    kv = piped.map(lambda line: Row(*_split_kv(line)))
-    return spark.createDataFrame(kv, "key string, value string")
-
-
-def pipe_reduce_lines(df: DataFrame, command: str, num_partitions: int):
-    """Reducer contract, returning the raw output-line RDD with the
-    reference's partition placement intact: partition ``i`` of the returned
-    RDD holds exactly what reducer ``i`` printed, in print order.
-
-    Use this when the *placement* is part of the contract (submit_job's
-    part files); use :func:`pipe_reduce` when only the rows matter.
-    """
-    kv = df.select(
-        F.col(df.columns[0]).cast("string").alias("key"),
-        F.col(df.columns[1]).cast("string").alias("value"),
-    )
-    pairs = kv.rdd.map(lambda r: ((r.key, r.value), None))
-    # repartitionAndSortWithinPartitions = the reference's partition-then-
-    # coreutils-sort, with Spark's spill-aware ExternalSorter instead of an
-    # in-memory sort. Sort key = the full `key\tvalue` line bytes (C locale).
-    parted = pairs.repartitionAndSortWithinPartitions(
-        numPartitions=num_partitions,
-        partitionFunc=lambda kv_key: _md5_mod(kv_key[0], num_partitions),
-        ascending=True,
-        keyfunc=lambda kv_key: f"{kv_key[0]}\t{kv_key[1]}",
-    )
-    sorted_lines = parted.map(lambda pair: f"{pair[0][0]}\t{pair[0][1]}")
-    return sorted_lines.pipe(command)
+    return as_kv(_pipe(df, command))
 
 
 def pipe_reduce(df: DataFrame, command: str, num_partitions: int) -> DataFrame:
@@ -95,10 +112,7 @@ def pipe_reduce(df: DataFrame, command: str, num_partitions: int) -> DataFrame:
     one process per partition consuming `key\\tvalue` lines with contiguous
     key groups.
     """
-    spark = df.sparkSession
-    piped = pipe_reduce_lines(df, command, num_partitions)
-    out = piped.map(lambda line: Row(*_split_kv(line)))
-    return spark.createDataFrame(out, "key string, value string")
+    return as_kv(_reduce(df, command, num_partitions))
 
 
 def pipe_word_count(
@@ -125,11 +139,8 @@ def pipe_word_count(
         "awk -F'\\t' '{ if ($1 != prev) { if (NR > 1) print prev \"\\t\" cnt; "
         "prev = $1; cnt = 0 } cnt += $2 } END { if (NR > 0) print prev \"\\t\" cnt }'"
     )
-    from ..tables import load_table
-
     docs = load_table(spark, sf_dir, "documents").select("text")
-    mapped = pipe_map(docs, mapper)
-    reduced = pipe_reduce(mapped, reducer, num_partitions)
+    reduced = pipe_reduce(pipe_map(docs, mapper), reducer, num_partitions)
     return reduced.select(
         F.col("key").alias("word"), F.col("value").cast("long").alias("cnt")
     )
@@ -152,23 +163,13 @@ def pipe_grep(
     (grep_reduce.py:27 prints the value) — here the pass-through is `cat`
     plus the post-pipe value projection.
     """
-    import shlex
-
-    from ..tables import load_table
-
     mapper = (
         "awk -v q=%s '{ line = tolower($0); "
         'if (index(line, q) > 0) print "1\\t" $0 }\'' % shlex.quote(query.lower())
     )
     docs = load_table(spark, sf_dir, "documents").select("text")
-    mapped = pipe_map(docs, mapper)
-    reduced = pipe_reduce(mapped, "cat", num_partitions)
+    reduced = pipe_reduce(pipe_map(docs, mapper), "cat", num_partitions)
     return reduced.select(F.col("value").alias("text"))
-
-
-def _split_kv(line: str) -> tuple[str, str]:
-    key, _, value = line.partition("\t")
-    return key, value
 
 
 def submit_job(
@@ -191,22 +192,18 @@ def submit_job(
     File-placement contract: ``part-0000i`` holds VERBATIM what reducer
     ``i`` (the md5-mod partition, worker/__main__.py:62-65) printed, in
     print order — byte-identical to the reference's part files, not merely
-    content-equal. The output RDD's partitions are written directly
+    content-equal. The reducer's partitions are written directly
     (saveAsTextFile, one task per reducer partition); no repartition sits
     between the reducer and the sink. Empty reducer partitions still
     produce their (empty) part file, matching the reference.
     """
-    from ..sources.text_dir import read_text_dir
-
     lines = read_text_dir(spark, input_directory, min_partitions=num_mappers)
-    mapped = pipe_map(lines, mapper)
-    out_lines = pipe_reduce_lines(mapped, reducer, num_reducers)
+    out_lines = _strings(_reduce(pipe_map(lines, mapper), reducer, num_reducers))
     # The reference manager rmtree+recreates the output dir per job
     # (manager/__main__.py:344-355); the Hadoop FS delete is the
     # cluster-correct equivalent (works for file://, hdfs://, s3a://).
-    jvm = spark.sparkContext._jvm
     hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    jpath = jvm.org.apache.hadoop.fs.Path(output_directory)
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(output_directory)
     fs = jpath.getFileSystem(hconf)
     if fs.exists(jpath):
         fs.delete(jpath, True)
@@ -220,7 +217,7 @@ def submit_job(
     prior_mark = hconf.get(mark_key)
     hconf.set(mark_key, "false")
     try:
-        out_lines.saveAsTextFile(output_directory)
+        out_lines.javaRDD().saveAsTextFile(output_directory)
     finally:
         if prior_mark is None:
             hconf.unset(mark_key)
@@ -229,11 +226,7 @@ def submit_job(
     # Local-FS only: ChecksumFileSystem materializes hidden .crc siblings
     # (and hides them from listStatus, so they must be swept via the OS).
     # Object stores / HDFS keep checksums out of the directory listing.
-    local = output_directory
-    if local.startswith("file://"):
-        local = local[len("file://"):]
-    elif local.startswith("file:"):
-        local = local[len("file:"):]
+    local = re.sub(r"^file:(//)?", "", output_directory)
     if not local.startswith(("hdfs:", "s3", "abfs", "gs:")) and os.path.isdir(local):
         for name in os.listdir(local):
             if name == "_SUCCESS" or name.endswith(".crc"):

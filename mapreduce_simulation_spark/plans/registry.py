@@ -1030,7 +1030,7 @@ register(
 from ..operators.pipe import pipe_word_count as _pipe_wc  # noqa: E402
 
 # Same semantics as word_count, executed through external awk processes via
-# RDD.pipe — so the same oracle applies (binary-compatibility proof).
+# Spark's PipedRDD — so the same oracle applies (binary-compatibility proof).
 register(
     "pipe_word_count",
     _pipe_wc,

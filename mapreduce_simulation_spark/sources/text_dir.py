@@ -34,12 +34,19 @@ def read_text_dir(
     if min_partitions is not None and not with_file:
         # sc.textFile honors an explicit split-count floor (num_mappers
         # semantics); the DataFrame reader packs by bytes instead.
-        rdd = spark.sparkContext.textFile(input_directory, min_partitions)
-        return rdd.map(lambda v: (v,)).toDF(["value"])
+        jsc = spark.sparkContext._jsc
+        return lines_frame(spark, jsc.textFile(input_directory, min_partitions))
     df = spark.read.text(input_directory)
     if with_file:
         df = df.select(F.input_file_name().alias("file"), F.col("value"))
     return df
+
+
+def lines_frame(spark: SparkSession, jrdd) -> DataFrame:
+    """A JVM JavaRDD[String] as DataFrame[value], with no Python worker."""
+    rdd = spark._jvm.org.apache.spark.api.java.JavaRDD.toRDD(jrdd)
+    strings = spark._jvm.org.apache.spark.sql.Encoders.STRING()
+    return DataFrame(spark._jsparkSession.createDataset(rdd, strings).toDF(), spark)
 
 
 def as_kv(df: DataFrame, col: str = "value") -> DataFrame:

@@ -79,7 +79,7 @@ q.processAllAvailable(); q.stop()
 got = sum(r["n"] for r in spark.table("lc_rollup").collect())
 assert got == n_events, f"stream rollup saw {got} of {n_events} events"
 
-# 3. pipe executable launched from executor-side Python workers
+# 3. pipe executable launched from the executor JVMs
 from mapreduce_simulation_spark.operators.pipe import pipe_map, pipe_reduce
 lines = load_table(spark, sf_dir, "documents").select("text").limit(50)
 mapped = pipe_map(lines, "cat")

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from mapreduce_simulation_spark.operators import pipe
@@ -76,6 +77,45 @@ def test_pipe_reduce_groups_are_contiguous_per_partition(spark, sf_dir):
     assert sorted((r.key, int(r.value)) for r in out) == [
         (f"k{i}", 15 if i < 2 else 14) for i in range(7)
     ]
+
+
+def test_pipe_reduce_sends_null_key_and_value_as_empty(spark):
+    """A NULL key or value reaches the reducer as "" (``a\\t``,
+    ``\\tx``), the way pipe_map sends a NULL line — never the text
+    ``None``, and a NULL key must not fail placement."""
+    kv = spark.createDataFrame([("a", None), (None, "x")], "key string, value string")
+    out = pipe.pipe_reduce(kv, "cat", num_partitions=2).collect()
+    assert sorted((r.key, r.value) for r in out) == [("", "x"), ("a", "")]
+
+
+_LINES = [f"line{i}" for i in range(8)] + ["match"]
+
+
+@pytest.mark.parametrize(
+    "command, lines, expect",
+    [
+        # grep exits 1 in the partitions where nothing matches
+        ("grep match", _LINES, ["match"]),
+        ("sh -c 'cat; exit 3'", _LINES, _LINES),
+        ("no-such-executable-here", _LINES, None),
+        # trailing newlines are stripped before the one terminator
+        ("cat", ["a\n\n", "b\n", None, "c"], ["a", "b", "", "c"]),
+        # an output line also ends at a lone \r (Java's line reader)
+        ("printf 'a\\rb\\n'", _LINES, ["a", "b"] * 4),
+    ],
+    ids=["grep-no-match", "nonzero-exit", "missing", "trailing-newlines", "lone-cr"],
+)
+def test_pipe_executable_contract(spark, command, lines, expect):
+    """Exit codes are ignored except "cannot run" (126/127), as with the
+    reference's unchecked Popen; input and output line rules, over 4
+    partitions (one process each)."""
+    df = spark.createDataFrame([(v,) for v in lines], "line string").repartition(4)
+    out = pipe._pipe(df, command)
+    if expect is None:
+        with pytest.raises(Exception, match="status 127"):
+            out.collect()
+    else:
+        assert sorted(r.value for r in out.collect()) == sorted(expect)
 
 
 def test_md5_mod_partitioning_matches_reference_contract():

@@ -11,7 +11,8 @@ import hashlib
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from mapreduce_simulation_spark.operators.pipe import _md5_mod, _split_kv
+from mapreduce_simulation_spark.operators.pipe import _md5_mod, _md5_mod_col
+from mapreduce_simulation_spark.sources.text_dir import as_kv
 
 # Text without newlines (a "line" by construction); tabs allowed. Lone
 # surrogates are excluded (category Cs): reference keys come from decoded
@@ -25,19 +26,18 @@ line_text = st.text(
 )
 
 
-@given(line_text)
-@settings(max_examples=300, deadline=None)
-def test_split_kv_matches_reference_partition_semantics(line):
-    """key must equal line.partition('\\t')[0] and value the remainder —
-    the reference's exact rule, including the no-tab ('' value) and
-    leading-tab ('' key) edges."""
-    key, value = _split_kv(line)
-    head, sep, tail = line.partition("\t")
-    assert key == head
-    assert value == tail
-    # reconstruction: splitting is lossless when a tab was present
-    if sep:
-        assert f"{key}\t{value}" == line
+@given(st.lists(line_text, max_size=50))
+@settings(max_examples=60, deadline=None)
+def test_split_kv_matches_reference_partition_semantics(spark, lines):
+    """as_kv (the engine's only key/value splitter) must give key =
+    line.partition('\\t')[0] and value = the remainder — the reference's
+    exact rule, including the no-tab ('' value) and leading-tab ('' key)
+    edges, which every batch carries. One Spark job per batch."""
+    lines = [*lines, "no tab", "\tleading tab", "two\ttabs\there"]
+    df = spark.createDataFrame([(ln,) for ln in lines], "value string")
+    got = [(r.key, r.value) for r in as_kv(df).collect()]
+    want = [(head, tail) for head, _, tail in (ln.partition("\t") for ln in lines)]
+    assert got == want
 
 
 @given(line_text, st.integers(min_value=1, max_value=1000))
@@ -50,6 +50,22 @@ def test_md5_mod_range_and_stability(key, n):
     assert 0 <= p < n
     assert p == _md5_mod(key, n)
     assert p == int(hashlib.md5(key.encode("utf-8")).hexdigest(), 16) % n
+
+
+@given(
+    st.lists(line_text, min_size=1, max_size=50),
+    st.one_of(st.integers(min_value=1, max_value=1000), st.just(2**31 - 1)),
+)
+@settings(max_examples=60, deadline=None)
+def test_md5_mod_column_matches_reference_hash(spark, keys, n):
+    """The JVM placement column pipe_reduce shuffles on equals the
+    reference statement _md5_mod for every key, up to n = 2**31 - 1 (its
+    Horner steps must fit a long). One Spark job per batch."""
+    from pyspark.sql import functions as F
+
+    df = spark.createDataFrame([(k,) for k in keys], "key string")
+    placed = df.select(_md5_mod_col(F.col("key"), n).alias("p"))
+    assert [r.p for r in placed.collect()] == [_md5_mod(k, n) for k in keys]
 
 
 @given(st.lists(line_text, max_size=50), st.integers(min_value=1, max_value=8))

@@ -10,7 +10,8 @@ with an N-way split floor (sources/text_dir.py), the executable
 mapper/reducer pipeline with md5-mod partitioning and byte-sorted groups
 (operators/pipe.py, golden-parity-tested against the reference's own
 outputs), and M tab-separated `part-{NNNNN}` files written into a fresh
-output directory (sources/sinks.py — the reference's rmtree semantics).
+output directory by submit_job's saveAsTextFile (the reference's rmtree
+semantics).
 
     python tools/mr_submit.py \
         --input tests/testdata/input --output /tmp/out \
