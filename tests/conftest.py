@@ -1,6 +1,7 @@
-"""Shared fixtures: one SparkSession per test run (session startup ~6 s —
-amortize it), sf0.001 data for speed, DuckDB connection with the same views
-the driver registers."""
+"""Shared fixtures: one SparkSession per test run (session startup ~4 s
+from the driver JVM's AppCDS archive, plus a one-time ~30 s dump when the
+archive is missing — amortize it), sf0.001 data for speed, DuckDB
+connection with the same views the driver registers."""
 
 from __future__ import annotations
 
