@@ -354,6 +354,10 @@ def minhash_dedup_gate(doc_stream: DataFrame) -> DataFrame:
 # PLANS.md round-13 notes).
 COMPACT_DELTA_THRESHOLD = 16
 
+# What the band-index gate writes: verdict deltas and claims bases.
+_VERDICTS_SCHEMA = "doc_id long, band int, key string, dup int"
+_CLAIMS_SCHEMA = "band int, key string"
+
 
 def _log_ids(root: str, prefix: str) -> list[int]:
     """Sorted ids of the committed ``<prefix><id>`` dirs under ``root``
@@ -373,7 +377,8 @@ def _prior_claims(
     """The (band, key) buckets claimed by batches below ``batch_id``: the
     newest claims base below it plus the ``dup = 0`` rows of the verdict
     deltas after that base. Distinct, so a probe join cannot multiply
-    rows; None when nothing is claimed yet."""
+    rows; None when nothing is claimed yet. Both are read with the
+    schema the gate writes, so no job infers it from a parquet footer."""
     import os
     from functools import reduce
 
@@ -388,7 +393,9 @@ def _prior_claims(
     parts = []
     if base >= 0:
         parts.append(
-            spark.read.parquet(os.path.join(index_root, f"base_{base:05d}"))
+            spark.read.schema(_CLAIMS_SCHEMA).parquet(
+                os.path.join(index_root, f"base_{base:05d}")
+            )
         )
     deltas = [
         os.path.join(verdict_root, f"delta_{i:05d}")
@@ -397,7 +404,8 @@ def _prior_claims(
     ]
     if deltas:
         parts.append(
-            spark.read.parquet(*deltas)
+            spark.read.schema(_VERDICTS_SCHEMA)
+            .parquet(*deltas)
             .where(F.col("dup") == 0)
             .select("band", "key")
         )

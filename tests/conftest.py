@@ -1,7 +1,9 @@
 """Shared fixtures: one SparkSession per test run (session startup ~4 s
-from the driver JVM's AppCDS archive, plus a one-time ~30 s dump when the
-archive is missing — amortize it), sf0.001 data for speed, DuckDB
-connection with the same views the driver registers."""
+from the driver JVM's AppCDS archive, plus a one-time ~30–50 s dump when the
+archive is missing — amortize it; the driver JVM runs under the engine's
+short-session compile policy, session.JIT_POLICY, like every session),
+sf0.001 data for speed, DuckDB connection with the same views the driver
+registers."""
 
 from __future__ import annotations
 

@@ -1,4 +1,5 @@
-"""The driver JVM's class-data archive (session._archive_flag).
+"""The driver JVM's class-data archive (session._archive_flag) and its
+compile policy (session.JIT_POLICY).
 
 ``build_session`` dumps a dynamic AppCDS archive once per JDK and Spark jar
 set under ``$XDG_CACHE_HOME/spark-graft`` and starts every later driver JVM
@@ -10,6 +11,11 @@ classpath starts with the cache's own empty conf dir. So the cases that need
 a good archive share the one cache the ``dumped`` fixture fills with a real
 dump, swapping files in and out of it; only the truncated-archive case pays
 for a second dump.
+
+The compile policy applies with or without an archive. The cases read its
+flags back from the running JVM (HotSpotDiagnosticMXBean), not from the
+argv: Spark adds -XX:+IgnoreUnrecognizedVMOptions, so a misspelled flag
+would pass unseen there.
 """
 
 from __future__ import annotations
@@ -40,6 +46,9 @@ spark = session.build_session("appcds", master="local[1]", shuffle_partitions=1,
 jvm = spark._jvm
 with open("/proc/%d/maps" % jvm.ProcessHandle.current().pid()) as fh:
     mapped = sorted({l.split()[-1] for l in fh if l.rstrip().endswith(".jsa")})
+diag = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+    jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean"))
+names = [o[len("-XX:"):].split("=")[0] for o in session.JIT_POLICY.split()]
 print("RESULT " + json.dumps({
     "count": spark.range(10).count(),
     "opts": spark.conf.get("spark.driver.extraJavaOptions", None),
@@ -47,6 +56,7 @@ print("RESULT " + json.dumps({
     "probe_conf": spark.conf.get("spark.graft.probe", None),
     "probe_prop": jvm.System.getProperty("graft.probe"),
     "mapped": mapped,
+    "vm": {n: diag.getVMOption(n).getValue() for n in names},
 }))
 spark.stop()
 """
@@ -86,10 +96,17 @@ def _no_archive_flag(res: dict) -> bool:
     return not [o for o in _opts(res) if "SharedArchiveFile" in o]
 
 
-def _assert_valid_and_mapped(archive: str, res: dict) -> None:
+def _policy(**override: str) -> dict:
+    """session.JIT_POLICY as name -> value, with ``override`` applied."""
+    flags = dict(o[len("-XX:"):].split("=") for o in session.JIT_POLICY.split())
+    return {**flags, **override}
+
+
+def _assert_valid_and_mapped(archive: str, res: dict, policy: dict | None = None) -> None:
     assert session._committed(archive)
     assert f"-XX:SharedArchiveFile={archive}" in _opts(res)
     assert archive in res["mapped"]
+    assert res["vm"] == (policy or _policy())
 
 
 def _dump_log_mtime(archive: str) -> float:
@@ -196,15 +213,18 @@ def test_real_conf_dir_is_read_and_keeps_the_archive_out(dumped, tmp_path):
     assert res["probe_conf"] == "1"
     assert res["conf_dir"] == conf
     assert _no_archive_flag(res)
+    assert res["vm"] == _policy()  # the compile policy applies without the archive
 
 
 def test_user_driver_java_options_follow_the_archive_flag(dumped):
     xdg, conf, archive, _ = dumped
-    res = _run(xdg, conf, extra_conf={"spark.driver.extraJavaOptions": "-Dgraft.probe=1"})
+    user = "-Dgraft.probe=1 -XX:CICompilerCount=3"
+    res = _run(xdg, conf, extra_conf={"spark.driver.extraJavaOptions": user})
     opts = _opts(res)
     assert opts.index(f"-XX:SharedArchiveFile={archive}") < opts.index("-Dgraft.probe=1")
     assert res["probe_prop"] == "1"
-    _assert_valid_and_mapped(archive, res)
+    # the user's flag comes after the policy's, so it is the one in effect
+    _assert_valid_and_mapped(archive, res, _policy(CICompilerCount="3"))
 
 
 def test_concurrent_build_waits_for_the_dump_and_uses_it(dumped):
@@ -232,6 +252,7 @@ def test_failed_dump_leaves_no_file_and_is_not_retried(tmp_path):
     archive = _archive(xdg)
     res = _run(xdg, conf, mode="fail")
     assert res["count"] == 10 and _no_archive_flag(res)
+    assert res["vm"] == _policy()
     assert sorted(os.listdir(os.path.dirname(archive))) == sorted(
         ["conf", "dump.lock", "dump.log", os.path.basename(archive) + ".failed"]
     )
@@ -239,5 +260,6 @@ def test_failed_dump_leaves_no_file_and_is_not_retried(tmp_path):
     log_mtime = _dump_log_mtime(archive)
     res = _run(xdg, conf)
     assert res["count"] == 10 and _no_archive_flag(res)
+    assert res["vm"] == _policy()
     assert not os.path.exists(archive)
     assert _dump_log_mtime(archive) == log_mtime
