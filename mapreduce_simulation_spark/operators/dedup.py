@@ -689,6 +689,11 @@ def narrow_minhash_bands(docs: DataFrame) -> DataFrame:
     )
 
 
+# The (band, key) bucket the ingestion gates' banders emit per doc and band;
+# the band-index gate (streaming/stateful.py) persists and reads it back.
+BUCKET_SCHEMA = "band int, key string"
+
+
 def _arrow_signature_mapper(docs: DataFrame, perms, emit) -> DataFrame:
     """Shared streaming-legal numpy pipeline behind the ingestion gates:
     tokenize → char-fold → 3-gram shingle → per-doc min over each (a, b)
@@ -804,7 +809,7 @@ def _arrow_signature_mapper(docs: DataFrame, perms, emit) -> DataFrame:
                 sig[:, i] = np.minimum.reduceat((u_sh * a + b) % P, seg)
             yield emit(ids, sig)
 
-    return docs.mapInPandas(batches, "doc_id long, band int, key string")
+    return docs.mapInPandas(batches, f"doc_id long, {BUCKET_SCHEMA}")
 
 
 def narrow_minhash_bands_arrow(docs: DataFrame) -> DataFrame:

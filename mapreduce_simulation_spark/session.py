@@ -24,7 +24,8 @@ Defaults are chosen for the 100 TB design point but harmless locally:
     than JDK 17's thresholds, spend that CPU on the code that runs long
     enough to repay it; C1 still compiles the rest at once. Executors of a
     real cluster are long-lived and keep the default tiering; in local
-    mode the driver runs the tasks
+    mode the driver runs the tasks. Measured at 4 vCPUs only (see
+    JIT_POLICY)
 """
 
 from __future__ import annotations
@@ -32,6 +33,7 @@ from __future__ import annotations
 import fcntl
 import hashlib
 import os
+import re
 import shutil
 import subprocess
 import sys
@@ -49,6 +51,9 @@ CODEGEN_CACHE_ENTRIES = 8192
 # and the Tier4 (C2) thresholds at 3x their JDK 17 defaults. C1-only cut
 # the analytics workload's cold CPU by more but made its warm passes 26 %
 # slower; 10x thresholds also cost wall time beyond the run-to-run spread.
+# Measured only on a 4-vCPU host, where the JDK's own count is 3; on larger
+# local hosts, where it grows and the driver runs every task, the wall-time
+# effect is unmeasured.
 JIT_POLICY = (
     "-XX:CICompilerCount=2 -XX:Tier4InvocationThreshold=15000"
     " -XX:Tier4MinInvocationThreshold=1800 -XX:Tier4CompileThreshold=45000"
@@ -76,6 +81,11 @@ spark.stop()
 """
 _DUMP_TIMEOUT_S = 600
 
+# Where build_session puts the archive flag and JIT_POLICY. Spark places
+# it before spark.driver.extraJavaOptions, so the user's options and a
+# spark-defaults.conf's keep their key and come last.
+_DEFAULT_JAVA_OPTIONS = "spark.driver.defaultJavaOptions"
+
 
 def build_session(
     app_name: str = "mapreduce-simulation-spark",
@@ -97,9 +107,9 @@ def build_session(
 
     ensure_protobuf()
     extra_conf = dict(extra_conf or {})
-    opts = _driver_java_options(extra_conf.get("spark.driver.extraJavaOptions"))
+    opts = _driver_default_java_options(extra_conf)
     if opts:
-        extra_conf["spark.driver.extraJavaOptions"] = opts
+        extra_conf[_DEFAULT_JAVA_OPTIONS] = opts
 
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
@@ -132,20 +142,46 @@ def build_session(
     return builder.getOrCreate()
 
 
-def _driver_java_options(user: str | None) -> str | None:
-    """The driver JVM's options: the archive flag (if any), then JIT_POLICY,
-    then the user's options, so that a user flag wins. Only the user's when
-    a JVM already exists: this process has started one, or
-    ``PYSPARK_GATEWAY_PORT`` is set (under spark-submit and inside the
-    dump itself), so nothing here would reach it."""
+def _driver_default_java_options(conf: dict[str, str]) -> str | None:
+    """``spark.driver.defaultJavaOptions`` for the driver JVM about to start:
+    the archive flag (if any), then JIT_POLICY, then the value Spark would
+    have used (``conf``'s, else the conf dir's spark-defaults.conf), so a
+    flag set there wins. Spark puts ``spark.driver.extraJavaOptions`` after
+    all of it and this leaves that key alone. None when a JVM already
+    exists: this process has started one, or ``PYSPARK_GATEWAY_PORT`` is
+    set (under spark-submit and inside the dump), so nothing here would
+    reach it."""
     from pyspark import SparkContext
+    from pyspark.find_spark_home import _find_spark_home
 
     if "PYSPARK_GATEWAY_PORT" in os.environ or SparkContext._gateway is not None:
-        return user
-    return " ".join(o for o in (_archive_flag(), JIT_POLICY, user) if o)
+        return None
+    spark_home = _find_spark_home()
+    conf_dir = os.environ.get("SPARK_CONF_DIR") or os.path.join(spark_home, "conf")
+    theirs = conf.get(_DEFAULT_JAVA_OPTIONS, _conf_file_value(conf_dir, _DEFAULT_JAVA_OPTIONS))
+    return " ".join(o for o in (_archive_flag(spark_home, conf_dir), JIT_POLICY, theirs) if o)
 
 
-def _archive_flag() -> str | None:
+def _conf_file_value(conf_dir: str, key: str) -> str | None:
+    """``key``'s value in ``conf_dir``/spark-defaults.conf, which Spark reads
+    as a java.util.Properties file: ``#`` and ``!`` comments, a backslash
+    joins the next line, the key ends at whitespace, ``=`` or ``:``, the
+    last entry wins and the value is trimmed. Other Properties escapes
+    (``\\uXXXX``, an escaped separator in a key) are not decoded."""
+    try:
+        with open(os.path.join(conf_dir, "spark-defaults.conf")) as fh:
+            text = re.sub(r"\\\r?\n[ \t\f]*", "", fh.read())
+    except OSError:
+        return None
+    value = None
+    for line in text.splitlines():
+        m = re.match(r"[ \t\f]*([^\s=:#!][^\s=:]*)[ \t\f]*[=:]?(.*)", line)
+        if m and m.group(1) == key:
+            value = m.group(2).strip()
+    return value
+
+
+def _archive_flag(spark_home: str, conf_dir: str) -> str | None:
     """``-XX:SharedArchiveFile=<archive>`` for the driver JVM about to start,
     dumping the archive first if this JDK and jar set has none yet.
 
@@ -158,10 +194,6 @@ def _archive_flag() -> str | None:
     setting changes. That dir is on the classpath the archive records, so
     an archive maps only from the cache dir it was dumped in.
     """
-    from pyspark.find_spark_home import _find_spark_home
-
-    spark_home = _find_spark_home()
-    conf_dir = os.environ.get("SPARK_CONF_DIR") or os.path.join(spark_home, "conf")
     try:
         if not all(n.endswith(".template") for n in os.listdir(conf_dir)):
             return None

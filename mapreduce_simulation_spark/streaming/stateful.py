@@ -354,10 +354,6 @@ def minhash_dedup_gate(doc_stream: DataFrame) -> DataFrame:
 # PLANS.md round-13 notes).
 COMPACT_DELTA_THRESHOLD = 16
 
-# What the band-index gate writes: verdict deltas and claims bases.
-_VERDICTS_SCHEMA = "doc_id long, band int, key string, dup int"
-_CLAIMS_SCHEMA = "band int, key string"
-
 
 def _log_ids(root: str, prefix: str) -> list[int]:
     """Sorted ids of the committed ``<prefix><id>`` dirs under ``root``
@@ -378,11 +374,14 @@ def _prior_claims(
     newest claims base below it plus the ``dup = 0`` rows of the verdict
     deltas after that base. Distinct, so a probe join cannot multiply
     rows; None when nothing is claimed yet. Both are read with the
-    schema the gate writes, so no job infers it from a parquet footer."""
+    columns the gate writes and uses, so no job infers a schema from a
+    parquet footer."""
     import os
     from functools import reduce
 
     from pyspark.sql import functions as F
+
+    from ..operators.dedup import BUCKET_SCHEMA
 
     index_root = os.path.join(out_root, "index")
     verdict_root = os.path.join(out_root, "verdicts")
@@ -393,7 +392,7 @@ def _prior_claims(
     parts = []
     if base >= 0:
         parts.append(
-            spark.read.schema(_CLAIMS_SCHEMA).parquet(
+            spark.read.schema(BUCKET_SCHEMA).parquet(
                 os.path.join(index_root, f"base_{base:05d}")
             )
         )
@@ -404,7 +403,7 @@ def _prior_claims(
     ]
     if deltas:
         parts.append(
-            spark.read.schema(_VERDICTS_SCHEMA)
+            spark.read.schema(f"{BUCKET_SCHEMA}, dup int")
             .parquet(*deltas)
             .where(F.col("dup") == 0)
             .select("band", "key")

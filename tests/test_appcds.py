@@ -51,7 +51,7 @@ diag = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
 names = [o[len("-XX:"):].split("=")[0] for o in session.JIT_POLICY.split()]
 print("RESULT " + json.dumps({
     "count": spark.range(10).count(),
-    "opts": spark.conf.get("spark.driver.extraJavaOptions", None),
+    "opts": list(jvm.java.lang.management.ManagementFactory.getRuntimeMXBean().getInputArguments()),  # in order
     "conf_dir": os.environ.get("SPARK_CONF_DIR"),
     "probe_conf": spark.conf.get("spark.graft.probe", None),
     "probe_prop": jvm.System.getProperty("graft.probe"),
@@ -87,13 +87,8 @@ def _run(xdg: str, conf_dir: str, extra_conf: dict | None = None, mode: str = ""
     return json.loads(lines[-1][len("RESULT "):])
 
 
-def _opts(res: dict) -> list[str]:
-    """The driver's JVM options (Spark may add its own module options)."""
-    return (res["opts"] or "").split()
-
-
 def _no_archive_flag(res: dict) -> bool:
-    return not [o for o in _opts(res) if "SharedArchiveFile" in o]
+    return not [o for o in res["opts"] if "SharedArchiveFile" in o]
 
 
 def _policy(**override: str) -> dict:
@@ -104,7 +99,7 @@ def _policy(**override: str) -> dict:
 
 def _assert_valid_and_mapped(archive: str, res: dict, policy: dict | None = None) -> None:
     assert session._committed(archive)
-    assert f"-XX:SharedArchiveFile={archive}" in _opts(res)
+    assert f"-XX:SharedArchiveFile={archive}" in res["opts"]
     assert archive in res["mapped"]
     assert res["vm"] == (policy or _policy())
 
@@ -207,20 +202,27 @@ def test_real_conf_dir_is_read_and_keeps_the_archive_out(dumped, tmp_path):
     conf = str(tmp_path / "conf")
     os.makedirs(conf)
     with open(os.path.join(conf, "spark-defaults.conf"), "w") as fh:
-        fh.write("spark.graft.probe 1\n")
+        fh.write(
+            "spark.graft.probe 1\n"
+            "spark.driver.extraJavaOptions -Dgraft.probe=1\n"
+            "spark.driver.defaultJavaOptions = -XX:CICompilerCount=3\n"
+        )
     res = _run(xdg, conf)
     assert res["count"] == 10
     assert res["probe_conf"] == "1"
+    assert res["probe_prop"] == "1"  # the file's driver options are kept
     assert res["conf_dir"] == conf
     assert _no_archive_flag(res)
-    assert res["vm"] == _policy()  # the compile policy applies without the archive
+    # the compile policy applies without the archive, and the file's
+    # default options follow it, so their flag is the one in effect
+    assert res["vm"] == _policy(CICompilerCount="3")
 
 
 def test_user_driver_java_options_follow_the_archive_flag(dumped):
     xdg, conf, archive, _ = dumped
     user = "-Dgraft.probe=1 -XX:CICompilerCount=3"
     res = _run(xdg, conf, extra_conf={"spark.driver.extraJavaOptions": user})
-    opts = _opts(res)
+    opts = res["opts"]
     assert opts.index(f"-XX:SharedArchiveFile={archive}") < opts.index("-Dgraft.probe=1")
     assert res["probe_prop"] == "1"
     # the user's flag comes after the policy's, so it is the one in effect
@@ -263,3 +265,18 @@ def test_failed_dump_leaves_no_file_and_is_not_retried(tmp_path):
     assert res["vm"] == _policy()
     assert not os.path.exists(archive)
     assert _dump_log_mtime(archive) == log_mtime
+
+
+def test_conf_file_value_reads_spark_defaults_like_spark(tmp_path):
+    (tmp_path / "spark-defaults.conf").write_text(
+        "# spark.driver.defaultJavaOptions -Dcommented=1\n"
+        "  spark.driver.defaultJavaOptions   -Da=1 \\\n"
+        "     -Db=2\n"
+        "spark.driver.extraJavaOptions=-Dc=3\n"
+        "spark.driver.extraJavaOptions : -Dd=4  \n"
+    )
+    read = session._conf_file_value
+    assert read(str(tmp_path), "spark.driver.defaultJavaOptions") == "-Da=1 -Db=2"
+    assert read(str(tmp_path), "spark.driver.extraJavaOptions") == "-Dd=4"  # last wins
+    assert read(str(tmp_path), "spark.graft.absent") is None
+    assert read(str(tmp_path / "absent"), "spark.driver.extraJavaOptions") is None
