@@ -33,14 +33,11 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .caching import persist_tracked
-
 from ..functions import hashing as H
 from ..tables import load_table
-from ..staging import read_staged, stage_once, stage_once_dir
+from ..staging import memoized_plan, read_staged, stage_once, stage_once_dir
 from .dedup import _SHINGLES_SQL, _shingles
 from .text import bigram_pairs, staged_tokenized_docs, tokens
-from .planmemo import memoized_plan
 
 # Held-out "benchmark" slice: a fixed residue class stands in for the eval
 # set a real pipeline would load as its own table.
@@ -1582,17 +1579,14 @@ def _staged_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     unchanged."""
 
     def build() -> DataFrame:
-        big = persist_tracked(
-            staged_tokenized_docs(spark, sf_dir).select(
-                "lang",
-                F.explode(bigram_pairs(F.col("ws"))).alias("p"),
-            ).select(
-                "lang",
-                (
-                    H.char_hash(F.concat_ws(" ", "p.w1", "p.w2"))
-                    % DSIR_BUCKETS
-                ).alias("bucket"),
-            )
+        big = staged_tokenized_docs(spark, sf_dir).select(
+            "lang",
+            F.explode(bigram_pairs(F.col("ws"))).alias("p"),
+        ).select(
+            "lang",
+            (
+                H.char_hash(F.concat_ws(" ", "p.w1", "p.w2")) % DSIR_BUCKETS
+            ).alias("bucket"),
         )
         ct = (
             big.where(F.col("lang") == DSIR_TARGET_LANG)
@@ -2038,8 +2032,8 @@ def ccnet_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     distributed ntile (operators/ranking.py): range partitioning on
     (lang, score) spreads a hot language over many partitions — a plain
     PARTITION BY lang window would put half a web corpus (English) through
-    one task — with per-group positions reassembled from the bounded
-    ≤ P + |langs| row collect. No partition-less or hot-group window
+    one task — with per-group positions reassembled from the ≤ P + |langs|
+    per-(partition, language) totals. No partition-less or hot-group window
     anywhere (asserted in tests/test_plan_shapes.py).
 
     Documents with fewer than 2 tokens have no bigrams and are dropped, as
@@ -2069,9 +2063,7 @@ def _staged_ccnet_lm(
     from a caller-supplied frame — because the artifact is keyed only by
     (sf_dir, tokenizer): training it from whatever frame a caller passed
     would let a filtered/derived frame silently poison (or wrongly serve)
-    the cache shared with every other consumer of the key. Callers that
-    need an LM over a non-full-corpus frame use the inline path in
-    ccnet_buckets_from (spark/sf_dir unset)."""
+    the cache shared with every other consumer of the key."""
     import os
 
     lm = _ccnet_lm_dir(spark, sf_dir)
@@ -2102,7 +2094,7 @@ def _ccnet_lm_dir(spark: SparkSession, sf_dir: str) -> str:
             F.count(F.lit(1)).alias("v")
         ).write.mode("overwrite").parquet(os.path.join(tmp, "v"))
 
-    return stage_once_dir(spark, "ccnet_lm_", f"{sf_dir}|ws_v1", "lm", write)
+    return stage_once_dir("ccnet_lm_", f"{sf_dir}|ws_v1", "lm", write)
 
 
 # Ceiling for broadcasting the folded bigram-type NLL table. Bigram TYPE
@@ -2118,19 +2110,14 @@ NLL_BROADCAST_MAX_BYTES = 256 << 20
 
 
 def _nll_broadcast(
-    spark: SparkSession | None, sf_dir: str | None, nlltab: DataFrame
+    spark: SparkSession, sf_dir: str, nlltab: DataFrame
 ) -> DataFrame:
     """Broadcast ``nlltab`` only while the staged LM artifact is under
     NLL_BROADCAST_MAX_BYTES on disk (a cheap, accurate proxy for its
     deserialized size); above it, return it unhinted so the join plans as
-    a shuffle hash join. On the inline path (no staged artifact to stat)
-    the table derives from the caller's frame — typically a test-scale
-    slice — and is broadcast unconditionally; callers feeding corpus-scale
-    frames inline should go through the staged path instead."""
+    a shuffle hash join."""
     import os
 
-    if spark is None or sf_dir is None:
-        return F.broadcast(nlltab)
     c12_dir = os.path.join(_ccnet_lm_dir(spark, sf_dir), "c12")
     size = 0
     for entry in os.scandir(c12_dir):
@@ -2142,60 +2129,28 @@ def _nll_broadcast(
 
 
 def ccnet_buckets_from(
-    docs: DataFrame,
-    spark: SparkSession | None = None,
-    sf_dir: str | None = None,
+    docs: DataFrame, spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """CCNet banding from a frame carrying a precomputed ``ws`` token-array
     column — the plan-sharing entry curation_pipeline_v2 uses so the
     corpus is tokenized ONCE per pipeline instead of once per verdict
     branch. Unsorted: the public query adds the ORDER BY.
 
-    With ``spark``/``sf_dir`` given, the LM type tables come from the
-    per-corpus staged artifact (see _staged_ccnet_lm); otherwise they are
-    derived inline from ``docs`` (the generic path for arbitrary frames).
+    The LM type tables come from the per-corpus staged artifact of
+    ``sf_dir`` (see _staged_ccnet_lm), so ``docs`` feeds only the bigram
+    explode — a single narrow scan, nothing to persist.
 
     Bigrams are formed ARRAY-SIDE (zip ws with its own tail) — a narrow
     projection, where the earlier posexplode + per-doc lead() window paid
     a corpus-wide shuffle AND sort just to pair each token with its
-    neighbor that the array already held adjacently. The tokenized frame
-    is persisted (skipped if the caller, e.g. the pipeline, already
-    persisted it) and each consumer re-derives its explode narrowly from
-    the cached arrays instead of materializing the exploded tokens.
+    neighbor that the array already held adjacently.
     """
     from .ranking import with_distributed_grouped_ntile
 
-    ws = F.col("ws")
-    if spark is not None and sf_dir is not None:
-        # Staged-LM path: ``docs`` feeds the bigram explode ONCE (the LM
-        # tables come from their own parquet artifact), so caching the
-        # token arrays would cost more than the single narrow re-scan —
-        # no persist.
-        base = docs
-    else:
-        # Inline path: the LM tables are derived from ``docs`` too, so
-        # the tokenized frame has two consumers — persist it (skipped if
-        # the caller already did).
-        base = persist_tracked(docs)
-    big = base.select(
-        "doc_id", "lang", F.explode(bigram_pairs(ws)).alias("p")
+    big = docs.select(
+        "doc_id", "lang", F.explode(bigram_pairs(F.col("ws"))).alias("p")
     ).select("doc_id", "lang", "p.w1", "p.w2")
-    if spark is not None and sf_dir is not None:
-        c12, c1, v = _staged_ccnet_lm(spark, sf_dir)
-        c1 = persist_tracked(c1)
-    else:
-        tok = base.select("doc_id", "lang", F.explode(ws).alias("w1"))
-        c12 = big.groupBy("lang", "w1", "w2").agg(
-            F.count(F.lit(1)).alias("c12")
-        )
-        # c1 is the per-lang unigram TYPE table; per-lang V is exactly
-        # its per-lang row count — deriving it from the persisted c1
-        # replaces a corpus-wide countDistinct expand with a type-table
-        # aggregate.
-        c1 = persist_tracked(
-            tok.groupBy("lang", "w1").agg(F.count(F.lit(1)).alias("c1"))
-        )
-        v = c1.groupBy("lang").agg(F.count(F.lit(1)).alias("v"))
+    c12, c1, v = _staged_ccnet_lm(spark, sf_dir)
     nll = -F.round(
         F.log(
             (F.col("c12") + F.lit(1)).cast("double")

@@ -38,10 +38,8 @@ from pyspark.sql.window import Window
 
 from ..functions import hashing as H
 from ..tables import load_table
-from ..staging import stage_once
-from .caching import persist_tracked
+from ..staging import memoized_plan, stage_once
 from .text import tokens
-from .planmemo import memoized_plan
 
 JACCARD_THRESHOLD = 0.5
 CONTAIN_MIN = 0.8  # containment: emit pairs where either direction >= this
@@ -439,22 +437,20 @@ def _near_dup_pairs(
     pass saves."""
     # The shingle table feeds four consumers (rare-df agg, the capped
     # join, per-doc sizes, and the risky branch) and the capped table
-    # three (both sides of the candidate self-join + rare sizes); without
-    # persists each consumer re-executes the explode+hash+window subtree
-    # (~0.8 s × 4 at sf0.1 — the bulk of the measured 3.6-4.3 s pair
-    # build). Both frames are corpus-linear (one row per distinct
-    # (doc, shingle)) — the spill-backed persist class, released at the
-    # query boundary like every tracked frame.  When the caller supplies
-    # ``sh`` (the staged per-corpus shingle table), the persist covers a
-    # parquet scan instead of the full build.
-    sh = persist_tracked(sh if sh is not None else _shingles(docs))
+    # three (both sides of the candidate self-join + rare sizes). Nothing
+    # is persisted: the one caller hands in the staged shingle table, so
+    # each consumer re-reads a parquet scan instead of re-running the
+    # shingle build, and the pair frame itself is staged once per corpus
+    # (staged_near_dup_pairs).
+    if sh is None:
+        sh = _shingles(docs)
     rare = (
         sh.groupBy("shingle")
         .agg(F.count(F.lit(1)).alias("df"))
         .where(F.col("df") <= SHINGLE_DF_CAP)
         .select("shingle")
     )
-    capped = persist_tracked(sh.join(rare, "shingle"))
+    capped = sh.join(rare, "shingle")
     cand = (
         capped.alias("a")
         .join(

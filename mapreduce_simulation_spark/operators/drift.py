@@ -39,7 +39,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..tables import load_table
-from .planmemo import memoized_plan
+from ..staging import memoized_plan
 
 DRIFT_SPLIT = "1996-01-01"  # reference era: orders strictly before
 DRIFT_BUCKET = 4096  # dollars per histogram bucket (~122 over TPC-H domain)

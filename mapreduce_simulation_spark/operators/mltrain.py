@@ -48,8 +48,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..tables import load_table
-from ..staging import stage_once
-from .planmemo import memoized_plan
+from ..staging import memoized_plan, stage_once
 
 SCALE = 1_000_000
 LOGREG_ITERS = 5
@@ -143,9 +142,7 @@ def distributed_logreg_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     GD iterations; return the coefficient vector (1e-6-scaled and as
     doubles) plus the final training accuracy — 5 rows, bit-identical to
     the oracle's unrolled-CTE replay of the same integer recurrence."""
-    from .caching import persist_tracked, release_tracked
-
-    feat = persist_tracked(_features(spark, sf_dir))
+    feat = _features(spark, sf_dir).persist()
     try:
         w = _train_logreg_weights(feat)
         _z6, s6 = _iteration_exprs(w)
@@ -156,7 +153,7 @@ def distributed_logreg_train(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).collect()[0]
         acc6 = (SCALE * int(acc_row["correct"])) // int(acc_row["n"])
     finally:
-        release_tracked()
+        feat.unpersist()
     rows = [
         (TERM_NAMES[j], w[j], w[j] / SCALE) for j in range(4)
     ] + [("train_acc", acc6, acc6 / SCALE)]
@@ -278,14 +275,12 @@ def _staged_logreg_weights(spark: SparkSession, sf_dir: str) -> list[int]:
     LOGREG_ITERS distributed aggregates with driver-held weights — then
     served from a 4-row parquet. Deterministic integer recurrence, so
     the staged vector is identical to a fresh fit on every host."""
-    from .caching import persist_tracked, release_tracked
-
     def build() -> DataFrame:
-        feat_cached = persist_tracked(_features(spark, sf_dir))
+        feat = _features(spark, sf_dir).persist()
         try:
-            w = _train_logreg_weights(feat_cached)
+            w = _train_logreg_weights(feat)
         finally:
-            release_tracked()
+            feat.unpersist()
         return spark.createDataFrame(
             [(j, w[j]) for j in range(4)], "j int, w bigint"
         ).repartition(1)

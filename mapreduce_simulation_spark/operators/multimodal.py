@@ -25,6 +25,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..staging import memoized_plan, stage_once
 from ..tables import load_table
 
 FEATURE_DIM = 16
@@ -648,24 +649,13 @@ def _ahash_bands(w: int, h: int, px: list[int]) -> list[int]:
     return bands
 
 
-def media_ahash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Perceptual image near-dup: synthesize real PNG containers for the
-    even-id documents, decode them back (stdlib zlib/struct — the same
-    real-parse path as media_decode), average-hash the DECODED pixels,
-    and emit all image pairs within hamming ≤ 3 of each other.
-
-    The pair search is the simhash shape: 4 bands × 16 bits; ≤ 3 bit
-    flips over 4 bands leaves some band identical (pigeonhole), so the
-    banded equi-join is exactly complete, never approximate. Banded
-    shuffle = |images| × 4 small keys; the hamming check is JVM-side
-    xor + bit_count on the candidate pairs.
-
-    Oracle: the synthetic pixel function is arithmetic in doc_id, so the
-    oracle recomputes the sample grid, mean threshold, band keys, banding
-    and hamming in pure SQL — a hash match therefore proves the whole
-    PNG encode → container → decode → perceptual-hash chain lossless,
-    not just the join logic."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
+def _staged_ahash_fp(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, b0..b3): the ahash fingerprints of the even-id documents'
+    synthesized PNGs, COMPUTED ONCE per corpus and served from parquet —
+    the Python PNG encode → container → decode → ahash chain is the
+    expensive Arrow stage, and the pair search reads the fingerprints four
+    times (both banded join sides + the two hamming lookups). Integer
+    columns — bitwise roundtrip."""
 
     def synth(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
@@ -688,19 +678,37 @@ def media_ahash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
                     out[f"b{i}"].append(b[i])
             yield pd.DataFrame(out)
 
-    staged = docs.mapInPandas(synth, schema="doc_id bigint, media binary")
-    # The fingerprint frame is referenced four times (both banded join
-    # sides + the two hamming lookups) and each reference would re-run
-    # the Python PNG encode→decode→ahash chain — the expensive Arrow
-    # stage. Persist the (doc_id, 4×int) rows so the chain runs once.
-    from .caching import persist_tracked
-
-    hashes = persist_tracked(
-        staged.mapInPandas(
-            hash_stage,
-            schema="doc_id bigint, b0 int, b1 int, b2 int, b3 int",
+    def build() -> DataFrame:
+        docs = load_table(spark, sf_dir, "documents").select("doc_id")
+        return docs.mapInPandas(
+            synth, schema="doc_id bigint, media binary"
+        ).mapInPandas(
+            hash_stage, schema="doc_id bigint, b0 int, b1 int, b2 int, b3 int"
         )
-    )
+
+    return stage_once(spark, "ahash_fp_", f"{sf_dir}|png_v1", "fp", build)
+
+
+@memoized_plan
+def media_ahash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Perceptual image near-dup: synthesize real PNG containers for the
+    even-id documents, decode them back (stdlib zlib/struct — the same
+    real-parse path as media_decode), average-hash the DECODED pixels,
+    and emit all image pairs within hamming ≤ 3 of each other. The
+    fingerprints are a staged per-corpus artifact (_staged_ahash_fp).
+
+    The pair search is the simhash shape: 4 bands × 16 bits; ≤ 3 bit
+    flips over 4 bands leaves some band identical (pigeonhole), so the
+    banded equi-join is exactly complete, never approximate. Banded
+    shuffle = |images| × 4 small keys; the hamming check is JVM-side
+    xor + bit_count on the candidate pairs.
+
+    Oracle: the synthetic pixel function is arithmetic in doc_id, so the
+    oracle recomputes the sample grid, mean threshold, band keys, banding
+    and hamming in pure SQL — a hash match therefore proves the whole
+    PNG encode → container → decode → perceptual-hash chain lossless,
+    not just the join logic."""
+    hashes = _staged_ahash_fp(spark, sf_dir)
     banded = hashes.select(
         "doc_id",
         F.explode(

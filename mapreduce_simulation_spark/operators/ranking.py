@@ -11,27 +11,29 @@ helpers keep the total order but distribute the sort:
      ``sortWithinPartitions`` encodes (partition id, row position) with NO
      window node, or a ``_pid``-partitioned running sum for cumsum (a
      partitioned window, never a single-task one);
-  3. per-partition totals (P rows, bounded by the partition count) collected
-     once and re-embedded as a literal prefix-offset map — the "carried-in
-     prefix totals" of the classic two-pass distributed scan.
+  3. per-partition totals (≤ P + G rows: P shuffle partitions, G groups)
+     aggregated from the same range-partitioned frame, folded into
+     carried-in prefix offsets in one array row, and broadcast-joined back
+     on ``_pid`` — the classic two-pass distributed scan, computed inside
+     the plan.
 
-The partitioned frame is persisted before the two passes so the range
-bounds (derived from a sampling pass) are computed exactly once — both the
-counts job and the ranking job read the same materialized partitions, which
-is what makes the (pid → offset) map safe to re-embed.
-
-The driver-side collect is P rows (the shuffle-partition count, not the
-data size) — the same bounded-collect class as broadcasting a dimension
-table, and it is what turns the cross-partition dependency into a map
-lookup instead of a second shuffle.
+Both passes read one range exchange: the totals branch and the row branch
+share it inside the query (``ReusedExchange``; see ``_range_parted`` for
+what keeps column pruning from splitting it), so the range bounds are
+sampled once per execution and the offsets always describe the
+partitioning the rows were ranked in — on every re-execution, with nothing
+persisted and nothing collected to the driver (pinned by
+tests/test_ranking.py). The prefix is folded with array functions rather
+than a window so the executed plans keep no window node at all.
 """
 
 from __future__ import annotations
 
+import operator
+from functools import reduce
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-
-from .caching import persist_tracked
 
 _LOCAL_BITS = 33  # monotonically_increasing_id: pid << 33 | row-in-partition
 _LOCAL_MASK = (1 << _LOCAL_BITS) - 1
@@ -43,29 +45,111 @@ def _num_partitions(df: DataFrame) -> int:
     )
 
 
-def _prefix_offsets(
-    parted: DataFrame, agg: Column
-) -> tuple[dict[int, int], int]:
-    """Collect per-partition totals of ``agg`` (P rows) and fold them into
-    (pid → sum of all earlier partitions' totals, grand total)."""
-    rows = parted.groupBy("_pid").agg(agg.alias("_t")).collect()
-    sizes = {int(r["_pid"]): int(r["_t"]) for r in rows}
-    offsets: dict[int, int] = {}
-    acc = 0
-    for pid in sorted(sizes):
-        offsets[pid] = acc
-        acc += sizes[pid]
-    return offsets, acc
+def _range_parted(df: DataFrame, p: int, keys: list[Column]) -> DataFrame:
+    """``df`` range-partitioned on ``keys`` into ``p`` partitions, each
+    sorted by ``keys`` and then by every column of ``df``.
+
+    The trailing sort keys never move a row under a total order, but they
+    make every consumer of the range exchange read all of its columns. So
+    column pruning cannot give the offsets branch, which needs only the
+    keys, a narrower exchange than the row branch: the two stay one
+    exchange (``ReusedExchange``). Two exchanges would each sample their
+    own range bounds, and the offsets would describe the other one's
+    partitioning."""
+    return df.repartitionByRange(p, *keys).sortWithinPartitions(
+        *keys, *[F.col(c) for c in df.columns]
+    )
 
 
-def _offset_col(offsets: dict[int, int]) -> Column:
-    if not offsets:
-        return F.lit(0).cast("long")
-    pairs: list[Column] = []
-    for pid, off in offsets.items():
-        pairs.append(F.lit(pid))
-        pairs.append(F.lit(off))
-    return F.create_map(*pairs)[F.col("_pid")].cast("long")
+def _with_offsets(
+    parted: DataFrame, keys: list[str], value: Column, *cell: Column
+) -> DataFrame:
+    """``parted`` (which carries ``_pid``) plus, per row, the aggregates of
+    its (``_pid``, ``keys``) cell: ``_pre``, the sum of ``value`` over the
+    same key's earlier partitions, ``_n``, its sum over all of the key's
+    partitions, and each of ``cell``.
+
+    The ≤ P + G cells are gathered into one array row and each cell's sums
+    are folded from that array, so the plan reads ``parted`` only twice
+    (rows and cells) and holds no window. Keys match null-safely, so a
+    NULL group is a group like any other."""
+    kk = [f"_k{i}" for i in range(len(keys))]
+    cells = parted.groupBy(
+        F.col("_pid").alias("_p"),
+        *[F.col(k).alias(a) for k, a in zip(keys, kk)],
+    ).agg(value.alias("_t"), *cell)
+
+    def total(x: Column, earlier: bool) -> Column:
+        """Sum of ``_t`` over the cells of ``x``'s key, or over those in
+        earlier partitions only."""
+
+        def counted(y: Column) -> Column:
+            same = [x[a].eqNullSafe(y[a]) for a in kk]
+            if earlier:
+                same.append(y["_p"] < x["_p"])
+            return reduce(operator.and_, same, F.lit(True))
+
+        return F.aggregate(
+            F.filter("_a", counted),
+            F.lit(0).cast("long"),
+            lambda acc, y: acc + y["_t"],
+        )
+
+    folded = F.transform(
+        "_a",
+        lambda x: x.withField("_pre", total(x, True)).withField(
+            "_n", total(x, False)
+        ),
+    )
+    offsets = (
+        cells.agg(F.collect_list(F.struct(*cells.columns)).alias("_a"))
+        .select(F.inline(folded))
+        .drop("_t")
+    )
+    on = [F.col("_pid") == F.col("_p")] + [
+        F.col(k).eqNullSafe(F.col(a)) for k, a in zip(keys, kk)
+    ]
+    return parted.join(F.broadcast(offsets), reduce(operator.and_, on)).drop(
+        "_p", *kk
+    )
+
+
+def _ranked(
+    df: DataFrame,
+    group_cols: list[str],
+    order_cols: list[Column],
+    num_partitions: int | None,
+) -> DataFrame:
+    """``df`` plus ``_grank``, each row's 1-based position within its group
+    under ``order_cols``, and ``_n``, its group's row count.
+
+    The range partitioner keys on ``(group, order)``, so a hot group
+    spreads over many partitions, each locally sorted. The local index
+    comes from ``monotonically_increasing_id`` (pid in the high bits, row
+    position in the low 33), which is deterministic here because the
+    partition row order is pinned by ``sortWithinPartitions`` over a total
+    order. A group's rows in one partition are contiguous, starting at
+    local index ``_s``."""
+    p = num_partitions or _num_partitions(df)
+    gcols = [F.col(c) for c in group_cols]
+    parted = (
+        _range_parted(df, p, [*gcols, *order_cols])
+        .withColumn("_mid", F.monotonically_increasing_id())
+        .select(
+            "*",
+            F.shiftright("_mid", _LOCAL_BITS).cast("int").alias("_pid"),
+            F.col("_mid").bitwiseAND(F.lit(_LOCAL_MASK)).alias("_loc"),
+        )
+    )
+    return (
+        _with_offsets(
+            parted, group_cols, F.count(F.lit(1)), F.min("_loc").alias("_s")
+        )
+        .withColumn(
+            "_grank", F.col("_pre") + F.col("_loc") - F.col("_s") + F.lit(1)
+        )
+        .drop("_mid", "_pid", "_loc", "_s", "_pre")
+    )
 
 
 def with_distributed_rank(
@@ -78,28 +162,13 @@ def with_distributed_rank(
     (which must be total — include a unique tie-break) without a
     single-partition sort and without any window node.
 
-    Plan shape: Exchange(rangepartitioning) → local Sort → Project.
-    The local index comes from ``monotonically_increasing_id`` (pid in the
-    high bits, row position in the low 33), which is deterministic here
-    because the partition row order is pinned by ``sortWithinPartitions``
-    over a total order.
-    """
-    p = num_partitions or _num_partitions(df)
-    df = persist_tracked(df)  # range sampler + shuffle must not run the
-    # upstream DAG twice: repartitionByRange's RangePartitioner executes
-    # the child once to sample bounds and again for the real exchange.
-    parted = (
-        df.repartitionByRange(p, *order_cols)
-        .sortWithinPartitions(*order_cols)
-        .withColumn("_mid", F.monotonically_increasing_id())
-        .withColumn("_pid", F.shiftright("_mid", _LOCAL_BITS).cast("int"))
+    Plan shape: Exchange(rangepartitioning) → local Sort → Project, joined
+    with the broadcast per-partition offsets."""
+    return (
+        _ranked(df, [], order_cols, num_partitions)
+        .withColumnRenamed("_grank", out_col)
+        .drop("_n")
     )
-    parted = persist_tracked(parted)
-    offsets, _total = _prefix_offsets(parted, F.count(F.lit(1)))
-    local = (F.col("_mid").bitwiseAND(F.lit(_LOCAL_MASK))).cast("long")
-    return parted.withColumn(
-        out_col, _offset_col(offsets) + local + F.lit(1)
-    ).drop("_mid", "_pid")
 
 
 def with_distributed_ntile(
@@ -110,42 +179,10 @@ def with_distributed_ntile(
     num_partitions: int | None = None,
 ) -> DataFrame:
     """Add ``ntile(buckets)`` over the total order ``order_cols`` with the
-    distributed-rank plan (no partition-less window).
-
-    ntile semantics reproduced exactly: with n rows, the first n mod k
-    buckets hold ⌈n/k⌉ rows, the rest ⌊n/k⌋ — a pure integer expression of
-    the global rank once n is known, and n falls out of the same P-row
-    totals collect that builds the prefix offsets.
-    """
-    p = num_partitions or _num_partitions(df)
-    df = persist_tracked(df)  # range sampler + shuffle must not run the
-    # upstream DAG twice: repartitionByRange's RangePartitioner executes
-    # the child once to sample bounds and again for the real exchange.
-    parted = (
-        df.repartitionByRange(p, *order_cols)
-        .sortWithinPartitions(*order_cols)
-        .withColumn("_mid", F.monotonically_increasing_id())
-        .withColumn("_pid", F.shiftright("_mid", _LOCAL_BITS).cast("int"))
-    )
-    parted = persist_tracked(parted)
-    offsets, total = _prefix_offsets(parted, F.count(F.lit(1)))
-    local = (F.col("_mid").bitwiseAND(F.lit(_LOCAL_MASK))).cast("long")
-    ranked = parted.withColumn(
-        "_grank", _offset_col(offsets) + local + F.lit(1)
-    )
-    q, rem = divmod(total, buckets)
-    if q == 0:  # fewer rows than buckets: bucket i holds exactly row i
-        score = "CAST(_grank AS INT)"
-    else:
-        thresh = rem * (q + 1)
-        score = (
-            f"CAST(CASE WHEN _grank <= {thresh} "
-            f"THEN (_grank + {q}) DIV {q + 1} "
-            f"ELSE {rem} + (_grank - {thresh} + {q - 1}) DIV {q} "
-            f"END AS INT)"
-        )
-    return ranked.withColumn(out_col, F.expr(score)).drop(
-        "_mid", "_pid", "_grank"
+    distributed-rank plan (no partition-less window): the grouped ntile
+    with no group."""
+    return with_distributed_grouped_ntile(
+        df, [], order_cols, buckets, out_col, num_partitions
     )
 
 
@@ -164,85 +201,20 @@ def with_distributed_grouped_ntile(
     serial *within* one: every row of a group lands on one task. When the
     grouping is dimension-like but skewed — language over a web corpus,
     where one language is half the data — the hot group becomes a
-    single-task sort at 100 TB. Here the range partitioner keys on
-    ``(group, order)``, so a hot group spreads over many partitions, each
-    locally sorted; per-group positions are reassembled from a bounded
-    driver-side collect.
+    single-task sort at 100 TB. Here a hot group spreads over many range
+    partitions and its positions are reassembled from the per-(partition,
+    group) totals. Groups are contiguous under the range order, so each
+    partition boundary splits at most one group: the totals are ≤ P + G
+    rows. Use this primitive when G is dimension-bounded (languages,
+    sources, priorities); for high-cardinality groups a plain partitioned
+    window is already the right plan — no group is hot enough to matter,
+    and P + G stops being bounded.
 
-    The collect is one row per (partition, group-present-in-partition)
-    pair. Groups are contiguous under the range order, so each partition
-    boundary splits at most one group: the collect is ≤ P + G rows (P =
-    shuffle partitions, G = distinct groups). Use this primitive when G is
-    dimension-bounded (languages, sources, priorities); for high-cardinality
-    groups a plain partitioned window is already the right plan — no group
-    is hot enough to matter, and P + G stops being bounded.
-
-    ntile semantics are per group: with n_g rows, the first n_g mod k
-    buckets hold ⌈n_g/k⌉ rows — evaluated as a column expression because
-    n_g differs per group.
-
-    Group values must be non-null and stringify identically in Python and
-    Spark (strings, ints, booleans — the dimension types this is for):
-    the per-group offsets travel as a string-keyed literal map built from
-    the driver-side collect, and ``str(None)`` has no Spark twin.
+    ntile semantics reproduced exactly: with n_g rows, the first n_g mod k
+    buckets hold ⌈n_g/k⌉ rows, the rest ⌊n_g/k⌋ — a column expression of
+    the group rank and n_g, which differs per group.
     """
-    p = num_partitions or _num_partitions(df)
-    gcols = [F.col(c) for c in group_cols]
-    df = persist_tracked(df)  # see with_distributed_rank: avoid the range
-    # sampler re-executing an expensive upstream DAG (ccnet's LM scoring
-    # ran twice before this persist).
-    parted = (
-        df.repartitionByRange(p, *gcols, *order_cols)
-        .sortWithinPartitions(*gcols, *order_cols)
-        .withColumn("_mid", F.monotonically_increasing_id())
-        .withColumn("_pid", F.shiftright("_mid", _LOCAL_BITS).cast("int"))
-    )
-    parted = persist_tracked(parted)
-    # Bounded collect: (pid, group key, rows of that group in that pid,
-    # local index at which the group starts within the pid).
-    local = (F.col("_mid").bitwiseAND(F.lit(_LOCAL_MASK))).cast("long")
-    stats = (
-        parted.withColumn("_loc", local)
-        .groupBy("_pid", *group_cols)
-        .agg(F.count(F.lit(1)).alias("_cnt"), F.min("_loc").alias("_start"))
-        .collect()
-    )
-    gkey = F.concat_ws("\x00", *[F.col(c).cast("string") for c in group_cols])
-
-    def _row_key(r) -> str:
-        return "\x00".join(str(r[c]) for c in group_cols)
-
-    # Per-group prefix of earlier partitions' counts, and per-group totals.
-    prefix: dict[tuple[str, int], int] = {}
-    start: dict[tuple[str, int], int] = {}
-    totals: dict[str, int] = {}
-    for r in sorted(stats, key=lambda r: int(r["_pid"])):
-        k, pid = _row_key(r), int(r["_pid"])
-        prefix[(k, pid)] = totals.get(k, 0)
-        start[(k, pid)] = int(r["_start"])
-        totals[k] = totals.get(k, 0) + int(r["_cnt"])
-
-    def _map_lit(d: dict) -> Column:
-        if not d:
-            return F.create_map().cast("map<string,long>")
-        pairs: list[Column] = []
-        for k, v in d.items():
-            pairs.append(F.lit(k))
-            pairs.append(F.lit(int(v)))
-        return F.create_map(*pairs)
-
-    pk = F.concat_ws("\x00", gkey, F.col("_pid").cast("string"))
-    prefix_m = _map_lit({f"{k}\x00{pid}": v for (k, pid), v in prefix.items()})
-    start_m = _map_lit({f"{k}\x00{pid}": v for (k, pid), v in start.items()})
-    totals_m = _map_lit(totals)
-    ranked = parted.withColumn("_loc", local).select(
-        "*",
-        (prefix_m[pk] + F.col("_loc") - start_m[pk] + F.lit(1)).alias(
-            "_grank"
-        ),
-        totals_m[gkey].alias("_n"),
-    )
-    # Column-wise ntile arithmetic (n_g varies per group).
+    ranked = _ranked(df, group_cols, order_cols, num_partitions)
     q = (F.col("_n") / buckets).cast("long")
     rem = F.col("_n") % buckets
     thresh = rem * (q + 1)
@@ -254,9 +226,7 @@ def with_distributed_grouped_ntile(
         )
         .otherwise(rem + ((F.col("_grank") - thresh + q - 1) / q).cast("long"))
     )
-    return ranked.withColumn(out_col, bucket.cast("int")).drop(
-        "_mid", "_pid", "_loc", "_grank", "_n"
-    )
+    return ranked.withColumn(out_col, bucket.cast("int")).drop("_grank", "_n")
 
 
 def with_distributed_cumsum(
@@ -272,20 +242,13 @@ def with_distributed_cumsum(
 
     The window is partitioned by the range-shard id — P concurrent sorts of
     1/P of the data each, never ``Exchange SinglePartition`` — and each
-    shard's carried-in prefix (the sum of all earlier shards) is a literal
-    from the bounded P-row totals collect. Identical arithmetic to the
-    global-window form: cumsum(row) = shard_prefix + local_cumsum(row).
+    shard's carried-in prefix (the sum of all earlier shards) comes from
+    the per-shard totals. Identical arithmetic to the global-window form:
+    cumsum(row) = shard_prefix + local_cumsum(row).
     """
     p = num_partitions or _num_partitions(df)
-    df = persist_tracked(df)  # see with_distributed_rank: one upstream
-    # execution shared by the range sampler and the exchange.
-    parted = (
-        df.repartitionByRange(p, *order_cols)
-        .withColumn("_pid", F.spark_partition_id())
-    )
-    parted = persist_tracked(parted)
-    offsets, _total = _prefix_offsets(
-        parted, F.coalesce(F.sum(value_col), F.lit(0)).cast("long")
+    parted = _range_parted(df, p, order_cols).withColumn(
+        "_pid", F.spark_partition_id()
     )
     upper = 0 if include_current else -1
     w = (
@@ -294,6 +257,10 @@ def with_distributed_cumsum(
         .rowsBetween(Window.unboundedPreceding, upper)
     )
     local = F.coalesce(F.sum(value_col).over(w), F.lit(0)).cast("long")
-    return parted.withColumn(out_col, _offset_col(offsets) + local).drop(
-        "_pid"
+    return (
+        _with_offsets(
+            parted, [], F.coalesce(F.sum(value_col), F.lit(0)).cast("long")
+        )
+        .withColumn(out_col, F.col("_pre") + local)
+        .drop("_pid", "_pre", "_n")
     )

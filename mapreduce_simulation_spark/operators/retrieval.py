@@ -44,10 +44,9 @@ from pyspark.sql.window import Window
 
 
 from ..tables import load_table
-from ..staging import stage_once
+from ..staging import memoized_plan, stage_once
 from .similarity import _as_double, _dot, _norm
 from .text import tokens
-from .planmemo import memoized_plan
 
 K1 = 1.2
 B = 0.75

@@ -42,9 +42,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 from pyspark.sql.window import Window
 
-from .caching import persist_tracked
-from .planmemo import memoized_plan
-
+from ..staging import memo, memoized_plan
 from ..tables import load_table
 
 N_QUERIES = 10  # query set = vec_id < 10
@@ -136,10 +134,9 @@ def brute_force_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Physical shape: broadcast(queries) ⋈ corpus — a map-side nested loop,
     no shuffle except the final per-query top-k (rank window on 10 keys).
     """
-    from .planmemo import memo
 
     # plan memo (r17): ~0.2 s of py4j per build, re-paid by every audit /
-    # rerank caller; deps auto-recorded (see operators/planmemo.py).
+    # rerank caller; deps auto-recorded (see staging.py).
     return memo(
         spark,
         ("brute_force_topk", sf_dir),
@@ -571,7 +568,7 @@ def _lsh_serve(
     one flip per sign bit, so it widens with the signature.
 
     The full-block plan is built once per (session, sf_dir, n_planes,
-    staged-index generation) and memoized (operators/planmemo.py, plan
+    staged-index generation) and memoized (staging.memo, plan
     CONSTRUCTION measured 0.9-1.1 s of py4j per call at sf0.1 — paid per
     micro-batch by streaming_lsh_serve before r17); an id list is served
     by filtering the prepared plan. Catalyst pushes the query_id IN-list
@@ -584,7 +581,6 @@ def _lsh_serve(
     (pinned by test_streaming_lsh_serve_survives_index_restaging). Ids
     outside the query block are never produced by the query stream (it
     is staged AS the block), so block∧ids ≡ ids here."""
-    from .planmemo import memo
 
     def build() -> DataFrame:
         corpus = _corpus_with_norm(spark, sf_dir)
@@ -798,7 +794,6 @@ def streaming_lsh_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     stage = stage_once_dir(
-        spark,
         "lsh_query_stream_",
         f"sf={sf_dir}",
         "queries",
@@ -1012,7 +1007,6 @@ def streaming_lsh_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.stateful import drain_delta_log
 
     stage = stage_once_dir(
-        spark,
         "lsh_ingest_stream_",
         f"sf={sf_dir}",
         "vectors",
@@ -1199,7 +1193,6 @@ def ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         parquet at query time (index build vs. query serve), like every
         artifact in the staged tier.
     """
-    from .planmemo import memo
 
     def build() -> DataFrame:
         corpus = _corpus_with_norm(spark, sf_dir)
@@ -1216,7 +1209,7 @@ def ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # plan memo (r17): the probe/re-score plan is ~0.3 s of py4j to build;
     # serve it prepared, deps (fixture scan + staged assignment)
-    # auto-recorded — see operators/planmemo.py.
+    # auto-recorded — see staging.py.
     return memo(spark, ("ivf_topk", sf_dir), build)
 
 
@@ -1360,7 +1353,6 @@ def _staged_trained_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     (k rows) and broadcast at search time. Seeded fit + parquet
     double roundtrip → the staged codebook is bit-identical to the
     in-path one, so recall/results are unchanged."""
-    from .planmemo import memo
 
     def build() -> DataFrame:
         centers = _int_lloyd(_int_train_sample(spark, sf_dir), N_CENTROIDS)
@@ -1409,7 +1401,6 @@ def ivf_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact value-hash check; the recall floor vs brute force is asserted
     in tests too.
     """
-    from .planmemo import memo
 
     def build() -> DataFrame:
         corpus = _corpus_with_norm(spark, sf_dir)
@@ -1746,7 +1737,6 @@ def ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     sibling of similarity_ivf_topk. Exact value-hash oracle (both
     engines produce identical top-k sets, so counts divide identically).
     """
-    from .planmemo import memo
 
     def build() -> DataFrame:
         searches = (
@@ -2135,7 +2125,6 @@ def _staged_pq_index(
         codes.write.mode("overwrite").parquet(os.path.join(tmp, "codes"))
 
     index = stage_once_dir(
-        spark,
         "pq_idx_",
         f"{sf_dir}|m{PQ_SUBSPACES}k{PQ_CODEBOOK}i{CB_ITERS}"
         f"cap{TRAIN_CAP}_v3",
@@ -2177,7 +2166,6 @@ def pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the PQ result exactly; the recall floor vs brute force
     (PQ_TOPK_ORACLE_SQL ground truth) is asserted in tests as well.
     """
-    from .planmemo import memo
 
     def build() -> DataFrame:
         corpus = _corpus_with_norm(spark, sf_dir)
@@ -2186,7 +2174,7 @@ def pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # plan memo (r17): the LUT/ADC/refine plan is ~0.4 s of py4j to
     # build; serve it prepared, deps (fixture scan + the two staged PQ
-    # artifacts) auto-recorded — see operators/planmemo.py.
+    # artifacts) auto-recorded — see staging.py.
     return memo(spark, ("pq_topk", sf_dir), build)
 
 

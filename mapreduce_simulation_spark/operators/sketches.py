@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 
 from ..functions import hashing as H
 from ..tables import load_table
-from .planmemo import memoized_plan
+from ..staging import memoized_plan
 
 # ---------------------------------------------------------------------------
 # Quantile sketch: fixed-width dyadic histogram, sum-mergeable.

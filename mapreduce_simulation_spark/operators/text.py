@@ -15,12 +15,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .caching import persist_tracked
-
 from ..functions.hashing import char_hash
 from ..tables import load_table
-from ..staging import stage_once
-from .planmemo import memoized_plan
+from ..staging import memoized_plan, stage_once
 
 # Tiny multilingual stopword marker sets for the language-ID heuristic.
 LANG_MARKERS: dict[str, tuple[str, ...]] = {

@@ -18,8 +18,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..tables import load_table
-from ..staging import read_staged
-from ..operators.planmemo import memoized_plan
+from ..staging import memoized_plan, read_staged
 
 
 def json_props_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3519,7 +3518,6 @@ def dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..staging import stage_once_dir
 
     stage = stage_once_dir(
-        spark,
         "dpp_orders_",
         sf_dir,
         "",

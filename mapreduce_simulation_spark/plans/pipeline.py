@@ -24,7 +24,7 @@ from ..functions import hashing as H
 from ..operators import text as T
 from ..operators.dedup import JACCARD_THRESHOLD, _pair_jaccard, _shingles
 from ..tables import load_table
-from ..operators.planmemo import memoized_plan
+from ..staging import memoized_plan
 
 MIN_QUALITY = 0.5
 

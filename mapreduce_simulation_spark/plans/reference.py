@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..tables import load_table
-from ..operators.planmemo import memoized_plan
+from ..staging import memoized_plan
 
 # Case-insensitive substring, mirroring grep_map.py:14-29's default query
 # ("product" in the reference corpus; our corpus vocabulary differs).

@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
 from ..tables import load_table
-from ..operators.planmemo import memoized_plan
+from ..staging import memoized_plan
 
 
 def _dec_sum(expr, alias: str, prec: str = "decimal(22,4)"):

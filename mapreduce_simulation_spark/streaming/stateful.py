@@ -608,7 +608,7 @@ def stage_stream_source(
         )
         df.write.mode("overwrite").parquet(path)
 
-    return stage_once_dir(spark, prefix, f"sf={sf_dir}", "", write)
+    return stage_once_dir(prefix, f"sf={sf_dir}", "", write)
 
 
 def drain_delta_log(

@@ -37,20 +37,22 @@ def table_path(sf_dir: str, name: str) -> str:
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one star-schema table. Parquet scan → Catalyst prunes/pushes.
-    Served through the per-session read cache (``staging.cached_read``)
-    and noted as a plan-memo dependency.
+    Served through the per-session read cache (``staging.cached_read``),
+    which records the table as a source of any plan or artifact being
+    built.
 
     ``events.ts`` has shipped as both TIMESTAMP(NANOS) (which Spark reads as
     nano-longs under ``nanosAsLong``) and plain ``timestamp[us]``; we detect
     which from the loaded dtype and convert only the legacy nanos case,
     truncating to microseconds exactly as DuckDB coerces ns→µs so oracle
     comparisons stay exact. Integer division (``div``), not float: ~1.7e18 ns
-    overflows a double's 53-bit mantissa.
+    overflows a double's 53-bit mantissa. Loading ``events`` pins the
+    session confs this relies on (``nanosAsLong``, UTC session zone) at load
+    time: a plan served from the plan memo is not loaded again, so its pins
+    are the ones its build made.
     """
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
-    from .operators.planmemo import note_dep
-
     path = table_path(sf_dir, name)
     if name == "events":
         # The events session confs are an engine contract, re-pinned on
@@ -64,9 +66,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # the edge, not via the session zone.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         spark.conf.set("spark.sql.session.timeZone", "UTC")
-    df = cached_read(spark, path, lambda: _read(spark, path, name))
-    note_dep(("table", sf_dir, name), df)
-    return df
+    return cached_read(spark, path, lambda: _read(spark, path, name))
 
 
 def _read(spark: SparkSession, path: str, name: str) -> DataFrame:

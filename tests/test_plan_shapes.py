@@ -14,14 +14,8 @@ from mapreduce_simulation_spark.plans import registry
 
 
 def _plan(spark, sf_dir, name: str) -> str:
-    # Shape assertions must see the from-scratch plan: a persisted frame
-    # left over from an earlier test substitutes an InMemoryRelation whose
-    # INNER plan text inflates the exchange counts (seen with the shared
-    # shingle table after _near_dup_pairs gained tracked persists).
-    from mapreduce_simulation_spark.operators.caching import release_tracked
-    from mapreduce_simulation_spark.operators.planmemo import forget_session
+    from mapreduce_simulation_spark.staging import forget_session
 
-    release_tracked()
     spark.catalog.clearCache()
     # Plan memos return the SAME DataFrame object across calls; once an
     # earlier test has executed it, its QueryExecution prints the AQE

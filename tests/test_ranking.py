@@ -5,6 +5,8 @@ n < buckets edge of ntile."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
@@ -134,12 +136,14 @@ def test_grouped_ntile_matches_partitioned_window(spark):
         with_distributed_grouped_ntile,
     )
 
-    # skewed groups: one hot group with 200 rows, two small ones, plus a
-    # group smaller than the bucket count (the q == 0 edge per group)
+    # skewed groups: one hot group with 200 rows, two small ones, a group
+    # smaller than the bucket count (the q == 0 edge per group), and a
+    # NULL group, which the partitioned window buckets like any other
     rows = (
         [("hot", (i * 7) % 13, i) for i in range(200)]
         + [("mid", i % 5, 1000 + i) for i in range(23)]
         + [("tiny", i, 2000 + i) for i in range(2)]
+        + [(None, i % 3, 3000 + i) for i in range(10)]
     )
     df = spark.createDataFrame(rows, "grp string, v long, id long")
     order = [F.asc("v"), F.asc("id")]
@@ -178,132 +182,51 @@ def test_grouped_ntile_partition_count_invariant(spark):
         assert got == base, f"bucket assignment changed at P={p}"
 
 
-def test_release_tracked_clears_persisted_frames(spark, tied):
-    """Each primitive registers its persisted frame with the caching
-    tracker; release_tracked() after the consuming action unpersists them
-    all, so a registry sweep does not accumulate corpus-sized cache
-    entries. Values must be fully materialized BEFORE release (the
-    embedded offset maps describe the persisted partitioning)."""
-    from mapreduce_simulation_spark.operators.caching import (
-        _SCOPES,
-        release_tracked,
+def test_interleaved_frames_match_oracle_after_clear_cache(spark):
+    """The offsets are computed inside each plan from the range exchange
+    the rows themselves go through, so two ranked frames over one input can
+    be executed in any order, and again after the session's cache is
+    cleared, and each still equals its window oracle. The input is large
+    enough that the range bounds come from a sample, and it carries a
+    column the offsets do not read: the executed plans must show the
+    offsets branch reusing the rows' range exchange, since a second
+    exchange would sample bounds of its own."""
+    df = spark.range(20_000).select(
+        F.col("id").alias("k"),
+        ((F.col("id") * 7919) % 1000).alias("v"),
+        F.concat(F.lit("row-"), F.col("id").cast("string")).alias("extra"),
     )
-
-    release_tracked()  # clean slate from earlier tests
     order = [F.asc("v"), F.asc("k")]
-    ranked = with_distributed_rank(tied, order, "rk")
-    tiled = with_distributed_ntile(tied, order, 4, "tile")
-    rows = ranked.count() + tiled.count()
-    assert rows == 2 * tied.count()
-    # 4 registrations: the shared input is registered by BOTH primitives
-    # (refcounted — the second sees it cached but still takes a
-    # reference) plus each primitive's own partitioned frame.
-    assert len(_SCOPES[-1]) == 4
-    assert all(df.is_cached for df, _ in _SCOPES[-1])
-    handles = [df for df, _ in _SCOPES[-1]]
-    assert release_tracked() == 4
-    assert _SCOPES[-1] == []
-    assert all(not df.is_cached for df in handles)
-    # double-release is a no-op
-    assert release_tracked() == 0
-
-
-def test_tracked_scope_isolates_queries(spark, tied):
-    """Two interleaved tracked queries: releasing the first query's scope
-    must not unpersist the second's still-unmaterialized offset-bearing
-    frame (the ADVICE r6 failure mode — a global release would resample
-    its range bounds and silently return wrong ranks)."""
-    from mapreduce_simulation_spark.operators.caching import (
-        _SCOPES,
-        release_tracked,
-        tracked_scope,
+    a = with_distributed_rank(df, order, "r", 8)
+    b = with_distributed_cumsum(
+        with_distributed_ntile(df, order, 4, "b", 8), order, "v", "c", True, 8
     )
+    w = Window.orderBy(*order)
+    want_a = {
+        r["k"]: (r["r"], r["extra"])
+        for r in df.withColumn("r", F.row_number().over(w)).collect()
+    }
+    want_b = {
+        r["k"]: (r["b"], r["c"], r["extra"])
+        for r in df.withColumn("b", F.ntile(4).over(w))
+        .withColumn(
+            "c",
+            F.sum("v").over(w.rowsBetween(Window.unboundedPreceding, 0)),
+        )
+        .collect()
+    }
 
-    release_tracked()
-    order = [F.asc("v"), F.asc("k")]
-    with tracked_scope() as outer:
-        outer_ranked = with_distributed_rank(tied, order, "rk")
-        # input + partitioned frame
-        assert len(outer) == 2
-        with tracked_scope() as inner:
-            inner_tiled = with_distributed_ntile(tied, order, 4, "tile")
-            # tied is already cached by the outer scope; the inner
-            # primitive still takes a refcounted reference on it plus
-            # registers its own partitioned frame
-            assert len(inner) == 2
-            outer_ids = {id(df) for df, _ in outer}
-            inner_parted = next(
-                df for df, _ in inner if id(df) not in outer_ids
-            )
-            assert inner_tiled.count() == tied.count()
-            # inner release sees only the inner scope.  The inner parted
-            # frame shares a plan KEY with the outer's (both contain
-            # monotonically_increasing_id, which hashes structurally),
-            # so with group refcounting NOTHING is unpersisted yet — the
-            # outer scope still references both keys; release is
-            # conservatively late, never early
-            assert release_tracked() == 2
-            assert inner_parted.is_cached
-            # outer frames untouched and still materializable correctly
-            assert len(outer) == 2
-            assert all(df.is_cached for df, _ in outer)
-        handles = [df for df, _ in outer] + [inner_parted]
-        ranks = {
-            (r["k"], r["v"]): r["rk"] for r in outer_ranked.collect()
-        }
-        assert len(ranks) == tied.count()
-    # scope exit released the outer frames
-    assert all(not df.is_cached for df in handles)
-    assert _SCOPES[-1] == []
+    def got(frame, cols):
+        return {r["k"]: tuple(r[c] for c in cols) for r in frame.collect()}
 
-
-def test_persist_tracked_skips_caller_cache(spark):
-    """A frame the caller persisted intentionally is neither re-persisted
-    nor registered — release never drops a cache this module didn't
-    create."""
-    from mapreduce_simulation_spark.operators.caching import (
-        persist_tracked,
-        release_tracked,
-    )
-
-    release_tracked()
-    df = spark.range(10).persist()
-    try:
-        df.count()
-        assert persist_tracked(df) is df
-        assert release_tracked() == 0
-        assert df.is_cached
-    finally:
-        df.unpersist()
-
-
-def test_identical_plan_across_scopes_is_refcounted(spark):
-    """The ADVICE r7 hazard: Spark's cache manager matches entries by
-    canonicalized plan, so an identical-plan frame built independently in
-    a SECOND tracked scope shares the first scope's cache entry.  The
-    shared entry must survive until the LAST referencing scope releases —
-    otherwise the second query's offset-bearing frame re-materializes
-    with resampled range bounds after the first scope exits."""
-    from mapreduce_simulation_spark.operators.caching import (
-        _PLAN_REFS,
-        persist_tracked,
-        release_tracked,
-        tracked_scope,
-    )
-
-    release_tracked()
-    base = spark.range(100).selectExpr("id", "id % 7 AS k")
-    with tracked_scope():
-        a = persist_tracked(base.groupBy("k").count())
-        a.count()
-        with tracked_scope():
-            # independently-built identical plan → same cache entry
-            b = persist_tracked(base.groupBy("k").count())
-            assert b.is_cached
-            assert release_tracked() == 1
-            # inner release must NOT drop the shared entry: the outer
-            # scope still references the plan
-            assert a.is_cached and b.is_cached
-    # last reference released on outer scope exit
-    assert not a.is_cached
-    assert _PLAN_REFS == {}
+    assert got(b, ["b", "c", "extra"]) == want_b
+    assert got(a, ["r", "extra"]) == want_a
+    spark.catalog.clearCache()
+    assert got(b, ["b", "c", "extra"]) == want_b
+    for frame in (a, b):
+        plan = frame._jdf.queryExecution().executedPlan().toString()
+        assert re.search(
+            r"ReusedExchange \[k#\d+L, v#\d+L, extra#\d+\], "
+            r"Exchange rangepartitioning",
+            plan,
+        ), plan

@@ -213,8 +213,6 @@ def main() -> int:
     n_ok = n_rows_only = 0
     from mapreduce_simulation_spark.streaming.stateful import _HAS_TWS
 
-    from mapreduce_simulation_spark.operators.caching import release_tracked
-
     for name, fn in qs.items():
         if only and name not in only:
             continue
@@ -235,10 +233,6 @@ def main() -> int:
             results[name] = {"status": "fail", "error": str(ex)[:300]}
             failures += 1
             continue
-        finally:
-            # collect() is done — one query's tracked persists must not
-            # occupy executor memory while the next 190 run.
-            release_tracked()
         secs = round(time.time() - t0, 1)
         if name not in oracles:
             if name in bounded:
