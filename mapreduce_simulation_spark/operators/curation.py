@@ -892,8 +892,9 @@ def sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the running sum needs a total order, but NOT a single-task sort:
     it runs as the distributed per-shard cumsum
     (operators/ranking.with_distributed_cumsum) — range-shard on doc_id,
-    shard-local running sum, carried-in prefix totals from a bounded P-row
-    collect — identical arithmetic to the global window, P-way parallel.
+    shard-local running sum, carried-in prefix totals folded in the plan
+    from the ≤ P per-shard totals — identical arithmetic to the global
+    window, P-way parallel.
     Everything after is a partial agg on seq_id.
     """
     from .ranking import with_distributed_cumsum
@@ -2032,9 +2033,10 @@ def ccnet_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     distributed ntile (operators/ranking.py): range partitioning on
     (lang, score) spreads a hot language over many partitions — a plain
     PARTITION BY lang window would put half a web corpus (English) through
-    one task — with per-group positions reassembled from the ≤ P + |langs|
-    per-(partition, language) totals. No partition-less or hot-group window
-    anywhere (asserted in tests/test_plan_shapes.py).
+    one task — and a document's position in its language is its global
+    position (from the ≤ P per-partition totals) minus the language's
+    first, read from a |langs|-row group table. No partition-less or
+    hot-group window anywhere (asserted in tests/test_plan_shapes.py).
 
     Documents with fewer than 2 tokens have no bigrams and are dropped, as
     in CCNet (un-scoreable docs are not banded).

@@ -11,11 +11,10 @@ helpers keep the total order but distribute the sort:
      ``sortWithinPartitions`` encodes (partition id, row position) with NO
      window node, or a ``_pid``-partitioned running sum for cumsum (a
      partitioned window, never a single-task one);
-  3. per-partition totals (≤ P + G rows: P shuffle partitions, G groups)
-     aggregated from the same range-partitioned frame, folded into
-     carried-in prefix offsets in one array row, and broadcast-joined back
-     on ``_pid`` — the classic two-pass distributed scan, computed inside
-     the plan.
+  3. the ≤ P per-partition totals aggregated from the same
+     range-partitioned frame, folded into carried-in prefix offsets in one
+     array row, and broadcast-joined back on ``_pid`` — the classic
+     two-pass distributed scan (Blelloch 1990), computed inside the plan.
 
 Both passes read one range exchange: the totals branch and the row branch
 share it inside the query (``ReusedExchange``; see ``_range_parted`` for
@@ -61,57 +60,36 @@ def _range_parted(df: DataFrame, p: int, keys: list[Column]) -> DataFrame:
     )
 
 
-def _with_offsets(
-    parted: DataFrame, keys: list[str], value: Column, *cell: Column
-) -> DataFrame:
-    """``parted`` (which carries ``_pid``) plus, per row, the aggregates of
-    its (``_pid``, ``keys``) cell: ``_pre``, the sum of ``value`` over the
-    same key's earlier partitions, ``_n``, its sum over all of the key's
-    partitions, and each of ``cell``.
+def _with_offsets(parted: DataFrame, value: Column) -> DataFrame:
+    """``parted`` (which carries ``_pid``) plus, per row, ``_pre``, the sum
+    of ``value`` over the earlier partitions, and ``_n``, its sum over all
+    partitions.
 
-    The ≤ P + G cells are gathered into one array row and each cell's sums
-    are folded from that array, so the plan reads ``parted`` only twice
-    (rows and cells) and holds no window. Keys match null-safely, so a
-    NULL group is a group like any other."""
-    kk = [f"_k{i}" for i in range(len(keys))]
-    cells = parted.groupBy(
-        F.col("_pid").alias("_p"),
-        *[F.col(k).alias(a) for k, a in zip(keys, kk)],
-    ).agg(value.alias("_t"), *cell)
+    The ≤ P partition totals are gathered into one array row and each
+    total's sums are folded from that array, so the plan reads ``parted``
+    only twice (rows and totals) and holds no window. The fold filters the
+    whole array once per partition, so it is quadratic in P
+    (``spark.sql.shuffle.partitions``), not in the data."""
+    totals = parted.groupBy(F.col("_pid").alias("_p")).agg(value.alias("_t"))
 
-    def total(x: Column, earlier: bool) -> Column:
-        """Sum of ``_t`` over the cells of ``x``'s key, or over those in
-        earlier partitions only."""
-
-        def counted(y: Column) -> Column:
-            same = [x[a].eqNullSafe(y[a]) for a in kk]
-            if earlier:
-                same.append(y["_p"] < x["_p"])
-            return reduce(operator.and_, same, F.lit(True))
-
+    def summed(arr: Column) -> Column:
         return F.aggregate(
-            F.filter("_a", counted),
-            F.lit(0).cast("long"),
-            lambda acc, y: acc + y["_t"],
+            arr, F.lit(0).cast("long"), lambda acc, y: acc + y["_t"]
         )
 
     folded = F.transform(
         "_a",
-        lambda x: x.withField("_pre", total(x, True)).withField(
-            "_n", total(x, False)
+        lambda x: F.struct(
+            x["_p"].alias("_p"),
+            summed(F.filter("_a", lambda y: y["_p"] < x["_p"])).alias("_pre"),
+            summed(F.col("_a")).alias("_n"),
         ),
     )
-    offsets = (
-        cells.agg(F.collect_list(F.struct(*cells.columns)).alias("_a"))
-        .select(F.inline(folded))
-        .drop("_t")
-    )
-    on = [F.col("_pid") == F.col("_p")] + [
-        F.col(k).eqNullSafe(F.col(a)) for k, a in zip(keys, kk)
-    ]
-    return parted.join(F.broadcast(offsets), reduce(operator.and_, on)).drop(
-        "_p", *kk
-    )
+    offsets = totals.agg(F.collect_list(F.struct("_p", "_t")).alias("_a"))
+    return parted.join(
+        F.broadcast(offsets.select(F.inline(folded))),
+        F.col("_pid") == F.col("_p"),
+    ).drop("_p")
 
 
 def _ranked(
@@ -125,11 +103,14 @@ def _ranked(
 
     The range partitioner keys on ``(group, order)``, so a hot group
     spreads over many partitions, each locally sorted. The local index
-    comes from ``monotonically_increasing_id`` (pid in the high bits, row
-    position in the low 33), which is deterministic here because the
-    partition row order is pinned by ``sortWithinPartitions`` over a total
-    order. A group's rows in one partition are contiguous, starting at
-    local index ``_s``."""
+    ``_loc`` comes from ``monotonically_increasing_id`` (pid in the high
+    bits, row position in the low 33), which is deterministic here because
+    the partition row order is pinned by ``sortWithinPartitions`` over a
+    total order. A row's global position is its partition's prefix plus
+    ``_loc``; groups are contiguous in that order, so the group rank is
+    that minus the group's first, which a G-row ``groupBy`` gives with the
+    group's count. It joins back null-safely: a NULL group is a group like
+    any other."""
     p = num_partitions or _num_partitions(df)
     gcols = [F.col(c) for c in group_cols]
     parted = (
@@ -141,14 +122,23 @@ def _ranked(
             F.col("_mid").bitwiseAND(F.lit(_LOCAL_MASK)).alias("_loc"),
         )
     )
+    ranked = (
+        _with_offsets(parted, F.count(F.lit(1)))
+        .withColumn("_grank", F.col("_pre") + F.col("_loc") + F.lit(1))
+        .drop("_mid", "_pid", "_loc", "_pre")
+    )
+    if not group_cols:
+        return ranked
+    kk = [f"_k{i}" for i in range(len(group_cols))]
+    groups = ranked.groupBy(
+        *[F.col(c).alias(k) for c, k in zip(group_cols, kk)]
+    ).agg(F.min("_grank").alias("_s"), F.count(F.lit(1)).alias("_n"))
+    on = [F.col(c).eqNullSafe(F.col(k)) for c, k in zip(group_cols, kk)]
     return (
-        _with_offsets(
-            parted, group_cols, F.count(F.lit(1)), F.min("_loc").alias("_s")
-        )
-        .withColumn(
-            "_grank", F.col("_pre") + F.col("_loc") - F.col("_s") + F.lit(1)
-        )
-        .drop("_mid", "_pid", "_loc", "_s", "_pre")
+        ranked.drop("_n")
+        .join(F.broadcast(groups), reduce(operator.and_, on))
+        .withColumn("_grank", F.col("_grank") - F.col("_s") + F.lit(1))
+        .drop("_s", *kk)
     )
 
 
@@ -202,13 +192,14 @@ def with_distributed_grouped_ntile(
     grouping is dimension-like but skewed — language over a web corpus,
     where one language is half the data — the hot group becomes a
     single-task sort at 100 TB. Here a hot group spreads over many range
-    partitions and its positions are reassembled from the per-(partition,
-    group) totals. Groups are contiguous under the range order, so each
-    partition boundary splits at most one group: the totals are ≤ P + G
-    rows. Use this primitive when G is dimension-bounded (languages,
-    sources, priorities); for high-cardinality groups a plain partitioned
-    window is already the right plan — no group is hot enough to matter,
-    and P + G stops being bounded.
+    partitions, and groups are contiguous under the range order, so a
+    row's position in its group is its global position minus the group's
+    first; a G-row group table gives that start and the group's count.
+    Use this primitive when G is dimension-bounded (languages, sources,
+    priorities): the group table is broadcast to every row partition. For
+    high-cardinality groups a plain partitioned window is already the
+    right plan — no group is hot enough to matter, and the G-row table
+    stops being broadcastable.
 
     ntile semantics reproduced exactly: with n_g rows, the first n_g mod k
     buckets hold ⌈n_g/k⌉ rows, the rest ⌊n_g/k⌋ — a column expression of
@@ -257,10 +248,9 @@ def with_distributed_cumsum(
         .rowsBetween(Window.unboundedPreceding, upper)
     )
     local = F.coalesce(F.sum(value_col).over(w), F.lit(0)).cast("long")
+    total = F.coalesce(F.sum(value_col), F.lit(0)).cast("long")
     return (
-        _with_offsets(
-            parted, [], F.coalesce(F.sum(value_col), F.lit(0)).cast("long")
-        )
+        _with_offsets(parted, total)
         .withColumn(out_col, F.col("_pre") + local)
         .drop("_pid", "_pre", "_n")
     )

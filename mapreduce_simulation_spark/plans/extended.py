@@ -13,7 +13,7 @@ Determinism notes:
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -2745,9 +2745,12 @@ def rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: each score is a DISTRIBUTED ntile
     (operators/ranking.with_distributed_ntile) — range-partitioned sort +
     per-partition local index + broadcast prefix offsets — so the plan has
-    no partition-less window / single-task global sort anywhere; the three
-    bandings run on the aggregated |customers| table, each as a P-way
-    parallel sort (asserted in tests/test_plan_shapes.py).
+    no partition-less window / single-task global sort anywhere. The three
+    scores are banded side by side, each from the aggregated |customers|
+    table as a P-way parallel sort, and joined on ``o_custkey``, so the
+    plan grows linearly in the scores; chained, each level's plan would
+    hold the previous one twice (both asserted in
+    tests/test_plan_shapes.py).
     """
     from ..operators.ranking import with_distributed_ntile
 
@@ -2767,24 +2770,18 @@ def rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
         "frequency",
         "monetary",
     )
-    scored = with_distributed_ntile(
-        base,
-        [F.asc("recency_days"), F.asc("o_custkey")],
-        RFM_BUCKETS,
-        "r_score",
-    )
-    scored = with_distributed_ntile(
-        scored,
-        [F.desc("frequency"), F.asc("o_custkey")],
-        RFM_BUCKETS,
-        "f_score",
-    )
-    scored = with_distributed_ntile(
-        scored,
-        [F.desc("monetary"), F.asc("o_custkey")],
-        RFM_BUCKETS,
-        "m_score",
-    )
+
+    def score(order: Column, name: str) -> DataFrame:
+        return with_distributed_ntile(
+            base, [order, F.asc("o_custkey")], RFM_BUCKETS, name
+        )
+
+    recency = score(F.asc("recency_days"), "r_score")
+    frequency = score(F.desc("frequency"), "f_score")
+    monetary = score(F.desc("monetary"), "m_score")
+    scored = recency.join(
+        frequency.select("o_custkey", "f_score"), "o_custkey"
+    ).join(monetary.select("o_custkey", "m_score"), "o_custkey")
     return scored.select(
         "o_custkey",
         "recency_days",

@@ -143,6 +143,21 @@ def test_rfm_has_no_window_at_all(spark, sf_dir):
     )
 
 
+def test_rfm_plan_grows_linearly_in_scores(spark, sf_dir):
+    """rfm_segmentation bands its three scores side by side from one input
+    and joins them on o_custkey. Each distributed ntile shows its range
+    exchange twice in the from-scratch plan (the rows and the totals
+    branch), and the declared ORDER BY adds one: at most 7. Chaining the
+    three ntiles made each level's plan hold the previous level twice, 15
+    range exchanges in all."""
+    plan = _plan(spark, sf_dir, "rfm_segmentation")
+    ranges = _count(plan, r"Exchange rangepartitioning")
+    assert ranges <= 7, (
+        f"rfm_segmentation has {ranges} range exchanges (max 7)\n"
+        f"{plan[:2000]}"
+    )
+
+
 @pytest.mark.parametrize("name", ["sequence_packing", "pps_sample"])
 def test_cumsum_windows_are_shard_partitioned(spark, sf_dir, name):
     """The running sums run as shard-local windows with carried-in prefix

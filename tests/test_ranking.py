@@ -6,6 +6,7 @@ n < buckets edge of ntile."""
 from __future__ import annotations
 
 import re
+import time
 
 import pytest
 from pyspark.sql import Window
@@ -180,6 +181,53 @@ def test_grouped_ntile_partition_count_invariant(spark):
         if base is None:
             base = got
         assert got == base, f"bucket assignment changed at P={p}"
+
+
+def test_grouped_ntile_is_linear_in_groups(spark):
+    """A row's group rank is its global index minus its group's first, so
+    the grouped ntile reads a G-row group table and 10 000 groups cost
+    about what 100 do over the same rows. A fold over per-(partition,
+    group) cells in one array row is quadratic in the groups: it took more
+    than 10× as long at 10 000 groups. The result, NULL group included,
+    must equal ``ntile`` over ``Window.partitionBy``."""
+    from mapreduce_simulation_spark.operators.ranking import (
+        with_distributed_grouped_ntile,
+    )
+
+    order = [F.asc("v"), F.asc("id")]
+
+    def frame(groups, n=100_000):
+        rows = spark.range(n).select(
+            (F.col("id") % groups).alias("grp"),
+            ((F.col("id") * 7919) % 1000).alias("v"),
+            F.col("id"),
+        )
+        nulls = spark.range(n, n + 5).select(
+            F.lit(None).cast("long").alias("grp"),
+            (F.col("id") % 3).alias("v"),
+            F.col("id"),
+        )
+        return rows.unionByName(nulls)
+
+    def timed(df):
+        out = with_distributed_grouped_ntile(df, ["grp"], order, 7, "b", 4)
+        t0 = time.perf_counter()
+        out.write.format("noop").mode("overwrite").save()
+        return time.perf_counter() - t0, out
+
+    timed(frame(100, 1_000))  # warm-up: first-run codegen and class loading
+    few, _ = timed(frame(100))
+    df = frame(10_000)
+    many, got = timed(df)
+    w = Window.partitionBy("grp").orderBy(*order)
+    want = df.withColumn("want", F.ntile(7).over(w)).select("id", "want")
+    diff = got.join(want, "id", "full_outer").where(
+        ~F.col("b").eqNullSafe(F.col("want"))
+    )
+    assert diff.isEmpty(), diff.limit(5).collect()
+    assert many <= 3 * few, (
+        f"10 000 groups took {many:.2f}s against {few:.2f}s for 100"
+    )
 
 
 def test_interleaved_frames_match_oracle_after_clear_cache(spark):

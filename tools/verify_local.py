@@ -223,7 +223,7 @@ def main() -> int:
                 "reason": "transformWithState needs protobuf",
             }
             continue
-        t0 = time.time()
+        t0 = time.perf_counter()
         try:
             sdf = fn(spark, SF_DIR)
             scols = sdf.columns
@@ -233,7 +233,7 @@ def main() -> int:
             results[name] = {"status": "fail", "error": str(ex)[:300]}
             failures += 1
             continue
-        secs = round(time.time() - t0, 1)
+        secs = round(time.perf_counter() - t0, 2)
         if name not in oracles:
             if name in bounded:
                 spec = bounded[name]
