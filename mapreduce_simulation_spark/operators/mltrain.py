@@ -1149,15 +1149,13 @@ def streaming_logreg_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the drained result over the corpus equals the batch scoring pass
     and shares its bit-exact oracle. Four range-split input files
     exercise multi-batch scoring."""
-    from ..streaming.stateful import stage_stream_source
+    from ..streaming.events import run_to_memory, stage_stream_source
     from ..tables import load_table
 
     w = _staged_logreg_weights(spark, sf_dir)
     _z6, s6 = _iteration_exprs(w)
     docs = load_table(spark, sf_dir, "documents")
-    stage = stage_stream_source(
-        spark, sf_dir, "documents", "docs_shard_ingest_", "doc_id"
-    )
+    stage = stage_stream_source(spark, sf_dir, "documents", "doc_id")
     stream = (
         spark.readStream.schema(docs.schema)
         .option("maxFilesPerTrigger", 1)
@@ -1171,12 +1169,6 @@ def streaming_logreg_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"CAST(CASE WHEN (({s6}) >= 500000) = (y6 = {SCALE})"
         " THEN 1 ELSE 0 END AS INT) AS correct",
     )
-    q = (
-        scored.writeStream.format("memory")
-        .queryName("stream_logreg_score")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    return run_to_memory(scored, "stream_logreg_score", "append").orderBy(
+        "doc_id"
     )
-    q.awaitTermination()
-    return spark.table("stream_logreg_score").orderBy("doc_id")

@@ -5,8 +5,12 @@ by ``tables.load_table`` and ``read_staged``, and the per-session plan memo.
 The staged files must outlive the *builder* call — the returned DataFrame
 or drained memory-sink table may be executed (or re-executed) by the
 caller at any point afterwards — so the directories are removed at
-interpreter exit rather than on return. Long-lived services embedding the
-engine get bounded /tmp usage instead of a leak per query build.
+interpreter exit rather than on return. Keyed artifacts (``stage_once``,
+``stage_once_dir``, ``keyed_staging_dir``) take one directory per key
+(plus one per rebuild after a source change); every plain
+``staging_dir`` call takes a new one — the streaming output roots, gate
+dirs, sink outputs and checkpoints, and the format-conversion copies in
+``plans/extended.py`` — and all of them live until the process exits.
 
 Reads, staged artifacts and plans share one freshness rule: each entry
 carries ``{source path: _file_sig}`` — the signature the read cache

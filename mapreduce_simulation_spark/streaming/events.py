@@ -6,7 +6,10 @@ returns the transformed streaming DataFrame; the caller attaches a sink.
 The logical plans intentionally match their batch twins in
 plans/relational.py — run the same transformation both ways and results
 converge as the watermark closes windows (verified in tests via
-Trigger.AvailableNow against the batch answer).
+Trigger.AvailableNow against the batch answer). The driver-facing
+streaming queries share one harness: ``stage_stream_source`` stages a
+table as a file-stream source, ``run_to_memory`` drains into a memory
+sink.
 
 Scale notes: windowed aggregation state is bounded by the watermark (10 min
 late-data allowance); keys = event_type × open windows, tiny. Session
@@ -94,18 +97,57 @@ def session_windows(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
     )
 
 
-def run_to_memory(stream_df: DataFrame, name: str) -> DataFrame:
-    """Drain a stream with Trigger.AvailableNow into an in-memory table and
-    return the batch result — the test/driver harness for streaming plans."""
+def run_to_memory(
+    stream_df: DataFrame, name: str, output_mode: str = "complete"
+) -> DataFrame:
+    """Drain a stream with Trigger.AvailableNow into the in-memory table
+    ``name`` and return the batch result — the test/driver harness for
+    streaming plans. ``output_mode`` is the sink's: "complete" re-emits
+    every aggregate row, "append" emits each row once (joins, dedup,
+    stateful operators and watermark-finalized windows)."""
     q = (
         stream_df.writeStream.format("memory")
         .queryName(name)
-        .outputMode("complete")
+        .outputMode(output_mode)
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination()
     return stream_df.sparkSession.table(name)
+
+
+def stage_stream_source(
+    spark: SparkSession,
+    sf_dir: str,
+    table: str,
+    range_col: str | None = None,
+) -> str:
+    """Stage ``table`` as the parquet file source of a stream: one file,
+    or four range-split files on ``range_col`` (so a
+    ``maxFilesPerTrigger=1`` drain crosses micro-batch boundaries).
+
+    Keyed by (table, range_col, sf_dir), so every query asking for the
+    same split shares one copy, rebuilt when the table changes. The table
+    is loaded on every call, hit or not, so loading ``events`` still pins
+    its session confs (``tables.load_table``)."""
+    from ..staging import stage_once_dir
+    from ..tables import load_table
+
+    load_table(spark, sf_dir, table)
+
+    def write(path: str) -> None:
+        df = load_table(spark, sf_dir, table)
+        # repartition(1), not coalesce(1), so the write is a real
+        # shuffle-to-one-task instead of collapsing the scan's parallelism
+        # into the writing task
+        df = df.repartitionByRange(4, range_col) if range_col else (
+            df.repartition(1)
+        )
+        df.write.mode("overwrite").parquet(path)
+
+    return stage_once_dir(
+        f"{table}_stream_", f"split={range_col}|sf={sf_dir}", "", write
+    )
 
 
 def streaming_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -115,13 +157,7 @@ def streaming_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     and return the final batch result. Matches the batch/DuckDB answer
     because tumbling-window aggregation in complete mode retains all
     windows (the watermark bounds state in update/append deployments)."""
-    from ..staging import staging_dir
-    from ..tables import load_table
-
-    stage = staging_dir("events_stream_")
-    load_table(spark, sf_dir, "events").repartitionByRange(4, "ts").write.mode(
-        "overwrite"
-    ).parquet(stage)
+    stage = stage_stream_source(spark, sf_dir, "events", "ts")
     stream = read_event_stream(spark, stage)
     return run_to_memory(windowed_counts(stream, "1 hour"), "events_hourly_stream")
 
@@ -171,26 +207,13 @@ def streaming_click_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     filtered streams (clicks, purchases) from it, join with watermarked
     state, drain with Trigger.AvailableNow. Single-batch staging makes the
     emitted set equal the batch join, so the oracle is the plain SQL join."""
-    from ..staging import staging_dir
-    from ..tables import load_table
-
-    stage = staging_dir("events_ss_join_")
-    load_table(spark, sf_dir, "events").coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(stage)
+    stage = stage_stream_source(spark, sf_dir, "events")
     ev = read_event_stream(spark, stage, max_files_per_trigger=None)
     clicks = ev.where(F.col("event_type") == "click")
     purchases = ev.where(F.col("event_type") == "purchase")
-    q = (
-        click_purchase_join(clicks, purchases)
-        .writeStream.format("memory")
-        .queryName("click_attribution")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    return run_to_memory(
+        click_purchase_join(clicks, purchases), "click_attribution", "append"
     )
-    q.awaitTermination()
-    return spark.table("click_attribution")
 
 
 def streaming_dedup_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -200,26 +223,12 @@ def streaming_dedup_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     lifetime. Output restricted to the key columns so the emitted set is
     order-independent (which row of a dup group arrives first varies; the
     key itself does not) → exact DISTINCT oracle."""
-    from ..staging import staging_dir
-    from ..tables import load_table
-
-    stage = staging_dir("events_dedup_")
-    load_table(spark, sf_dir, "events").coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(stage)
+    stage = stage_stream_source(spark, sf_dir, "events")
     ev = read_event_stream(spark, stage, max_files_per_trigger=None)
     deduped = ev.select("user_id", "event_type").dropDuplicates(
         ["user_id", "event_type"]
     )
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName("stream_dedup_keys")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table("stream_dedup_keys")
+    return run_to_memory(deduped, "stream_dedup_keys", "append")
 
 
 def sliding_counts(
@@ -258,13 +267,7 @@ def streaming_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     max(ts) + gap. Complete output mode retains all sessions, matching the
     batch answer; in an append deployment the watermark expires session
     state the same way it bounds the tumbling windows."""
-    from ..staging import staging_dir
-    from ..tables import load_table
-
-    stage = staging_dir("events_sessions_")
-    load_table(spark, sf_dir, "events").repartitionByRange(4, "ts").write.mode(
-        "overwrite"
-    ).parquet(stage)
+    stage = stage_stream_source(spark, sf_dir, "events", "ts")
     # One-batch drain: the session operator enforces the watermark on its
     # INPUT even in complete mode, so per-file micro-batches drop any event
     # behind the previous batch's high watermark (file order is not a time
@@ -284,13 +287,7 @@ def streaming_events_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle expands each event to its two covering windows with epoch-aligned
     integer arithmetic (Spark windows align to the epoch), so the overlap
     semantics are checked exactly, not just row counts."""
-    from ..staging import staging_dir
-    from ..tables import load_table
-
-    stage = staging_dir("events_sliding_")
-    load_table(spark, sf_dir, "events").repartitionByRange(4, "ts").write.mode(
-        "overwrite"
-    ).parquet(stage)
+    stage = stage_stream_source(spark, sf_dir, "events", "ts")
     stream = read_event_stream(spark, stage)
     return run_to_memory(
         sliding_counts(stream, "1 hour", "30 minutes"), "events_sliding_stream"
@@ -309,13 +306,7 @@ def streaming_dedup_within_watermark(
     key columns, so the exact oracle applies; the eviction behavior itself
     is the API contract (state TTL = watermark), not visible in the
     result."""
-    from ..staging import staging_dir
-    from ..tables import load_table
-
-    stage = staging_dir("events_dedup_wm_")
-    load_table(spark, sf_dir, "events").coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(stage)
+    stage = stage_stream_source(spark, sf_dir, "events")
     ev = read_event_stream(spark, stage, max_files_per_trigger=None)
     deduped = (
         ev.withWatermark("ts", WATERMARK)
@@ -323,15 +314,7 @@ def streaming_dedup_within_watermark(
         .dropDuplicatesWithinWatermark(["user_id", "event_type"])
         .select("user_id", "event_type")
     )
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName("stream_dedup_wm")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table("stream_dedup_wm")
+    return run_to_memory(deduped, "stream_dedup_wm", "append")
 
 
 def streaming_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -342,13 +325,9 @@ def streaming_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcasts at dim size; at 100 TB this is the standard pattern for
     slowly-changing dims (re-resolved every batch, so updates to the dim
     are picked up without restarting the query)."""
-    from ..staging import staging_dir
     from ..tables import load_table
 
-    stage = staging_dir("events_enrich_")
-    load_table(spark, sf_dir, "events").coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(stage)
+    stage = stage_stream_source(spark, sf_dir, "events")
     ev = read_event_stream(spark, stage, max_files_per_trigger=None)
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment"
@@ -361,15 +340,7 @@ def streaming_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value"
         ),
     )
-    q = (
-        enriched.writeStream.format("memory")
-        .queryName("stream_static_enrich")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table("stream_static_enrich")
+    return run_to_memory(enriched, "stream_static_enrich")
 
 
 def streaming_upsert_profiles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -388,12 +359,8 @@ def streaming_upsert_profiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     one-shot batch aggregate — which is the exact DuckDB oracle.
     """
     from ..staging import staging_dir
-    from ..tables import load_table
 
-    stage = staging_dir("events_upsert_")
-    load_table(spark, sf_dir, "events").repartitionByRange(4, "ts").write.mode(
-        "overwrite"
-    ).parquet(stage)
+    stage = stage_stream_source(spark, sf_dir, "events", "ts")
     stream = read_event_stream(spark, stage)
 
     state: dict[str, DataFrame | None] = {"target": None}
@@ -467,6 +434,40 @@ def streaming_upsert_profiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("user_id")
 
 
+def _stage_with_sentinels(
+    spark: SparkSession, sf_dir: str, event_types: list[str]
+) -> str:
+    """Stage ``events`` once per sf_dir as a one-file stream source plus
+    one SENTINEL event (event_id and user_id -1) per entry of
+    ``event_types``, 10 days past the real maximum: the sentinels carry
+    the watermark past every real event, so the no-data batch flushes all
+    state before AvailableNow terminates. Callers filter them out."""
+    from ..staging import stage_once_dir
+    from ..tables import load_table
+
+    def write(path: str) -> None:
+        base = load_table(spark, sf_dir, "events").select(
+            *EVENTS_SCHEMA.fieldNames()
+        )
+        sentinels = base.agg(F.max("ts").alias("m")).select(
+            F.lit(-1).cast("long").alias("event_id"),
+            (F.col("m") + F.expr("INTERVAL 10 DAYS")).alias("ts"),
+            F.lit(-1).cast("long").alias("user_id"),
+            F.explode(F.array(*map(F.lit, event_types))).alias("event_type"),
+            F.lit(0.0).alias("value"),
+            F.lit(None).cast("string").alias("props"),
+        )
+        # repartition(1): see stage_stream_source
+        base.unionByName(sentinels).repartition(1).write.mode(
+            "overwrite"
+        ).parquet(path)
+
+    load_table(spark, sf_dir, "events")  # pins the events confs on a hit
+    return stage_once_dir(
+        "events_sentinel_", f"{'+'.join(event_types)}|sf={sf_dir}", "", write
+    )
+
+
 def streaming_attribution_outer(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -488,34 +489,7 @@ def streaming_attribution_outer(
 
     Scale: same bounded state as the inner join (watermark minus range
     evicts both sides); the outer flush adds no state, only emission."""
-    from ..staging import staging_dir
-    from ..tables import load_table
-
-    base = load_table(spark, sf_dir, "events")
-    cols = ["event_id", "ts", "user_id", "event_type", "value", "props"]
-    sent_ts = F.col("m") + F.expr("INTERVAL 10 DAYS")
-    sentinels = (
-        base.agg(F.max("ts").alias("m"))
-        .select(
-            F.explode(F.array(F.lit("click"), F.lit("purchase"))).alias(
-                "event_type"
-            ),
-            sent_ts.alias("ts"),
-        )
-        .select(
-            F.lit(-1).cast("long").alias("event_id"),
-            "ts",
-            F.lit(-1).cast("long").alias("user_id"),
-            "event_type",
-            F.lit(0.0).alias("value"),
-            F.lit(None).cast("string").alias("props"),
-        )
-    )
-    stage = staging_dir("events_ss_outer_")
-    base.select(*cols).unionByName(sentinels.select(*cols)).coalesce(
-        1
-    ).write.mode("overwrite").parquet(stage)
-
+    stage = _stage_with_sentinels(spark, sf_dir, ["click", "purchase"])
     ev = read_event_stream(spark, stage, max_files_per_trigger=None)
     clicks = ev.where(F.col("event_type") == "click")
     purchases = ev.where(F.col("event_type") == "purchase")
@@ -539,15 +513,9 @@ def streaming_attribution_outer(
         ],
         "left_outer",
     ).select("purchase_id", "user_id", "purchase_ts", "click_id", "click_ts")
-    q = (
-        joined.writeStream.format("memory")
-        .queryName("attribution_outer")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    return run_to_memory(joined, "attribution_outer", "append").where(
+        F.col("user_id") != -1
     )
-    q.awaitTermination()
-    return spark.table("attribution_outer").where(F.col("user_id") != -1)
 
 
 def streaming_events_hourly_append(
@@ -566,34 +534,10 @@ def streaming_events_hourly_append(
     flushes them all; sentinel windows are filtered from the result. The
     oracle is therefore the full batch aggregate over real events.
     """
-    from ..staging import staging_dir
-    from ..tables import load_table
-
-    base = load_table(spark, sf_dir, "events")
-    cols = ["event_id", "ts", "user_id", "event_type", "value", "props"]
-    sentinel = base.agg(F.max("ts").alias("m")).select(
-        F.lit(-1).cast("long").alias("event_id"),
-        (F.col("m") + F.expr("INTERVAL 10 DAYS")).alias("ts"),
-        F.lit(-1).cast("long").alias("user_id"),
-        F.lit("sentinel").alias("event_type"),
-        F.lit(0.0).alias("value"),
-        F.lit(None).cast("string").alias("props"),
-    )
-    stage = staging_dir("events_hourly_append_")
-    base.select(*cols).unionByName(sentinel.select(*cols)).coalesce(
-        1
-    ).write.mode("overwrite").parquet(stage)
+    stage = _stage_with_sentinels(spark, sf_dir, ["sentinel"])
     stream = read_event_stream(spark, stage, max_files_per_trigger=None)
     agg = windowed_counts(stream, "1 hour")
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("events_hourly_append")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table("events_hourly_append").where(
+    return run_to_memory(agg, "events_hourly_append", "append").where(
         F.col("event_type") != "sentinel"
     )
 
@@ -615,14 +559,9 @@ def streaming_custom_source_rollup(
     connector's anti-drift contract), so max_ts_us is integer-exact.
     """
     from ..sources.eventlog_stream import register_eventlog_stream
-    from ..staging import staging_dir
-    from ..tables import load_table
 
     register_eventlog_stream(spark)
-    stage = staging_dir("eventlog_stream_")
-    load_table(spark, sf_dir, "events").repartitionByRange(4, "ts").write.mode(
-        "overwrite"
-    ).parquet(stage)
+    stage = stage_stream_source(spark, sf_dir, "events", "ts")
     stream = spark.readStream.format("eventlog_stream").load(stage)
     agg = (
         stream.groupBy("event_type")
@@ -663,16 +602,12 @@ def streaming_kvtext_sink_roundtrip(
     from ..sources.eventlog_stream import register_eventlog_stream
     from ..sources.kvtext import register_kvtext
     from ..staging import staging_dir
-    from ..tables import load_table
 
     register_eventlog_stream(spark)
     register_kvtext(spark)
-    stage = staging_dir("kvsink_in_")
+    stage = stage_stream_source(spark, sf_dir, "events", "ts")
     out = staging_dir("kvsink_out_")
     ckpt = staging_dir("kvsink_ckpt_")
-    load_table(spark, sf_dir, "events").repartitionByRange(4, "ts").write.mode(
-        "overwrite"
-    ).parquet(stage)
     stream = spark.readStream.format("eventlog_stream").load(stage)
     kv = stream.select(
         F.col("event_type").alias("key"),

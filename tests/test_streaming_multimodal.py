@@ -1022,7 +1022,7 @@ def test_streaming_shard_ingest_multibatch_manifest_parity(spark, sf_dir):
     }
     # the staged input must split into ≥2 files → ≥2 micro-batches
     stage, already = keyed_staging_dir(
-        "docs_shard_ingest_", f"sf={sf_dir}"
+        "documents_stream_", f"split=doc_id|sf={sf_dir}"
     )
     assert already  # the query call above staged it
     n_files = sum(
@@ -1862,3 +1862,70 @@ def test_containment_gate_carries_state_across_batches(spark, tmp_path):
     got = {r.doc_id: r.hit_anchors for r in out}
     assert got[10] == 0 and got[20] == 0 and got[40] == 0
     assert got[30] == CONTAIN_ANCHORS  # identical shingle set → all anchors
+
+
+def test_streaming_events_queries_share_one_staged_source(spark, sf_dir):
+    """Queries asking for the same split of ``events`` share one staged
+    stream source: after the first call per split nothing new is staged,
+    and repeated calls return the same rows."""
+    from mapreduce_simulation_spark import staging
+    from mapreduce_simulation_spark.streaming.stateful import (
+        stateful_user_rollup,
+    )
+
+    def rows(query):
+        return sorted(tuple(r) for r in query(spark, sf_dir).collect())
+
+    hourly = rows(sev.streaming_events_hourly)
+    n_dirs = len(staging._DIRS)
+    rows(sev.streaming_sessions)
+    assert rows(sev.streaming_events_hourly) == hourly
+    assert len(staging._DIRS) == n_dirs  # one "ts" range split
+
+    dedup = rows(sev.streaming_dedup_keys)
+    n_dirs = len(staging._DIRS)
+    rollup = rows(stateful_user_rollup)
+    assert rows(sev.streaming_dedup_keys) == dedup
+    assert rows(stateful_user_rollup) == rollup
+    assert len(staging._DIRS) == n_dirs  # one single-file split
+
+
+def test_staged_stream_source_follows_table_rewrite(spark, sf_dir, tmp_path):
+    """A staged stream source is not served once its table changed:
+    after events.parquet is rewritten with a subset of its rows, the
+    streaming result equals the batch answer over the new table."""
+    import shutil
+    from pathlib import Path
+
+    import pyarrow.parquet as pq
+
+    local = tmp_path / "sf"
+    local.mkdir()
+    for f in Path(sf_dir).iterdir():
+        shutil.copyfile(f, local / f.name)
+    sev.streaming_events_hourly(spark, str(local)).collect()
+
+    table = pq.read_table(local / "events.parquet")
+    pq.write_table(table.slice(0, table.num_rows // 2), local / "events.parquet")
+    got = sev.streaming_events_hourly(spark, str(local)).collect()
+    want = sev.windowed_counts(load_table(spark, str(local), "events")).collect()
+    assert sorted(map(tuple, got)) == sorted(map(tuple, want))
+
+
+def test_memory_sink_is_written_only_by_run_to_memory():
+    """Streaming queries drain to memory through run_to_memory; only the
+    custom Python source, which cannot take AvailableNow, keeps its own
+    processAllAvailable drain."""
+    from pathlib import Path
+
+    import mapreduce_simulation_spark as pkg
+
+    owners = []
+    for path in Path(pkg.__file__).parent.rglob("*.py"):
+        fn = None
+        for line in path.read_text(encoding="utf-8").splitlines():
+            if line.startswith("def "):
+                fn = line[4:].split("(")[0]
+            if '.format("memory")' in line:
+                owners.append(fn)
+    assert sorted(owners) == ["run_to_memory", "streaming_custom_source_rollup"]
