@@ -30,13 +30,6 @@ from ..tables import load_table
 
 FEATURE_DIM = 16
 
-MEDIA_SCHEMA = (
-    "doc_id bigint, media binary, media_type string, n_bytes bigint, "
-    "checksum bigint"
-)
-
-FEATURES_SCHEMA = "doc_id bigint, media_type string, features array<double>"
-
 COUNTS_SCHEMA = (
     "doc_id bigint, media_type string, n_bytes bigint, counts array<bigint>"
 )

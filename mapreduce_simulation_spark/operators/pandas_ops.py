@@ -156,8 +156,8 @@ def heavy_hitters_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     the OUTPUT — every token with frequency ≥ N/MG_CAPACITY and its exact
     count — is deterministic regardless of partitioning, so the driver
     hash-checks it against a plain GROUP BY / HAVING oracle. The MG
-    lower-bound contract of the sketch pass itself is still asserted in
-    tests (SKETCH_ORACLES retains the per-count bound check).
+    lower-bound contract of the sketch pass itself is asserted in tests
+    against mg_sketch_merged.
 
     This is the production shape (sketch to prune, exact pass to
     confirm): two token scans, but both read the staged token store
@@ -216,8 +216,8 @@ ORDER BY n DESC, word
 
 def mg_sketch_merged(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The raw merged Misra-Gries sketch (word, sketch_count lower bounds),
-    top HEAVY_HITTERS_TOP — kept for the SKETCH_ORACLES bound check and
-    tests; values legitimately depend on the partitioning, which is why
+    top HEAVY_HITTERS_TOP — kept for the tests' per-count bound check;
+    values legitimately depend on the partitioning, which is why
     the registered heavy_hitters_sketch query serves the exact two-pass
     result instead."""
     from pyspark.sql import functions as F

@@ -980,7 +980,7 @@ def streaming_lsh_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     (lsh_index_replane), maintenance (lsh_index_upsert_stats), serve
     (streaming_lsh_serve), and now the monitor that keeps the sensor's
     number current as the corpus streams in. Corpus vectors ARRIVE AS A
-    STREAM (5 range-split files, maxFilesPerTrigger=1); each micro-batch
+    STREAM (4 range-split files, maxFilesPerTrigger=1); each micro-batch
     computes its own signature rows (row-local plane dots — nothing
     shuffles) and appends a (tbl, bucket, c) OCCUPANCY DELTA under
     deltas/batch=<id>/ (overwrite — a replayed batch rewrites identical
@@ -1004,17 +1004,10 @@ def streaming_lsh_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     tier, the streaming-ingest twin pattern of
     streaming_hll_sketch_ingest applied to the ANN index census.
     """
+    from ..streaming.events import stage_stream_source
     from ..streaming.stateful import drain_delta_log
 
-    stage = stage_once_dir(
-        "lsh_ingest_stream_",
-        f"sf={sf_dir}",
-        "vectors",
-        lambda tmp: load_table(spark, sf_dir, "embeddings")
-        .repartitionByRange(5, "vec_id")
-        .write.mode("overwrite")
-        .parquet(tmp),
-    )
+    stage = stage_stream_source(spark, sf_dir, "embeddings", "vec_id")
 
     def occupancy(batch_df: DataFrame) -> DataFrame:
         sigs = _multitable_signatures(
@@ -1024,7 +1017,6 @@ def streaming_lsh_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     deltas = drain_delta_log(
         spark,
-        sf_dir,
         stage,
         load_table(spark, sf_dir, "embeddings").schema,
         "lsh_census_ingest_",

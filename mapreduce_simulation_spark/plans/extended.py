@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..tables import load_table
-from ..staging import memoized_plan, read_staged
+from ..staging import memoized_plan, read_staged, stage_once_dir
 
 
 def json_props_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -544,12 +544,16 @@ def csv_source_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     then aggregated. Proves the text-format source contract the same way
     text_dir_word_count proves the line-oriented one; same oracle as
     monthly_revenue because the roundtrip is lossless."""
-    from ..staging import staging_dir
-
-    stage = staging_dir("orders_csv_")
-    load_table(spark, sf_dir, "orders").write.mode("overwrite").option(
-        "header", True
-    ).option("timestampNTZFormat", "yyyy-MM-dd HH:mm:ss").csv(stage)
+    stage = stage_once_dir(
+        "orders_csv_",
+        f"sf={sf_dir}",
+        "",
+        lambda path: load_table(spark, sf_dir, "orders")
+        .write.mode("overwrite")
+        .option("header", True)
+        .option("timestampNTZFormat", "yyyy-MM-dd HH:mm:ss")
+        .csv(path),
+    )
     orders = (
         spark.read.schema(
             "o_orderkey bigint, o_custkey bigint, o_orderstatus string, "
@@ -582,10 +586,14 @@ def json_source_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     segment. The third text-format source next to the text-dir and CSV
     roundtrips; same decimal-accumulation discipline so the oracle hash is
     partition-independent."""
-    from ..staging import staging_dir
-
-    stage = staging_dir("customer_json_")
-    load_table(spark, sf_dir, "customer").write.mode("overwrite").json(stage)
+    stage = stage_once_dir(
+        "customer_json_",
+        f"sf={sf_dir}",
+        "",
+        lambda path: load_table(spark, sf_dir, "customer")
+        .write.mode("overwrite")
+        .json(path),
+    )
     customers = spark.read.schema(
         "c_custkey bigint, c_name string, c_nationkey int, "
         "c_acctbal double, c_mktsegment string"
@@ -610,10 +618,14 @@ def orc_source_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     registered parquet view — valid because the roundtrip is lossless and
     the staged rows ARE the table's rows; what's under test is the
     Spark-side ORC write/read path."""
-    from ..staging import staging_dir
-
-    stage = staging_dir("part_orc_")
-    load_table(spark, sf_dir, "part").write.mode("overwrite").orc(stage)
+    stage = stage_once_dir(
+        "part_orc_",
+        f"sf={sf_dir}",
+        "",
+        lambda path: load_table(spark, sf_dir, "part")
+        .write.mode("overwrite")
+        .orc(path),
+    )
     parts = spark.read.orc(stage)
     return (
         parts.where(F.col("p_size") >= 10)
@@ -728,12 +740,15 @@ def partitioned_source_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus and all of it; the plan-shape test asserts the pruning. Oracle
     runs on the original table — valid because the partitioned roundtrip is
     lossless."""
-    from ..staging import staging_dir
-
-    stage = staging_dir("docs_by_lang_")
-    load_table(spark, sf_dir, "documents").write.partitionBy("lang").mode(
-        "overwrite"
-    ).parquet(stage)
+    stage = stage_once_dir(
+        "docs_by_lang_",
+        f"sf={sf_dir}",
+        "",
+        lambda path: load_table(spark, sf_dir, "documents")
+        .write.partitionBy("lang")
+        .mode("overwrite")
+        .parquet(path),
+    )
     docs = read_staged(spark, stage)
     return (
         docs.where(F.col("lang").isin("de", "es"))
@@ -766,6 +781,8 @@ def bucketed_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     # External tables at fresh staging paths: the default warehouse dir
     # outlives the (in-memory) catalog across sessions, so a managed table
     # would collide with its own leftover location on the next run.
+    # Written on every call, not staged once: saveAsTable registers the
+    # bucket spec in the session catalog, and a staged dir does not carry it.
     spark.sql("DROP TABLE IF EXISTS q_li_bucketed")
     spark.sql("DROP TABLE IF EXISTS q_ord_bucketed")
     li.write.bucketBy(8, "l_orderkey").sortBy("l_orderkey").option(
@@ -944,21 +961,22 @@ def schema_evolution_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     read per file at planning; pin the unified schema explicitly in
     recurring production reads. Aggregation counts tiered vs legacy rows
     per lang so the NULL back-fill itself is what's checked."""
-    docs = load_table(spark, sf_dir, "documents")
-    from ..staging import staging_dir
 
-    stage = staging_dir("docs_evolved_")
-    docs.where(F.col("doc_id") % 2 == 0).select(
-        "doc_id", "lang", "n_chars"
-    ).write.mode("overwrite").parquet(stage + "/v1")
-    docs.where(F.col("doc_id") % 2 == 1).select(
-        "doc_id",
-        "lang",
-        "n_chars",
-        F.when(F.col("n_chars") >= 120, "high").otherwise("low").alias(
-            "quality_tier"
-        ),
-    ).write.mode("overwrite").parquet(stage + "/v2")
+    def write(path: str) -> None:
+        docs = load_table(spark, sf_dir, "documents")
+        docs.where(F.col("doc_id") % 2 == 0).select(
+            "doc_id", "lang", "n_chars"
+        ).write.mode("overwrite").parquet(path + "/v1")
+        docs.where(F.col("doc_id") % 2 == 1).select(
+            "doc_id",
+            "lang",
+            "n_chars",
+            F.when(F.col("n_chars") >= 120, "high").otherwise("low").alias(
+                "quality_tier"
+            ),
+        ).write.mode("overwrite").parquet(path + "/v2")
+
+    stage = stage_once_dir("docs_evolved_", f"sf={sf_dir}", "", write)
     merged = spark.read.option("mergeSchema", True).parquet(
         stage + "/v1", stage + "/v2"
     )
@@ -1470,19 +1488,20 @@ def binary_file_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     follows spark.sql.files.maxPartitionBytes, and only (path, length,
     md5) flow past the scan — blobs stay in their partitions."""
     from ..operators.multimodal import synthesize_media
-    from ..staging import staging_dir
 
-    stage = staging_dir("media_blobs_")
-    media = synthesize_media(spark, sf_dir).select("doc_id", "media")
+    def write(path: str) -> None:
+        def write_blobs(rows) -> None:
+            import os
 
-    def write_blobs(rows) -> None:
-        import os
+            for r in rows:
+                with open(os.path.join(path, f"{r['doc_id']}.bin"), "wb") as f:
+                    f.write(r["media"])
 
-        for r in rows:
-            with open(os.path.join(stage, f"{r['doc_id']}.bin"), "wb") as f:
-                f.write(r["media"])
+        synthesize_media(spark, sf_dir).select(
+            "doc_id", "media"
+        ).foreachPartition(write_blobs)
 
-    media.foreachPartition(write_blobs)
+    stage = stage_once_dir("media_blobs_", f"sf={sf_dir}", "", write)
     bf = spark.read.format("binaryFile").load(stage)
     return (
         bf.select(
@@ -1520,15 +1539,22 @@ def kvtext_source_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     codegen. For formats Spark already speaks, built-in sources remain
     the fast path — this demonstrates the extensibility surface."""
     from ..sources.kvtext import register_kvtext
-    from ..staging import staging_dir
 
     register_kvtext(spark)
-    stage = staging_dir("docs_kvtext_")
-    docs = load_table(spark, sf_dir, "documents")
     flat = F.regexp_replace("text", r"[\t\n\r]", " ")
-    docs.select(
-        F.concat_ws("\t", F.col("doc_id").cast("string"), flat).alias("value")
-    ).write.mode("overwrite").text(stage)
+    stage = stage_once_dir(
+        "docs_kvtext_",
+        f"sf={sf_dir}",
+        "",
+        lambda path: load_table(spark, sf_dir, "documents")
+        .select(
+            F.concat_ws("\t", F.col("doc_id").cast("string"), flat).alias(
+                "value"
+            )
+        )
+        .write.mode("overwrite")
+        .text(path),
+    )
     kv = spark.read.format("kvtext").load(stage)
     return kv.select(
         F.col("key").cast("long").alias("doc_id"),
@@ -1688,18 +1714,23 @@ def csv_bad_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass); the quarantine column is NULL for good rows so it compresses
     to nothing downstream. FAILFAST is the right mode only when upstream
     is contractually clean."""
-    from ..staging import staging_dir
-
-    stage = staging_dir("orders_badcsv_")
-    orders = load_table(spark, sf_dir, "orders")
     price_or_junk = F.when(
         F.col("o_orderkey") % BAD_RECORD_MOD == 0, F.lit("not-a-price")
     ).otherwise(F.col("o_totalprice").cast("string"))
-    orders.select(
-        F.col("o_orderkey").cast("string"),
-        F.col("o_orderstatus"),
-        price_or_junk.alias("o_totalprice"),
-    ).write.mode("overwrite").option("header", True).csv(stage)
+    stage = stage_once_dir(
+        "orders_badcsv_",
+        f"sf={sf_dir}",
+        "",
+        lambda path: load_table(spark, sf_dir, "orders")
+        .select(
+            F.col("o_orderkey").cast("string"),
+            F.col("o_orderstatus"),
+            price_or_junk.alias("o_totalprice"),
+        )
+        .write.mode("overwrite")
+        .option("header", True)
+        .csv(path),
+    )
     back = (
         spark.read.schema(
             "o_orderkey bigint, o_orderstatus string, o_totalprice double, "
@@ -1904,13 +1935,17 @@ def xml_source_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     (Avro is Spark-external in this container — no jar, no pip — so the
     format matrix documents it as the one absent built-in.)"""
-    from ..staging import staging_dir
-
-    stage = staging_dir("customer_xml_")
-    cust = load_table(spark, sf_dir, "customer")
-    cust.select("c_custkey", "c_nationkey", "c_mktsegment", "c_acctbal").write.mode(
-        "overwrite"
-    ).format("xml").option("rowTag", "row").save(stage)
+    stage = stage_once_dir(
+        "customer_xml_",
+        f"sf={sf_dir}",
+        "",
+        lambda path: load_table(spark, sf_dir, "customer")
+        .select("c_custkey", "c_nationkey", "c_mktsegment", "c_acctbal")
+        .write.mode("overwrite")
+        .format("xml")
+        .option("rowTag", "row")
+        .save(path),
+    )
     back = (
         spark.read.schema(
             "c_custkey bigint, c_nationkey bigint, c_mktsegment string, "
@@ -3512,8 +3547,6 @@ def dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     repeated builds in one process reuse the already-partitioned copy —
     a real warehouse has the fact table laid out once, and re-writing it
     per run would measure the write, not the DPP join."""
-    from ..staging import stage_once_dir
-
     stage = stage_once_dir(
         "dpp_orders_",
         sf_dir,

@@ -139,12 +139,17 @@ def text_dir_word_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     token multiset identical either way, so the parquet word_count oracle
     applies unchanged."""
     from ..sources.text_dir import read_text_dir
-    from ..staging import staging_dir
+    from ..staging import stage_once_dir
 
-    stage = staging_dir("docs_textdir_")
-    load_table(spark, sf_dir, "documents").select("text").write.mode(
-        "overwrite"
-    ).text(stage)
+    stage = stage_once_dir(
+        "docs_textdir_",
+        f"sf={sf_dir}",
+        "",
+        lambda path: load_table(spark, sf_dir, "documents")
+        .select("text")
+        .write.mode("overwrite")
+        .text(path),
+    )
     lines = read_text_dir(spark, stage, min_partitions=4)
     return (
         lines.select(

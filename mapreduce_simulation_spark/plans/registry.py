@@ -2,8 +2,9 @@
 
 Every operator claimed in SURVEY.md §2 appears here with BOTH a DataFrame
 plan and an equivalent ANSI-SQL oracle (DuckDB) — the correctness gate.
-Oracle-less entries (None) are genuinely non-SQL-expressible and get the
-driver's weaker rows-only check.
+Every entry's oracle is an exact value hash (none has been oracle-less
+since round 11); an entry registered with None would get only the
+rows-only check.
 
 Cross-engine determinism rules used throughout:
   - aggregate/computed columns aliased identically on both sides;
@@ -291,63 +292,6 @@ def oracle_sql() -> dict[str, str]:
     return {
         name: sql for name, (_, sql) in _ordered().items() if sql is not None
     }
-
-
-# ---------------------------------------------------------------------------
-# Bounded / recall / sketch oracle tiers — ALL EMPTY since round 11.
-#
-# Every formerly rows-only query now carries an exact value-hash oracle:
-# the HLL pair moved onto the cross-engine deterministic sketch
-# (functions/hll.py), similarity_topk_pandas re-scores its BLAS preselect
-# pool with the strict fold, heavy_hitters_sketch serves the two-pass
-# exact heavy-hitter set, and the trained IVF/PQ codebooks are integer-
-# exact Lloyd fits the oracles replay as unrolled CTEs. The weaker tiers'
-# checkers remain in tools/verify_local.py (with their own unit tests) so
-# a future genuinely-nondeterministic operator can declare one; accuracy
-# envelopes (HLL error, ANN recall floors, MG containment) are asserted
-# in pytest against exact ground truth.
-# ---------------------------------------------------------------------------
-
-BOUNDED_ORACLES: dict[str, dict] = {}
-
-RECALL_ORACLES: dict[str, dict] = {}
-
-
-def recall_oracles() -> dict[str, dict]:
-    """name → {sql, group_cols, id_col, score_col, min_recall} for ANN
-    queries checked by result-set recall against the exact oracle."""
-    return dict(RECALL_ORACLES)
-
-
-# ---------------------------------------------------------------------------
-# Sketch oracles: frequency-sketch queries whose RESULT VALUES are
-# partitioning-dependent lower bounds with a PROVABLE error bound — the
-# classic Misra-Gries guarantee. The checkable contract: every returned
-# (key, count) must satisfy  exact - N/capacity <= count <= exact  where N
-# is the total stream length and exact comes from a DuckDB exact count.
-# Neither exact hashing (values vary with partitioning) nor a fixed
-# relative error (the bound is absolute, N/capacity) applies — this is the
-# sketch-native containment check. tools/verify_local.py reports status
-# "sketch_ok" with the worst observed error as a fraction of the bound.
-# ---------------------------------------------------------------------------
-
-# Empty since round 11: heavy_hitters_sketch became the two-pass exact
-# query (sketch prunes, exact recount confirms) and carries a plain
-# GROUP BY/HAVING oracle; the raw merged-sketch lower-bound contract is
-# asserted in tests against pandas_ops.mg_sketch_merged.
-SKETCH_ORACLES: dict[str, dict] = {}
-
-
-def sketch_oracles() -> dict[str, dict]:
-    """name → {sql, word_col, count_col, capacity, expected_rows} for
-    frequency sketches checked by the Misra-Gries containment bound."""
-    return dict(SKETCH_ORACLES)
-
-
-def bounded_oracles() -> dict[str, dict]:
-    """name → {sql, approx_cols: {col: max relative error}} for queries
-    whose oracle is exact-valued only up to estimator error."""
-    return dict(BOUNDED_ORACLES)
 
 
 # ---------------------------------------------------------------------------

@@ -5,12 +5,15 @@ by ``tables.load_table`` and ``read_staged``, and the per-session plan memo.
 The staged files must outlive the *builder* call — the returned DataFrame
 or drained memory-sink table may be executed (or re-executed) by the
 caller at any point afterwards — so the directories are removed at
-interpreter exit rather than on return. Keyed artifacts (``stage_once``,
-``stage_once_dir``, ``keyed_staging_dir``) take one directory per key
-(plus one per rebuild after a source change); every plain
-``staging_dir`` call takes a new one — the streaming output roots, gate
-dirs, sink outputs and checkpoints, and the format-conversion copies in
-``plans/extended.py`` — and all of them live until the process exits.
+interpreter exit rather than on return. There are two kinds:
+
+- artifacts (``stage_once``, ``stage_once_dir``): keyed, built once and
+  served while every source their build read is unchanged, rebuilt into
+  a fresh keyed directory when one moves — staged indexes and models,
+  stream sources, and the batch format-conversion copies;
+- output roots (plain ``staging_dir``): a new directory on every call,
+  never reused — streaming outputs and delta logs, gate dirs, sink
+  outputs, checkpoints and the bucketed tables' paths.
 
 Reads, staged artifacts and plans share one freshness rule: each entry
 carries ``{source path: _file_sig}`` — the signature the read cache
@@ -46,23 +49,6 @@ def staging_dir(prefix: str) -> str:
     path = tempfile.mkdtemp(prefix=prefix)
     _DIRS.append(path)
     return path
-
-
-def keyed_staging_dir(prefix: str, key: str) -> tuple[str, bool]:
-    """A staging directory REUSED for the lifetime of the process when the
-    same (prefix, key) is requested again. Returns (path, already_staged),
-    already_staged being True when the directory was handed out before
-    and still exists. Cleanup at exit as usual.
-
-    For output roots that callers locate by key (the streaming delta
-    logs). Artifacts derived from source data go through
-    :func:`stage_once` instead, which commits a build only once it
-    succeeded and rebuilds when a source changes."""
-    k = (prefix, key)
-    if k in _KEYED and os.path.isdir(_KEYED[k]):
-        return _KEYED[k], True
-    _KEYED[k] = staging_dir(prefix)
-    return _KEYED[k], False
 
 
 # Active recordings (innermost last), PER DRIVER THREAD: memoized builds

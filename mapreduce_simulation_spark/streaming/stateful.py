@@ -558,7 +558,6 @@ def band_index_gate_drain(
 
 def drain_delta_log(
     spark: SparkSession,
-    sf_dir: str,
     stage: str,
     schema: StructType,
     out_prefix: str,
@@ -566,19 +565,19 @@ def drain_delta_log(
 ) -> DataFrame:
     """Drain the parquet file stream ``stage`` one file per micro-batch
     and write each batch's ``delta(batch_df)`` as one parquet file under
-    ``deltas/batch=<id>`` of the keyed dir (``out_prefix``, sf_dir).
+    ``deltas/batch=<id>`` of a fresh ``staging_dir(out_prefix)``.
     Returns every delta read back, with its ``batch`` partition column.
 
-    A re-drain overwrites identical deltas at identical paths, so a
-    replayed batch is idempotent without a transaction log. The output
-    dir is keyed, not fresh per call, so tests can locate the delta log
-    and assert that the drain produced several batches."""
+    A replayed batch overwrites its identical delta at the same path, so
+    the log is idempotent without a transaction log. Every call starts an
+    empty log, so a re-drain never reads batches left by an earlier drain
+    of a different source. The ``batch=`` dirs are visible in the result's
+    ``inputFiles()``."""
     import os
 
-    from ..staging import keyed_staging_dir
+    from ..staging import staging_dir
 
-    out_root, _ = keyed_staging_dir(out_prefix, f"sf={sf_dir}")
-    delta_dir = os.path.join(out_root, "deltas")
+    delta_dir = os.path.join(staging_dir(out_prefix), "deltas")
 
     def _write_delta(batch_df: DataFrame, batch_id: int) -> None:
         delta(batch_df).repartition(1).write.mode("overwrite").parquet(
@@ -594,9 +593,7 @@ def drain_delta_log(
         .start()
     )
     q.awaitTermination()
-    return spark.read.option("basePath", delta_dir).parquet(
-        os.path.join(delta_dir, "batch=*")
-    )
+    return spark.read.parquet(delta_dir)
 
 
 def streaming_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -887,9 +884,7 @@ def streaming_shard_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .start()
     )
     q.awaitTermination()
-    deltas = spark.read.option("basePath", manifest_dir).parquet(
-        f"{manifest_dir}/batch=*"
-    )
+    deltas = spark.read.parquet(manifest_dir)
     return (
         deltas.groupBy("shard_id")
         .agg(
@@ -960,7 +955,6 @@ def streaming_hll_sketch_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     reg, rho = HLL.hll_register_cols("user_id")
     deltas = drain_delta_log(
         spark,
-        sf_dir,
         stage,
         load_table(spark, sf_dir, "events").schema,
         "hll_ingest_out_",
@@ -1033,7 +1027,6 @@ def streaming_quantile_sketch_ingest(
     state = (
         drain_delta_log(
             spark,
-            sf_dir,
             stage,
             load_table(spark, sf_dir, "orders").schema,
             "qsk_ingest_out_",
@@ -1114,7 +1107,6 @@ def streaming_kmv_sketch_ingest(
     sk = min_k(
         drain_delta_log(
             spark,
-            sf_dir,
             stage,
             load_table(spark, sf_dir, "orders").schema,
             "kmv_ingest_out_",

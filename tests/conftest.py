@@ -44,3 +44,31 @@ def duck():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture()
+def local_sf(tmp_path) -> str:
+    """A writable copy of the SF_DIR tables, for tests that rewrite one."""
+    import shutil
+
+    local = tmp_path / "sf"
+    local.mkdir()
+    for t in TABLES:
+        shutil.copyfile(f"{SF_DIR}/{t}.parquet", local / f"{t}.parquet")
+    return str(local)
+
+
+def keep_first_rows(sf: str, table: str, n: int) -> None:
+    """Rewrite ``table`` in the tables dir ``sf`` with its first ``n`` rows."""
+    import pyarrow.parquet as pq
+
+    path = f"{sf}/{table}.parquet"
+    pq.write_table(pq.read_table(path).slice(0, n), path)
+
+
+def delta_batch_dirs(df) -> list[str]:
+    """The ``batch=<id>`` dirs of the delta log that ``df`` reads, sorted
+    (from its ``inputFiles()``, so no staging path is looked up)."""
+    return sorted(
+        {os.path.dirname(f) for f in df.inputFiles() if "/batch=" in f}
+    )

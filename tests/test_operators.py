@@ -235,10 +235,9 @@ def test_ivf_trained_recall_floor(spark, sf_dir):
     exactly re-scored cosines (any hit agrees with brute force to the bit)
     and clear a recall floor vs brute force — measured 0.84 (sf0.01) /
     0.96 (sf0.1) with nprobe 10/16 (N_PROBE_TRAINED, r16) and the staged
-    driver-side-trained codebook (r9), floor set at 0.6; the sweep
-    additionally gates per-query recall (min_group_recall 0.2, no
-    zero-hit queries). tools/verify_local.py checks the same contract
-    against the exact DuckDB oracle (status recall_ok)."""
+    driver-side-trained codebook (r9), floor set at 0.6. The registered
+    query's rows are hash-checked by tools/verify_local.py against its
+    exact DuckDB oracle (status ok)."""
     bf = {
         (r.query_id, r.neighbor_id): r.cosine
         for r in similarity.brute_force_topk(spark, sf_dir).collect()
@@ -666,9 +665,9 @@ def test_pq_topk_recall_floor(spark, sf_dir):
     recall floor holds — measured 0.98 (sf0.01) / 0.84 (sf0.1) at
     PQ_REFINE=64 (re-tuned r16 against ann_recall_audit) with
     8×16 staged codebooks (driver-side seeded k-means over a capped
-    sample, r9); deterministic per corpus.
-    tools/verify_local.py checks the same contract against the exact
-    DuckDB oracle per sweep (status recall_ok)."""
+    sample, r9); deterministic per corpus. The registered query's rows
+    are hash-checked by tools/verify_local.py against its exact DuckDB
+    oracle (status ok)."""
     bf = {
         (r.query_id, r.neighbor_id): r.cosine
         for r in similarity.brute_force_topk(spark, sf_dir).collect()

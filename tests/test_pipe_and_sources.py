@@ -187,113 +187,38 @@ def test_staging_dirs_removed_at_cleanup(tmp_path):
     assert not staging._DIRS
 
 
-def test_keyed_staging_dir_reuses_per_key_and_survives_cleanup():
-    """keyed_staging_dir returns the SAME directory for a repeated
-    (prefix, key) — the DPP layout-step contract — a fresh one per
-    distinct key, and never hands out a path that a cleanup (or an
-    external delete) has removed."""
+def test_stage_once_dir_reuses_per_key_and_survives_cleanup():
+    """stage_once_dir returns the SAME directory for a repeated
+    (prefix, key) without rebuilding it, a fresh one per distinct key,
+    and never hands out a path that a cleanup (or an external delete) has
+    removed."""
     import os
     import shutil
 
     from mapreduce_simulation_spark import staging
 
-    p1, staged1 = staging.keyed_staging_dir("keyed_test_", "sfA")
-    assert not staged1 and os.path.isdir(p1)
-    p2, staged2 = staging.keyed_staging_dir("keyed_test_", "sfA")
-    assert staged2 and p2 == p1
-    p3, staged3 = staging.keyed_staging_dir("keyed_test_", "sfB")
-    assert not staged3 and p3 != p1
-    # a deleted dir must not be reported as already staged
+    builds = []
+
+    def write(path):
+        builds.append(path)
+        open(os.path.join(path, "marker"), "w").close()
+
+    p1 = staging.stage_once_dir("keyed_test_", "sfA", "", write)
+    assert builds == [p1] and os.path.isdir(p1)
+    p2 = staging.stage_once_dir("keyed_test_", "sfA", "", write)
+    assert p2 == p1 and len(builds) == 1
+    p3 = staging.stage_once_dir("keyed_test_", "sfB", "", write)
+    assert p3 != p1 and builds[-1] == p3
+    # a deleted dir must be rebuilt, not served
     shutil.rmtree(p1)
-    p4, staged4 = staging.keyed_staging_dir("keyed_test_", "sfA")
-    assert not staged4 and os.path.isdir(p4)
+    p4 = staging.stage_once_dir("keyed_test_", "sfA", "", write)
+    assert builds[-1] == p4 and os.path.isfile(os.path.join(p4, "marker"))
     staging._cleanup()
     assert not os.path.exists(p4) and not os.path.exists(p3)
     # cleanup also forgets the keyed map: next request restages
-    p5, staged5 = staging.keyed_staging_dir("keyed_test_", "sfB")
-    assert not staged5 and os.path.isdir(p5)
-
-
-def test_bounded_compare_accepts_within_and_rejects_beyond_tolerance():
-    """The bounded-error oracle comparator: exact columns must match
-    bit-for-bit, approx columns pass within the declared relative error
-    and FAIL beyond it (the property that makes a bounded_ok status
-    meaningful evidence, not a rubber stamp)."""
-    import importlib.util
-    import os
-
-    spec = importlib.util.spec_from_file_location(
-        "verify_local",
-        os.path.join(os.path.dirname(__file__), "..", "tools",
-                     "verify_local.py"),
-    )
-    vl = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(vl)
-
-    cols = ["day", "n_exact", "n_approx"]
-    oracle = [("d1", 10, 100), ("d2", 20, 1000)]
-    ok_rows = [("d1", 10, 104), ("d2", 20, 960)]
-    assert vl._bounded_compare(
-        cols, ok_rows, cols, oracle, {"n_approx": 0.05}
-    ) == []
-    # approx beyond tolerance
-    bad_approx = [("d1", 10, 110), ("d2", 20, 1000)]
-    assert vl._bounded_compare(
-        cols, bad_approx, cols, oracle, {"n_approx": 0.05}
-    )
-    # exact column off by one is NEVER tolerated
-    bad_exact = [("d1", 11, 100), ("d2", 20, 1000)]
-    assert vl._bounded_compare(
-        cols, bad_exact, cols, oracle, {"n_approx": 0.05}
-    )
-    # row-count mismatch
-    assert vl._bounded_compare(
-        cols, ok_rows[:1], cols, oracle, {"n_approx": 0.05}
-    )
-
-
-def test_recall_compare_checks_overlap_floor_and_bitwise_hits():
-    """The ANN recall comparator: passes at/above the recall floor with
-    bitwise-equal scores on overlapping hits; fails below the floor and
-    on any score drift within an overlapping hit."""
-    import importlib.util
-    import os
-
-    spec = importlib.util.spec_from_file_location(
-        "verify_local_r",
-        os.path.join(os.path.dirname(__file__), "..", "tools",
-                     "verify_local.py"),
-    )
-    vl = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(vl)
-
-    cols = ["query_id", "neighbor_id", "cosine", "rk"]
-    spec_d = {
-        "group_cols": ["query_id"],
-        "id_col": "neighbor_id",
-        "score_col": "cosine",
-        "min_recall": 0.5,
-    }
-    exact = [(1, 10, 0.9, 1), (1, 11, 0.8, 2), (2, 20, 0.7, 1),
-             (2, 21, 0.6, 2)]
-    # 3 of 4 hits, scores bitwise equal on hits → pass, recall 0.75
-    got = [(1, 10, 0.9, 1), (1, 99, 0.5, 2), (2, 20, 0.7, 1),
-           (2, 21, 0.6, 2)]
-    problems, recall = vl._recall_compare(cols, got, cols, exact, spec_d)
-    assert problems == [] and recall == 0.75
-    # only 1 of 4 → below floor
-    low = [(1, 10, 0.9, 1), (1, 99, 0.5, 2), (2, 98, 0.4, 1),
-           (2, 97, 0.3, 2)]
-    problems, recall = vl._recall_compare(cols, low, cols, exact, spec_d)
-    assert problems and recall == 0.25
-    # overlapping hit with a drifted score is NEVER tolerated
-    drift = [(1, 10, 0.900001, 1), (1, 11, 0.8, 2), (2, 20, 0.7, 1),
-             (2, 21, 0.6, 2)]
-    problems, _ = vl._recall_compare(cols, drift, cols, exact, spec_d)
-    assert problems
-    # row-count mismatch
-    problems, _ = vl._recall_compare(cols, got[:2], cols, exact, spec_d)
-    assert problems
+    n = len(builds)
+    p5 = staging.stage_once_dir("keyed_test_", "sfB", "", write)
+    assert len(builds) == n + 1 and os.path.isdir(p5)
 
 
 def test_kvtext_connector_roundtrip(spark, sf_dir, tmp_path):

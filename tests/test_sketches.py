@@ -11,7 +11,7 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F
 
-from conftest import SF_DIR
+from conftest import SF_DIR, delta_batch_dirs
 from mapreduce_simulation_spark.operators import sketches as SK
 from mapreduce_simulation_spark.tables import load_table
 
@@ -152,29 +152,20 @@ def test_streaming_quantile_ingest_equals_batch_sketch(spark):
     delta-log rollup must be ROW-IDENTICAL to the one-shot batch sketch
     (sum-merge associativity), and the drain must really have produced
     multiple delta batches."""
-    import os
-
-    from mapreduce_simulation_spark.staging import keyed_staging_dir
     from mapreduce_simulation_spark.streaming.stateful import (
         streaming_quantile_sketch_ingest,
     )
 
-    online = [
-        tuple(r)
-        for r in streaming_quantile_sketch_ingest(spark, SF_DIR).collect()
-    ]
+    df = streaming_quantile_sketch_ingest(spark, SF_DIR)
+    online = [tuple(r) for r in df.collect()]
     offline = [
         tuple(r)
         for r in SK.quantile_sketch_monthly(spark, SF_DIR).collect()
     ]
     assert online == offline and len(online) > 0
-    out_root, already = keyed_staging_dir("qsk_ingest_out_", f"sf={SF_DIR}")
-    assert already
-    n_deltas = sum(
-        1
-        for d in os.listdir(os.path.join(out_root, "deltas"))
-        if d.startswith("batch=")
-    )
+    batches = delta_batch_dirs(df)
+    assert batches
+    n_deltas = len(batches)
     assert n_deltas > 1, f"expected multi-batch drain, got {n_deltas}"
 
 
@@ -324,17 +315,12 @@ def test_streaming_kmv_ingest_equals_batch_sketch(spark):
     state re-ranked equals the one-shot batch sketch row-for-row (the
     oracle SQL is the batch construction — compare against it), and the
     drain really produced multiple delta batches."""
-    import glob as _glob
-
-    from mapreduce_simulation_spark.staging import keyed_staging_dir
     from mapreduce_simulation_spark.streaming.stateful import (
         streaming_kmv_sketch_ingest,
     )
 
-    got = sorted(
-        (r.yr, r.mo, r.k_used, r.n_est)
-        for r in streaming_kmv_sketch_ingest(spark, SF_DIR).collect()
-    )
+    df = streaming_kmv_sketch_ingest(spark, SF_DIR)
+    got = sorted((r.yr, r.mo, r.k_used, r.n_est) for r in df.collect())
     duck = duckdb.connect()
     duck.execute(
         f"CREATE VIEW orders AS SELECT * FROM '{SF_DIR}/orders.parquet'"
@@ -343,9 +329,8 @@ def test_streaming_kmv_ingest_equals_batch_sketch(spark):
         tuple(r) for r in duck.execute(SK.KMV_MONTH_ESTIMATES_SQL).fetchall()
     )
     assert got == want
-    out_root, already = keyed_staging_dir("kmv_ingest_out_", f"sf={SF_DIR}")
-    assert already, "drain should have staged its delta log"
-    batches = _glob.glob(f"{out_root}/deltas/batch=*")
+    batches = delta_batch_dirs(df)
+    assert batches, "drain should have staged its delta log"
     assert len(batches) >= 2, batches
 
 

@@ -1,6 +1,5 @@
 """Round-9 regressions: staged ANN index builders (deterministic
-driver-side codebook training, staging identity) and the two new
-verify-tier checkers (Misra-Gries containment, per-group recall).
+driver-side codebook training, staging identity).
 
 The builders' end-to-end recall contracts live in test_operators
 (test_pq_topk_recall_floor, test_ivf_trained_recall_floor); these tests
@@ -10,20 +9,10 @@ broken piece instead of a recall drop.
 
 from __future__ import annotations
 
-import os
-import sys
-
 import numpy as np
 import pytest
 
 from conftest import SF_DIR
-
-sys.path.insert(
-    0,
-    os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"
-    ),
-)
 
 
 # ---------------------------------------------------------------------------
@@ -122,83 +111,6 @@ def test_pq_and_trained_ivf_staging_identity(spark):
         again = [tuple(r) for r in fn(spark, SF_DIR).collect()]
         assert first == again, f"{fn.__name__}: staged serve differs"
         assert len(first) == S.N_QUERIES * S.TOP_K
-
-
-# ---------------------------------------------------------------------------
-# verify_local checkers (imported from the tool itself, not re-derived)
-# ---------------------------------------------------------------------------
-
-
-@pytest.fixture()
-def vl():
-    import verify_local
-
-    return verify_local
-
-
-MG_SPEC = {
-    "word_col": "word",
-    "count_col": "sketch_count",
-    "capacity": 10,
-    "expected_rows": 2,
-}
-MG_COLS = ["word", "sketch_count"]
-MG_OCOLS = ["word", "exact_count"]
-# N = 100 → bound = 10
-MG_ORACLE = [("a", 60), ("b", 30), ("c", 10)]
-
-
-def test_sketch_compare_accepts_in_bound(vl):
-    probs, worst = vl._sketch_compare(
-        MG_COLS, [("a", 55), ("b", 30)], MG_OCOLS, MG_ORACLE, MG_SPEC
-    )
-    assert probs == []
-    assert worst == 0.5  # a undercounts by 5 of a 10 bound
-
-
-def test_sketch_compare_rejects_overcount_and_blown_bound(vl):
-    probs, _ = vl._sketch_compare(
-        MG_COLS, [("a", 61), ("b", 30)], MG_OCOLS, MG_ORACLE, MG_SPEC
-    )
-    assert any("EXCEEDS" in p for p in probs)
-    probs, _ = vl._sketch_compare(
-        MG_COLS, [("a", 49), ("b", 30)], MG_OCOLS, MG_ORACLE, MG_SPEC
-    )
-    assert any("bound" in p for p in probs)
-    probs, _ = vl._sketch_compare(
-        MG_COLS, [("zz", 5), ("b", 30)], MG_OCOLS, MG_ORACLE, MG_SPEC
-    )
-    assert any("phantom" in p for p in probs)
-
-
-RECALL_SPEC = {
-    "group_cols": ["q"],
-    "id_col": "n",
-    "score_col": "s",
-    "min_recall": 0.5,
-}
-RC = ["q", "n", "s"]
-
-
-def test_recall_compare_flags_zero_hit_group(vl):
-    # Pooled recall 3/4 = 0.75 clears the 0.5 floor, but group 2 has no
-    # true hit — the per-group gate must fail it anyway.
-    exact = [(1, 10, 0.9), (1, 11, 0.8), (2, 20, 0.7), (2, 21, 0.6)]
-    got = [(1, 10, 0.9), (1, 11, 0.8), (2, 20, 0.7), (2, 99, 0.1)]
-    probs, recall = vl._recall_compare(RC, got, RC, exact, RECALL_SPEC)
-    assert probs == [] and recall == 0.75
-    got_bad = [(1, 10, 0.9), (1, 11, 0.8), (2, 98, 0.2), (2, 99, 0.1)]
-    probs, _ = vl._recall_compare(RC, got_bad, RC, exact, RECALL_SPEC)
-    assert any("per-group floor" in p for p in probs)
-
-
-def test_recall_compare_min_group_recall(vl):
-    spec = dict(RECALL_SPEC, min_group_recall=0.6)
-    exact = [(1, 10, 0.9), (1, 11, 0.8), (2, 20, 0.7), (2, 21, 0.6)]
-    # group 1 has 1/2 = 0.5 < 0.6 → fails even though no group is zero-hit
-    got = [(1, 10, 0.9), (1, 99, 0.1), (2, 20, 0.7), (2, 21, 0.6)]
-    probs, _ = vl._recall_compare(RC, got, RC, exact, spec)
-    assert any("per-group floor" in p for p in probs)
 
 
 def test_narrow_minhash_bands_match_batch_signatures(spark):
@@ -620,19 +532,11 @@ def test_registry_tier_census():
     re-scored BLAS preselect, two-pass exact heavy hitters, integer-exact
     trained codebooks with unrolled-CTE oracle replay). Adding a query
     without an exact oracle should be a deliberate, reviewed decision
-    that updates this census and declares a bounded/recall/sketch spec."""
-    from mapreduce_simulation_spark.plans.registry import (
-        _REGISTRY,
-        bounded_oracles,
-        recall_oracles,
-        sketch_oracles,
-    )
+    that updates this census."""
+    from mapreduce_simulation_spark.plans.registry import _REGISTRY
 
     no_oracle = {k for k, v in _REGISTRY.items() if v[1] is None}
-    tiered = (
-        set(bounded_oracles()) | set(recall_oracles()) | set(sketch_oracles())
-    )
-    assert no_oracle == tiered == set()
+    assert no_oracle == set()
     assert len(_REGISTRY) >= 197
 
 

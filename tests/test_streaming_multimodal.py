@@ -1009,9 +1009,9 @@ def test_streaming_shard_ingest_multibatch_manifest_parity(spark, sf_dir):
     property that makes the batch-keyed delta design exactly-once."""
     import os
 
+    from mapreduce_simulation_spark import staging
     from mapreduce_simulation_spark.functions.hashing import P
     from mapreduce_simulation_spark.operators.text import tokens
-    from mapreduce_simulation_spark.staging import keyed_staging_dir
     from mapreduce_simulation_spark.streaming.stateful import (
         streaming_shard_ingest,
     )
@@ -1021,10 +1021,8 @@ def test_streaming_shard_ingest_multibatch_manifest_parity(spark, sf_dir):
         for r in streaming_shard_ingest(spark, sf_dir).collect()
     }
     # the staged input must split into ≥2 files → ≥2 micro-batches
-    stage, already = keyed_staging_dir(
-        "documents_stream_", f"split=doc_id|sf={sf_dir}"
-    )
-    assert already  # the query call above staged it
+    stage = staging._KEYED[("documents_stream_", f"split=doc_id|sf={sf_dir}")]
+    assert os.path.isdir(stage)  # the query call above staged it
     n_files = sum(
         1 for f in os.listdir(stage) if f.endswith(".parquet")
     )
@@ -1117,18 +1115,20 @@ def test_streaming_lsh_serve_survives_index_restaging(
     import os
     import shutil
 
+    from mapreduce_simulation_spark import staging
     from mapreduce_simulation_spark.operators import similarity as sim
-    from mapreduce_simulation_spark.staging import keyed_staging_dir
 
     # first-touch the staged index so the swap targets the real artifact
     corpus = sim._corpus_with_norm(spark, sf_dir)
     sim._staged_multitable_signatures(spark, sf_dir, corpus)
-    root, already = keyed_staging_dir(
-        "lsh_mt_sigs_",
-        f"{sf_dir}|mt{sim.N_LSH_TABLES}x{sim.N_HYPERPLANES}_full_v1",
-    )
+    root = staging._KEYED[
+        (
+            "lsh_mt_sigs_",
+            f"{sf_dir}|mt{sim.N_LSH_TABLES}x{sim.N_HYPERPLANES}_full_v1",
+        )
+    ]
     final = os.path.join(root, "sigs")
-    assert already and os.path.isdir(final)
+    assert os.path.isdir(root) and os.path.isdir(final)
 
     batch = {
         (r.query_id, r.rk): (r.neighbor_id, r.cosine)
@@ -1626,40 +1626,30 @@ def test_streaming_lsh_index_ingest_equals_batch_census(spark, sf_dir):
     """Online ≡ offline for the index monitor: the census rolled up from
     the per-batch occupancy deltas must be ROW-IDENTICAL to batch
     lsh_index_stats (occupancy merge is sum — associative/commutative),
-    asserting the drain produced multiple delta batches (5 range-split
+    asserting the drain produced multiple delta batches (4 range-split
     files × maxFilesPerTrigger=1) and that every delta is bounded by the
     bucket space — the property that makes the monitor's state
-    corpus-independent. A re-drain must rewrite identical deltas
-    (idempotent replay, the shard-ingest recipe)."""
-    import os
-
+    corpus-independent. A re-drain must yield the same census."""
+    from conftest import delta_batch_dirs
     from mapreduce_simulation_spark.operators.similarity import (
         N_LSH_TABLES,
         lsh_index_stats,
         streaming_lsh_index_ingest,
     )
-    from mapreduce_simulation_spark.staging import keyed_staging_dir
 
-    online = [
-        tuple(r)
-        for r in streaming_lsh_index_ingest(spark, sf_dir).collect()
-    ]
+    df = streaming_lsh_index_ingest(spark, sf_dir)
+    online = [tuple(r) for r in df.collect()]
     offline = [tuple(r) for r in lsh_index_stats(spark, sf_dir).collect()]
     assert online == offline and len(online) == N_LSH_TABLES
 
-    out_root, already = keyed_staging_dir(
-        "lsh_census_ingest_", f"sf={sf_dir}"
-    )
-    assert already  # the query call above created it
-    delta_dir = os.path.join(out_root, "deltas")
-    batches = [d for d in os.listdir(delta_dir) if d.startswith("batch=")]
+    batches = delta_batch_dirs(df)
+    assert batches  # the query call above created the log
     assert len(batches) > 1, f"expected multi-batch drain, got {batches}"
     for b in batches:
-        n = spark.read.parquet(os.path.join(delta_dir, b)).count()
+        n = spark.read.parquet(b).count()
         assert n <= N_LSH_TABLES * 256, (b, n)
 
-    # idempotent replay: a second drain overwrites identical deltas and
-    # yields the same census
+    # replay: a second drain yields the same census
     again = [
         tuple(r)
         for r in streaming_lsh_index_ingest(spark, sf_dir).collect()
@@ -1683,25 +1673,18 @@ def test_streaming_hll_ingest_equals_batch_sketch(spark):
     )
     from mapreduce_simulation_spark.tables import load_table
 
-    online = [
-        tuple(r) for r in streaming_hll_sketch_ingest(spark, SF_DIR).collect()
-    ]
+    df = streaming_hll_sketch_ingest(spark, SF_DIR)
+    online = [tuple(r) for r in df.collect()]
 
     # the drain really produced multiple delta batches — without this the
     # online≡offline equality could silently stop exercising real
     # multi-batch merging if staging ever collapsed to one file (r11
     # advice: the docstring claimed this assertion; now it exists)
-    import os
+    from conftest import delta_batch_dirs
 
-    from mapreduce_simulation_spark.staging import keyed_staging_dir
-
-    out_root, already = keyed_staging_dir("hll_ingest_out_", f"sf={SF_DIR}")
-    assert already  # the query call above created it
-    n_deltas = sum(
-        1
-        for d in os.listdir(os.path.join(out_root, "deltas"))
-        if d.startswith("batch=")
-    )
+    batches = delta_batch_dirs(df)
+    assert batches  # the query call above created the log
+    n_deltas = len(batches)
     assert n_deltas > 1, f"expected multi-batch drain, got {n_deltas} delta"
 
     ev = load_table(spark, SF_DIR, "events")
@@ -1890,26 +1873,66 @@ def test_streaming_events_queries_share_one_staged_source(spark, sf_dir):
     assert len(staging._DIRS) == n_dirs  # one single-file split
 
 
-def test_staged_stream_source_follows_table_rewrite(spark, sf_dir, tmp_path):
+def test_staged_stream_source_follows_table_rewrite(spark, local_sf):
     """A staged stream source is not served once its table changed:
     after events.parquet is rewritten with a subset of its rows, the
     streaming result equals the batch answer over the new table."""
-    import shutil
-    from pathlib import Path
-
     import pyarrow.parquet as pq
 
-    local = tmp_path / "sf"
-    local.mkdir()
-    for f in Path(sf_dir).iterdir():
-        shutil.copyfile(f, local / f.name)
-    sev.streaming_events_hourly(spark, str(local)).collect()
+    from conftest import keep_first_rows
 
-    table = pq.read_table(local / "events.parquet")
-    pq.write_table(table.slice(0, table.num_rows // 2), local / "events.parquet")
-    got = sev.streaming_events_hourly(spark, str(local)).collect()
-    want = sev.windowed_counts(load_table(spark, str(local), "events")).collect()
+    sev.streaming_events_hourly(spark, local_sf).collect()
+
+    n_events = pq.read_metadata(f"{local_sf}/events.parquet").num_rows
+    keep_first_rows(local_sf, "events", n_events // 2)
+    got = sev.streaming_events_hourly(spark, local_sf).collect()
+    want = sev.windowed_counts(load_table(spark, local_sf, "events")).collect()
     assert sorted(map(tuple, got)) == sorted(map(tuple, want))
+
+
+@pytest.mark.parametrize(
+    "name, table",
+    [
+        ("streaming_hll_sketch_ingest", "events"),
+        ("streaming_quantile_sketch_ingest", "orders"),
+        ("streaming_kmv_sketch_ingest", "orders"),
+        ("streaming_lsh_index_ingest", "embeddings"),
+    ],
+)
+def test_delta_log_follows_table_rewrite(spark, local_sf, name, table):
+    """A re-drained delta log holds only the new drain's batches: after
+    the source table is cut to its first rows, the ingest equals its
+    batch twin (the registered DuckDB oracle) over the new table."""
+    import duckdb
+
+    from conftest import keep_first_rows
+    from mapreduce_simulation_spark.plans.registry import (
+        oracle_sql,
+        queries,
+    )
+
+    query = queries()[name]
+    query(spark, local_sf).collect()
+    keep_first_rows(local_sf, table, 2)
+    df = query(spark, local_sf)
+
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW {table} AS SELECT * FROM '{local_sf}/{table}.parquet'"
+    )
+    res = con.execute(oracle_sql()[name])
+    want_cols = [d[0] for d in res.description]
+
+    def norm(rows, cols):
+        return sorted(
+            tuple(
+                (c, round(v, 9) if isinstance(v, float) else v)
+                for c, v in sorted(zip(cols, r))
+            )
+            for r in rows
+        )
+
+    assert norm(df.collect(), df.columns) == norm(res.fetchall(), want_cols)
 
 
 def test_memory_sink_is_written_only_by_run_to_memory():
