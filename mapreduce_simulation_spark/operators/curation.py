@@ -36,7 +36,7 @@ from pyspark.sql.window import Window
 from ..functions import hashing as H
 from ..tables import load_table
 from ..staging import memoized_plan, read_staged, stage_once, stage_once_dir
-from .dedup import _SHINGLES_SQL, _shingles
+from .dedup import _SHINGLES_SQL
 from .text import bigram_pairs, staged_tokenized_docs, tokens
 
 # Held-out "benchmark" slice: a fixed residue class stands in for the eval
@@ -1123,8 +1123,8 @@ def _bpe_learn_driver(
     frequency (overlapping occurrences each count, matching the window
     form's lead() pairing), take the argmax with (pair_n DESC, lhs ASC,
     rhs ASC) tie-break, and merge left-to-right non-overlapping in every
-    word. Bit-identical semantics to the distributed window-arithmetic
-    twin (_bpe_run) — asserted in tests on adversarial vocabularies."""
+    word. Tests assert it against an independent reference BPE on
+    adversarial vocabularies (repeated-symbol runs)."""
     seqs: list[list[str]] = [list(w) for w, _ in vocab]
     cnts = [c for _, c in vocab]
     merges: list[tuple[int, str, str, str, int]] = []
@@ -1177,9 +1177,7 @@ def bpe_learn_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark jobs (one argmax job per merge) does not fly; learning on the
     collected type table costs one job total regardless of merge count,
     then APPLYing the learned rules is embarrassingly parallel
-    (bpe_apply_merges). The distributed window-arithmetic learner is kept
-    as a semantics twin for tests (_bpe_iterate) and proven equivalent on
-    adversarial vocabularies.
+    (bpe_apply_merges).
     """
     docs = load_table(spark, sf_dir, "documents")
     rows = (
@@ -1200,20 +1198,13 @@ def bpe_learn_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _bpe_iterate(spark: SparkSession, words: DataFrame, n_merges: int) -> DataFrame:
-    """The merge-learning loop over a (word, cnt, seq) type table — split out
-    so tests can drive it with adversarial vocabularies (repeated-symbol
-    runs) against an independent reference implementation."""
-    merges, _words = _bpe_run(spark, words, n_merges)
-    return merges
-
-
 def _bpe_merge_step(words: DataFrame, lhs: str, rhs: str) -> DataFrame:
     """Apply ONE known merge rule (lhs, rhs) to a (word, cnt, seq) table —
     the greedy non-overlapping merge as pure window arithmetic: runs of
     consecutive matches (only possible when lhs == rhs) merge at even
-    offsets, which is exactly left-to-right greedy semantics. Lazy — no
-    action; composable into a fixed-depth plan when the rules are known."""
+    offsets, which is exactly left-to-right greedy semantics. No query
+    runs it: it is the reference tests hold the live fold
+    (_bpe_fold_rule) to."""
     wseq = Window.partitionBy("word").orderBy("pos")
     tok = words.select(
         "word", "cnt", F.posexplode(F.split("seq", " ")).alias("pos", "sym")
@@ -1254,45 +1245,6 @@ def _bpe_merge_step(words: DataFrame, lhs: str, rhs: str) -> DataFrame:
                 " ",
             ).alias("seq")
         )
-    )
-
-
-def _bpe_run(
-    spark: SparkSession, words: DataFrame, n_merges: int
-) -> tuple[DataFrame, DataFrame]:
-    """Run the DISTRIBUTED BPE learning loop (one argmax job per merge —
-    the semantics twin tests drive against the driver-side learner);
-    return (merge table, final segmented word table)."""
-    merges: list[tuple[int, str, str, str, int]] = []
-    for rank in range(1, n_merges + 1):
-        wseq = Window.partitionBy("word").orderBy("pos")
-        tok = words.select(
-            "word", "cnt", F.posexplode(F.split("seq", " ")).alias("pos", "sym")
-        )
-        pairs = tok.withColumn("r", F.lead("sym", 1).over(wseq))
-        best = (
-            pairs.where(F.col("r").isNotNull())
-            .groupBy("sym", "r")
-            .agg(F.sum("cnt").alias("pair_n"))
-            .orderBy(F.desc("pair_n"), F.asc("sym"), F.asc("r"))
-            .limit(1)
-            .collect()
-        )
-        if not best:
-            break
-        b = best[0]
-        merges.append((rank, b.sym, b.r, b.sym + b.r, b.pair_n))
-        # per-iteration localCheckpoint keeps the loop's plan linear
-        # instead of n_merges-deep nested
-        words = _bpe_merge_step(words, b.sym, b.r).localCheckpoint()
-
-    return (
-        spark.createDataFrame(
-            merges,
-            "merge_rank bigint, lhs string, rhs string, merged string, "
-            "pair_n bigint",
-        ),
-        words,
     )
 
 
@@ -2357,8 +2309,8 @@ def _bpe_fold_rule(arr: Column, lhs: str, rhs: str) -> Column:
     a carried pending symbol: (pend, x) merges when pend == lhs and
     x == rhs, otherwise pend is emitted and x becomes pending. Runs of a
     self-pair (lhs == rhs) therefore merge at even offsets, exactly the
-    window formulation's contract (_bpe_merge_step, kept for the
-    distributed learning twin)."""
+    contract of the window formulation _bpe_merge_step, which tests use
+    as its reference."""
     merged = lhs + rhs
     out_t = "array<string>"
 

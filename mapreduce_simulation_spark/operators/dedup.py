@@ -237,14 +237,14 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     fanout at cap² rows — one viral shingle can no longer produce a
     quadratic partition). Verification then computes the TRUE jaccard over
     the full, uncapped shingle table for just those candidates, so scores
-    are exact. Completeness is a theorem, not a data property: pairs whose
-    shared shingles are all hotter than the cap can only exist between
-    docs that are mostly hot shingles, and those "risky" docs get
-    candidates from the frequent shingles too (same theorem as
-    _capped_candidates; the branch is empty on every tested corpus —
-    measured max common-shingle min-DF at sf0.01 is 3 — and
-    test_operators asserts equality with the uncapped join, including on
-    an adversarial all-hot-shingle corpus).
+    are exact. Completeness is a theorem, not a data property: a
+    qualifying pair sharing no rare shingle requires min(f_a, f_b) ≥
+    t/(1+t)·(n_a+n_b), so both docs must individually be mostly hot
+    shingles ("risky", (1+t)·f_d ≥ t·n_d), and those docs get candidates
+    from the frequent shingles too (the ``extra`` branch). The branch is
+    empty on every tested corpus — measured max common-shingle min-DF at
+    sf0.01 is 3 — and test_operators asserts equality with the uncapped
+    join, including on an adversarial all-hot-shingle corpus.
 
     Verification splits the intersection count by the SAME df partition
     the index uses: c_true = c_rare + c_freq. c_rare falls out of the
@@ -335,65 +335,6 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("jaccard") >= JACCARD_THRESHOLD)
         .orderBy("doc_a", "doc_b")
     )
-
-
-def _capped_candidates(sh: DataFrame) -> DataFrame:
-    """Distinct (doc_a, doc_b) candidates sharing ≥1 shingle with document
-    frequency ≤ SHINGLE_DF_CAP, PLUS the completeness branch that makes
-    the cap a theorem rather than a heuristic: a qualifying pair sharing
-    no rare shingle requires min(f_a, f_b) ≥ t/(1+t)·(n_a+n_b), so both
-    docs must individually be mostly hot shingles ("risky",
-    (1+t)·f_d ≥ t·n_d) — those docs also get candidates from the frequent
-    shingles. The branch is empty on every tested corpus (0 risky docs at
-    sf0.1) and ordered so AQE's empty-relation propagation erases it;
-    downstream exact verification makes any candidate surplus harmless."""
-    rare = (
-        sh.groupBy("shingle")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .where(F.col("df") <= SHINGLE_DF_CAP)
-        .select("shingle")
-    )
-    capped = sh.join(rare, "shingle")
-    base = (
-        capped.alias("a")
-        .join(
-            capped.alias("b"),
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-    )
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    rare_sizes = capped.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_rare")
-    )
-    risky_ids = (
-        sizes.join(rare_sizes, "doc_id", "left")
-        .where(
-            (1.0 + JACCARD_THRESHOLD)
-            * (F.col("n_sh") - F.coalesce("n_rare", F.lit(0)))
-            >= JACCARD_THRESHOLD * F.col("n_sh")
-        )
-        .select("doc_id")
-    )
-    freq_risky = sh.join(F.broadcast(risky_ids), "doc_id").join(
-        rare, "shingle", "left_anti"
-    )
-    extra = (
-        freq_risky.alias("fa")
-        .join(
-            freq_risky.alias("fb"),
-            (F.col("fa.shingle") == F.col("fb.shingle"))
-            & (F.col("fa.doc_id") < F.col("fb.doc_id")),
-        )
-        .select(
-            F.col("fa.doc_id").alias("doc_a"),
-            F.col("fb.doc_id").alias("doc_b"),
-        )
-    )
-    return base.unionByName(extra).distinct()
 
 
 def _near_dup_pairs(
@@ -627,9 +568,11 @@ def minhash_signatures(
 
 def narrow_minhash_bands(docs: DataFrame) -> DataFrame:
     """(doc_id, band, key): MinHash LSH band keys computed per-row, with
-    NO shuffle and NO window — the streaming-compatible formulation of the
-    shingle → signature → band pipeline that feeds the ingestion dedup
-    gate (streaming/stateful.streaming_minhash_dedup).
+    NO shuffle and NO window — the expression formulation of the
+    shingle → signature → band pipeline. It is the reference that the
+    ingestion gate's Arrow bander (narrow_minhash_bands_arrow) is
+    asserted equal to, and perfbench's corpus workload checks the gate's
+    verdicts against it.
 
     The batch pipeline (_shingles → minhash_signatures) uses a per-doc
     lead() window and a groupBy min — both need an exchange, and a
@@ -1921,17 +1864,6 @@ JOIN anchor xb ON xb.doc_id = jp.doc_b
 CONTAINMENT_RECALL_AUDIT_SQL = _audit_sql()
 
 
-def simhash_fingerprints(docs: DataFrame) -> DataFrame:
-    """(doc_id, simhash): 30-bit frequency-weighted sign fingerprint."""
-    tok_cnt = (
-        docs.select("doc_id", F.explode(tokens(F.col("text"))).alias("word"))
-        .groupBy("doc_id", "word")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .withColumn("h", H.char_hash(F.col("word")))
-    )
-    return _simhash_from_counts(tok_cnt)
-
-
 def _staged_simhash_fp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, simhash): the per-corpus simhash fingerprint table,
     COMPUTED ONCE from the staged tf index — tok_cnt IS the (doc_id, w,
@@ -1954,7 +1886,7 @@ def _staged_simhash_fp(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _simhash_from_counts(tok_cnt: DataFrame) -> DataFrame:
-    """Fingerprint tail shared by the generic and staged builders:
+    """Fingerprint tail of _staged_simhash_fp's build:
     (doc_id, word-count, word-hash) → per-bit signed sums → sign bits."""
     bit = F.explode(F.sequence(F.lit(0), F.lit(SIMHASH_BITS - 1))).alias("bit")
     per_bit = (

@@ -108,24 +108,6 @@ def extract_feature_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return media.mapInPandas(batches, schema=COUNTS_SCHEMA)
 
 
-def extract_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fixed-width normalized feature vectors (the embedding-model output
-    shape): derives `features array<double>` from the integer histogram
-    JVM-side (`F.transform`), keeping the only Python stage the Arrow
-    histogram pass in :func:`extract_feature_counts`."""
-    counts = extract_feature_counts(spark, sf_dir)
-    return counts.select(
-        "doc_id",
-        "media_type",
-        F.transform(
-            "counts",
-            lambda c: F.when(
-                F.col("n_bytes") > 0, c / F.col("n_bytes")
-            ).otherwise(F.lit(0.0)),
-        ).alias("features"),
-    )
-
-
 def media_feature_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver-facing exploded view of the feature histogram: one row per
     (doc, bin) with the integer count and normalized weight. Scalar

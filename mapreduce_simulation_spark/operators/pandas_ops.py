@@ -111,7 +111,6 @@ FROM embeddings
 
 
 MG_CAPACITY = 64
-HEAVY_HITTERS_TOP = 20
 
 
 def mg_add_batch(
@@ -130,6 +129,26 @@ def mg_add_batch(
         cut = sorted(counters.values(), reverse=True)[capacity]
         counters = {w: c - cut for w, c in counters.items() if c - cut > 0}
     return counters
+
+
+def _mg_sketch(tok: DataFrame) -> DataFrame:
+    """Pass 1 of heavy_hitters_sketch: one Misra-Gries sketch of
+    MG_CAPACITY counters per partition of the ``word`` column ``tok``,
+    emitted as (word, mg_count) lower bounds. Counts depend on the
+    partitioning; summed over partitions, each undercounts its word by
+    less than N/MG_CAPACITY."""
+
+    def mg_partition(batches):
+        counters: dict[str, int] = {}
+        for pdf in batches:
+            counters = mg_add_batch(
+                counters, pdf["word"].value_counts().to_dict(), MG_CAPACITY
+            )
+        yield pd.DataFrame(
+            {"word": list(counters), "mg_count": list(counters.values())}
+        )
+
+    return tok.mapInPandas(mg_partition, "word string, mg_count bigint")
 
 
 def heavy_hitters_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -156,8 +175,8 @@ def heavy_hitters_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     the OUTPUT — every token with frequency ≥ N/MG_CAPACITY and its exact
     count — is deterministic regardless of partitioning, so the driver
     hash-checks it against a plain GROUP BY / HAVING oracle. The MG
-    lower-bound contract of the sketch pass itself is asserted in tests
-    against mg_sketch_merged.
+    lower-bound contract of the sketch pass itself (_mg_sketch) is
+    asserted in tests.
 
     This is the production shape (sketch to prune, exact pass to
     confirm): two token scans, but both read the staged token store
@@ -176,18 +195,7 @@ def heavy_hitters_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = staged_tokenized_docs(spark, sf_dir)
     tok = docs.select(F.explode(F.col("ws")).alias("word"))
 
-    def mg_partition(batches):
-        counters: dict[str, int] = {}
-        for pdf in batches:
-            counters = mg_add_batch(
-                counters, pdf["word"].value_counts().to_dict(), MG_CAPACITY
-            )
-        yield pd.DataFrame(
-            {"word": list(counters), "mg_count": list(counters.values())}
-        )
-
-    sketch = tok.mapInPandas(mg_partition, "word string, mg_count bigint")
-    candidates = sketch.select("word").distinct()
+    candidates = _mg_sketch(tok).select("word").distinct()
     total = tok.agg(F.count(F.lit(1)).alias("total"))
     return (
         tok.join(F.broadcast(candidates), "word")
@@ -212,38 +220,6 @@ SELECT word, n FROM cnt, tot
 WHERE n * {MG_CAPACITY} >= total
 ORDER BY n DESC, word
 """
-
-
-def mg_sketch_merged(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The raw merged Misra-Gries sketch (word, sketch_count lower bounds),
-    top HEAVY_HITTERS_TOP — kept for the tests' per-count bound check;
-    values legitimately depend on the partitioning, which is why
-    the registered heavy_hitters_sketch query serves the exact two-pass
-    result instead."""
-    from pyspark.sql import functions as F
-
-    from .text import tokens
-
-    docs = load_table(spark, sf_dir, "documents")
-    tok = docs.select(F.explode(tokens(F.col("text"))).alias("word"))
-
-    def mg_partition(batches):
-        counters: dict[str, int] = {}
-        for pdf in batches:
-            counters = mg_add_batch(
-                counters, pdf["word"].value_counts().to_dict(), MG_CAPACITY
-            )
-        yield pd.DataFrame(
-            {"word": list(counters), "mg_count": list(counters.values())}
-        )
-
-    sketch = tok.mapInPandas(mg_partition, "word string, mg_count bigint")
-    return (
-        sketch.groupBy("word")
-        .agg(F.sum("mg_count").alias("sketch_count"))
-        .orderBy(F.col("sketch_count").desc(), F.col("word").asc())
-        .limit(HEAVY_HITTERS_TOP)
-    )
 
 
 def grouped_agg_median_balance(spark: SparkSession, sf_dir: str) -> DataFrame:

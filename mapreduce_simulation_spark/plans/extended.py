@@ -478,8 +478,8 @@ def above_avg_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference's opaque-executable model can never see. Registered via
     spark.sql to exercise the SQL entry point; every other query uses the
     DataFrame API, both lower into the same plans. The view name is
-    query-unique so no caller's registration of plain `orders` (e.g.
-    tables.load_all) is clobbered as a side effect."""
+    query-unique so no caller's temp view of plain `orders` is clobbered
+    as a side effect."""
     load_table(spark, sf_dir, "orders").createOrReplaceTempView(
         "orders_above_avg"
     )

@@ -1646,7 +1646,7 @@ register("embedding_argmax_arrow", _argmax_arrow, _argmax_sql)
 # the MG superset guarantee makes the output — every token with frequency
 # ≥ N/capacity plus its exact count — partitioning-independent, so the
 # driver hash-checks it against a plain GROUP BY/HAVING oracle. The raw
-# sketch's lower-bound contract stays asserted in tests (mg_sketch_merged).
+# sketch pass's lower-bound contract stays asserted in tests (_mg_sketch).
 from ..operators.pandas_ops import (  # noqa: E402
     HEAVY_HITTERS_SQL as _mg_hh_sql,
     heavy_hitters_sketch as _mg_hh,

@@ -27,7 +27,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
-    IntegerType,
     LongType,
     StringType,
     StructField,
@@ -126,22 +125,17 @@ GROUP BY user_id
 # _rollup_fn so one oracle covers both operators.
 # ---------------------------------------------------------------------------
 
-try:  # the API landed in Spark 4.0; its state protocol needs protobuf.
-    # Prefer the real wheel; fall back to the vendored mini-runtime
-    # (vendor/pypath — clean-room wire-format subset) so the operator runs
-    # in containers without protobuf instead of being an env-gated stub.
-    from ..vendor import ensure_protobuf as _ensure_protobuf
+# The API landed in Spark 4.0; its state protocol needs protobuf. Prefer
+# the real wheel; ensure_protobuf falls back to the vendored mini-runtime
+# (vendor/pypath — clean-room wire-format subset), so the operator runs in
+# containers without protobuf instead of being an env-gated stub.
+from ..vendor import ensure_protobuf as _ensure_protobuf
 
-    _ensure_protobuf()
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
-    _HAS_TWS = True
-except ImportError:  # pragma: no cover - environment-dependent
-    # Without any protobuf runtime the TWS driver worker crashes at query
-    # start (StateMessage_pb2 import); keep the call-time gate as the
-    # loud failure mode.
-    StatefulProcessor = object  # type: ignore[assignment,misc]
-    _HAS_TWS = False
+_ensure_protobuf()
+from pyspark.sql.streaming import (  # noqa: E402
+    StatefulProcessor,
+    StatefulProcessorHandle,
+)
 
 
 class _RollupProcessor(StatefulProcessor):
@@ -198,12 +192,6 @@ def _drain_tws(
     RocksDB state store provider (the default HDFS-backed provider is
     unsupported); the setting is scoped to this drain and restored
     afterwards."""
-    if not _HAS_TWS:
-        raise RuntimeError(
-            f"{query_name} needs a protobuf runtime (transformWithState "
-            "state protocol); install google.protobuf or use the "
-            "applyInPandasWithState twin stateful_user_rollup"
-        )
     stage = stage_stream_source(spark, sf_dir, "events")
     stream = read_event_stream(spark, stage, max_files_per_trigger=None)
     key = "spark.sql.streaming.stateStore.providerClass"
@@ -246,77 +234,6 @@ def stateful_user_rollup_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Streaming MinHash dedup gate: near-dup candidate flagging at ingestion.
 # ---------------------------------------------------------------------------
-
-GATE_OUTPUT_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("band", IntegerType()),
-        StructField("dup", IntegerType()),
-    ]
-)
-
-GATE_STATE_SCHEMA = StructType([StructField("mn", LongType())])
-
-
-def _gate_fn(
-    key: tuple[Any, ...], pdfs: Iterable[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """Per-LSH-bucket state = the doc_id of the bucket's KEPT representative.
-
-    First batch to touch a bucket: batch-global lowest-id-wins (the same
-    canonical-representative rule the batch dedup family uses) — the
-    minimum is kept (dup=0), the rest flagged. Every LATER arrival into an
-    occupied bucket is flagged dup=1 unconditionally — occupancy
-    semantics. A min-id rule across batches would let a lower doc_id
-    arriving later be emitted dup=0 while the earlier-kept minimum also
-    stays dup=0, so a keep-if-not-dup consumer would retain two
-    near-duplicates (round-9 advice finding). Verdicts already emitted are
-    immutable in append mode, so the only consistent cross-batch rule is
-    "the first kept doc owns the bucket". State is one long per bucket
-    and never changes after the bucket is claimed."""
-    band = int(key[0])
-    ids: list[int] = []
-    for pdf in pdfs:
-        ids.extend(int(x) for x in pdf["doc_id"])
-    if not ids:
-        return
-    if state.exists:
-        dup = [1] * len(ids)
-    else:
-        mn = min(ids)
-        state.update((mn,))
-        dup = [0 if i == mn else 1 for i in ids]
-    yield pd.DataFrame(
-        {"doc_id": ids, "band": [band] * len(ids), "dup": dup}
-    )
-
-
-def minhash_dedup_gate(doc_stream: DataFrame) -> DataFrame:
-    """Attach the ingestion near-dup gate to a streaming documents frame:
-    per-row narrow MinHash band keys (operators/dedup.narrow_minhash_bands
-    — no shuffle, no window, so it runs as a stateless projection inside
-    the micro-batch), then one stateful step keyed by (band, key) whose
-    state is the bucket's minimum doc_id. Emits one (doc_id, band, dup)
-    verdict per band per doc.
-
-    This is the streaming face of dedup_minhash_lsh: a production
-    pipeline gates documents AT INGESTION against everything already
-    ingested instead of re-running corpus-wide batch dedup per snapshot.
-    State size is one long per occupied LSH bucket — O(corpus bands),
-    the same table the batch path stages as its band-key index — and each
-    micro-batch shuffles only its own 8 keys per doc.
-    """
-    from ..operators.dedup import narrow_minhash_bands_arrow
-
-    banded = narrow_minhash_bands_arrow(doc_stream)
-    return banded.groupBy("band", "key").applyInPandasWithState(
-        _gate_fn,
-        GATE_OUTPUT_SCHEMA,
-        GATE_STATE_SCHEMA,
-        "append",
-        GroupStateTimeout.NoTimeout,
-    )
-
 
 # Compaction cadence for the band-index gate: once this many verdict
 # deltas sit past the newest claims base, the batch body folds them into
@@ -393,10 +310,18 @@ def _band_index_gate_batch(
 
     The batch frame is already banded (doc_id, band, key). A band is
     dup=1 when an earlier batch claimed its (band, key) bucket, or when a
-    lower doc_id of this batch shares the bucket — exactly the occupancy
-    semantics of the Python-state `_gate_fn`. One left join against the
-    prior claims (`_prior_claims`, never this batch's own) and one window
-    minimum per bucket compute it, all in the JVM.
+    lower doc_id of this batch shares the bucket. One left join against
+    the prior claims (`_prior_claims`, never this batch's own) and one
+    window minimum per bucket compute it, all in the JVM.
+
+    These are occupancy semantics. The first batch to touch a bucket
+    keeps its batch-global lowest id (the canonical-representative rule
+    the batch dedup family uses); every LATER arrival into the occupied
+    bucket is flagged, even one with a lower doc_id. A min-id rule across
+    batches would emit that lower id dup=0 while the earlier-kept minimum
+    also stays dup=0, so a keep-if-not-dup consumer would retain two
+    near-duplicates. Verdicts already emitted are immutable, so the only
+    consistent cross-batch rule is "the first kept doc owns the bucket".
 
     The verdicts (doc_id, band, key, dup) are written to
     ``verdicts/_tmp_<id>`` and committed by one rename to
@@ -516,12 +441,11 @@ def band_index_gate_drain(
     delta. Returns the verdicts directory ((doc_id, band, key, dup) rows
     across ``delta_<id>`` dirs; the dup=0 rows are the claims).
 
-    This is the engine's DEFAULT ingestion-dedup path (registered as
-    `streaming_minhash_dedup`). Versus the applyInPandasWithState gate
-    (`minhash_dedup_gate`, kept as the arbitrary-Python-state demo): state
-    lives in parquet instead of a Python state store, so the per-batch
-    cost is one shuffle join of the batch's bands against the claims — no
-    per-group Python invocation, no state-store serialization. At 100 TB
+    This is the engine's ingestion-dedup path (registered as
+    `streaming_minhash_dedup` and `streaming_containment_dedup`). State
+    lives in parquet, not in a state store, so the per-batch cost is one
+    shuffle join of the batch's bands against the claims — no per-group
+    Python invocation, no state-store serialization. At 100 TB
     the claims are a bucketed table on (band, key) and the probe join
     shuffles only the incoming batch; every COMPACT_DELTA_THRESHOLD
     deltas the claims are folded into a base under ``index/``
@@ -598,9 +522,7 @@ def drain_delta_log(
 
 def streaming_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver-facing query: stage documents as a single-file parquet
-    stream, run the band-index ingestion gate (band_index_gate_drain —
-    the JVM-join default; the applyInPandasWithState twin remains as the
-    arbitrary-state demo and is equivalence-tested against this path),
+    stream, run the band-index ingestion gate (band_index_gate_drain),
     drain with Trigger.AvailableNow, roll the per-band verdicts up per
     document — (doc_id, dup_bands, is_candidate_dup), where a document is
     a candidate near-dup iff it shares ≥1 LSH band bucket with a LOWER-id
@@ -611,8 +533,7 @@ def streaming_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle is plain SQL over the same signature arithmetic — exact, since
     the gate's band keys are signature-value strings, not lossy hashes.
     Multi-batch incremental gating (batch N flagged against buckets from
-    batches 1..N-1) is exercised in tests for BOTH gate implementations,
-    plus a batch-for-batch equivalence test between them."""
+    batches 1..N-1) is exercised in tests."""
     from ..staging import staging_dir
     from ..tables import load_table
     from pyspark.sql import functions as F

@@ -80,14 +80,3 @@ def _read(spark: SparkSession, path: str, name: str) -> DataFrame:
             # session tz is UTC so the cast is value-preserving vs the oracle.
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load every table as a dict; also registers each as a temp view so
-    queries can be expressed in SQL (``spark.sql``) as well as DataFrames."""
-    tables = {}
-    for name in TABLE_NAMES:
-        df = load_table(spark, sf_dir, name)
-        df.createOrReplaceTempView(name)
-        tables[name] = df
-    return tables

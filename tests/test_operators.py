@@ -457,11 +457,16 @@ def test_heavy_hitters_sketch_contract(spark, sf_dir):
     tokens with frequency ≥ N/capacity with exact counts (partitioning-
     independent — the MG superset guarantee); (2) the raw merged sketch's
     counts are lower bounds within N/capacity of the exact counts, and
-    every token clearing the error bound appears in the sketch's top list."""
+    every token clearing the error bound appears in the sketch's top list.
+    The sketch is the query's own pass 1 (_mg_sketch) over the same staged
+    token store."""
     from pyspark.sql import functions as F
 
     from mapreduce_simulation_spark.operators import pandas_ops as po
-    from mapreduce_simulation_spark.operators.text import tokens
+    from mapreduce_simulation_spark.operators.text import (
+        staged_tokenized_docs,
+        tokens,
+    )
     from mapreduce_simulation_spark.tables import load_table
 
     exact_df = (
@@ -483,12 +488,21 @@ def test_heavy_hitters_sketch_contract(spark, sf_dir):
     }
     assert hh == want
 
-    # (2) the raw sketch: MG lower-bound containment
-    got = {
-        r.word: r.sketch_count
-        for r in po.mg_sketch_merged(spark, sf_dir).collect()
-    }
-    assert len(got) == po.HEAVY_HITTERS_TOP
+    # (2) the query's own sketch pass, summed over partitions: MG
+    # lower-bound containment of its top words
+    top = 20
+    tok = staged_tokenized_docs(spark, sf_dir).select(
+        F.explode("ws").alias("word")
+    )
+    sketch = (
+        po._mg_sketch(tok)
+        .groupBy("word")
+        .agg(F.sum("mg_count").alias("sketch_count"))
+        .orderBy(F.col("sketch_count").desc(), F.col("word").asc())
+        .limit(top)
+    )
+    got = {r.word: r.sketch_count for r in sketch.collect()}
+    assert len(got) == top
 
     for w, c in got.items():
         assert c <= exact[w], (w, c, exact[w])
@@ -823,12 +837,15 @@ def test_pii_scrub_redacts_all_classes(spark, sf_dir):
     assert "@example.com" not in sample
 
 
-def test_bpe_learn_merges_matches_reference_bpe(spark):
-    """Drive the BPE loop with a vocabulary that exercises the hard case —
-    runs of a repeated symbol, where greedy left-to-right merging must take
+def test_bpe_learn_merges_matches_reference_bpe():
+    """Drive the registered BPE learner (driver-side over the collected
+    type table) with a vocabulary that exercises the hard case — runs of
+    a repeated symbol, where greedy left-to-right merging must take
     non-overlapping pairs from the left — and compare every learned rule
     against an independent pure-Python BPE implementation."""
-    from mapreduce_simulation_spark.operators.curation import _bpe_iterate
+    from mapreduce_simulation_spark.operators.curation import (
+        _bpe_learn_driver,
+    )
 
     vocab = {"aaaa": 10, "aaab": 6, "baaa": 5, "abab": 4, "cde": 3}
 
@@ -859,22 +876,6 @@ def test_bpe_learn_merges_matches_reference_bpe(spark):
                 new[tuple(out)] = new.get(tuple(out), 0) + c
             words = new
         return rules
-
-    words_df = spark.createDataFrame(
-        [(w, c, " ".join(w)) for w, c in vocab.items()],
-        "word string, cnt bigint, seq string",
-    )
-    got = [
-        (r.merge_rank, r.lhs, r.rhs, r.merged, r.pair_n)
-        for r in _bpe_iterate(spark, words_df, 6).collect()
-    ]
-    assert got == ref_bpe(vocab, 6)
-
-    # The registered production learner (driver-side over the collected
-    # type table) must match the same reference AND the distributed twin.
-    from mapreduce_simulation_spark.operators.curation import (
-        _bpe_learn_driver,
-    )
 
     assert _bpe_learn_driver(sorted(vocab.items()), 6) == ref_bpe(vocab, 6)
 
@@ -1062,22 +1063,39 @@ def test_substring_spans_equal_stringwise_truth(spark, sf_dir):
     assert got == truth
 
 
-def test_capped_candidates_complete_on_hot_shingle_corpus(spark):
-    """_capped_candidates (the dedup_ngram_jaccard candidate stage) must
-    also recover pairs whose shared shingles are all hot — same adversarial
-    corpus as the _near_dup_pairs completeness test."""
+def test_ngram_jaccard_complete_on_hot_shingle_corpus(spark, local_sf):
+    """dedup_ngram_jaccard must also recover pairs whose shared shingles
+    are all hot (df > SHINGLE_DF_CAP): on this corpus every candidate
+    comes from the risky-doc branch alone. Pairs and scores must equal the
+    exhaustive uncapped join — same adversarial corpus as the
+    _near_dup_pairs completeness test."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = f"{local_sf}/documents.parquet"
     hot = " ".join(f"w{i}" for i in range(8))
-    rows = [(i, hot) for i in range(dedup.SHINGLE_DF_CAP + 5)]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    sh = dedup._shingles(docs)
-    got = {
-        (r.doc_a, r.doc_b)
-        for r in dedup._pair_jaccard(sh, dedup._capped_candidates(sh))
-        .collect()
-    }
-    want = {
-        (r.doc_a, r.doc_b) for r in dedup._pair_jaccard(sh, None).collect()
-    }
+    n = dedup.SHINGLE_DF_CAP + 5
+    pq.write_table(
+        pa.table(
+            {
+                "doc_id": list(range(n)),
+                "text": [hot] * n,
+                "lang": ["en"] * n,
+                "source": ["src0"] * n,
+                "n_chars": [len(hot)] * n,
+            },
+            schema=pq.read_schema(path),
+        ),
+        path,
+    )
+    got = sorted(
+        tuple(r) for r in dedup.dedup_ngram_jaccard(spark, local_sf).collect()
+    )
+    docs = load_table(spark, local_sf, "documents")
+    want = sorted(
+        tuple(r)
+        for r in dedup._pair_jaccard(dedup._shingles(docs), None).collect()
+    )
     assert want and got == want
 
 

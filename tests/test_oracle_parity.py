@@ -31,11 +31,6 @@ QUERIES = sorted(registry.queries())
 
 @pytest.mark.parametrize("name", QUERIES)
 def test_query_matches_oracle(name, spark, duck, sf_dir):
-    if name == "stateful_user_rollup_tws":
-        from mapreduce_simulation_spark.streaming.stateful import _HAS_TWS
-
-        if not _HAS_TWS:
-            pytest.skip("transformWithState needs protobuf (absent here)")
     fn = registry.queries()[name]
     sdf = fn(spark, sf_dir)
     scols = sdf.columns

@@ -72,8 +72,8 @@ def test_bigram_pairs_matches_lead_window(spark):
 def test_bpe_fold_rule_matches_window_merge_step(spark, lhs, rhs):
     """_bpe_fold_rule (single aggregate fold) applies one merge rule with
     byte-identical greedy left-to-right semantics to _bpe_merge_step (the
-    window formulation kept for the distributed learning twin) — runs of
-    a self-pair merge at even offsets in both."""
+    window formulation, kept as this reference) — runs of a self-pair
+    merge at even offsets in both."""
     from mapreduce_simulation_spark.operators.curation import (
         _bpe_fold_rule,
         _bpe_merge_step,

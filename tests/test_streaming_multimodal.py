@@ -130,19 +130,9 @@ def test_media_schema_and_checksums(spark, sf_dir):
         assert r.checksum == zlib.crc32(bytes(r.media))
 
 
-def test_extract_features_shapes(spark, sf_dir):
-    feats = multimodal.extract_features(spark, sf_dir)
-    rows = feats.collect()
-    n_docs = load_table(spark, sf_dir, "documents").count()
-    assert len(rows) == n_docs
-    for r in rows[:10]:
-        assert len(r.features) == multimodal.FEATURE_DIM
-        assert abs(sum(r.features) - 1.0) < 1e-9
-
-
 def test_media_feature_bins_shape_and_consistency(spark, sf_dir):
     """Exploded histogram: scalar columns only (driver-hashable), 16 rows
-    per doc, counts sum back to n_bytes, weights equal the array view."""
+    per doc, counts sum back to n_bytes and weights to 1."""
     bins = multimodal.media_feature_bins(spark, sf_dir)
     assert [f.dataType.simpleString() for f in bins.schema.fields] == [
         "bigint", "string", "int", "bigint", "double"
@@ -150,7 +140,11 @@ def test_media_feature_bins_shape_and_consistency(spark, sf_dir):
     n_docs = load_table(spark, sf_dir, "documents").count()
     assert bins.count() == n_docs * multimodal.FEATURE_DIM
     totals = (
-        bins.groupBy("doc_id").agg(F.sum("bin_count").alias("total")).collect()
+        bins.groupBy("doc_id")
+        .agg(
+            F.sum("bin_count").alias("total"), F.sum("weight").alias("w")
+        )
+        .collect()
     )
     sizes = {
         r.doc_id: r.n_bytes
@@ -160,6 +154,7 @@ def test_media_feature_bins_shape_and_consistency(spark, sf_dir):
     }
     for r in totals:
         assert r.total == sizes[r.doc_id]
+        assert abs(r.w - 1.0) < 1e-9
 
 
 def test_decode_media_contract():
@@ -592,16 +587,8 @@ def test_rocksdb_state_store_provider(spark, event_files, tmp_path):
 
 
 def test_transform_with_state_rollup_parity(spark, sf_dir):
-    """transformWithStateInPandas twin of the stateful rollup — runs only
-    where its protobuf-based state protocol is available (gated exactly
-    like the multimodal codecs); asserts parity with the batch GROUP BY."""
-    import pytest as _pytest
-
-    from mapreduce_simulation_spark.streaming.stateful import _HAS_TWS
-
-    if not _HAS_TWS:
-        _pytest.skip("google.protobuf absent: TWS driver worker cannot start")
-
+    """transformWithStateInPandas twin of the stateful rollup; asserts
+    parity with the batch GROUP BY."""
     from pyspark.sql import functions as F
 
     from mapreduce_simulation_spark.streaming.stateful import (
@@ -947,18 +934,41 @@ def test_kvtext_sink_replayed_batch_is_exactly_once(spark, sf_dir, tmp_path):
         assert fh.read() == manifest_before  # no duplicate manifest line
 
 
-def test_minhash_gate_carries_state_across_batches(spark, tmp_path):
-    """The ingestion gate's value is CROSS-batch dedup: a batch-2 document
-    duplicating a batch-1 document must be flagged from the bucket-minimum
-    state, not from anything in its own batch. Two single-file micro-batches
-    via maxFilesPerTrigger=1; doc 30 copies doc 10's text (all 8 bands
-    shared), doc 40 is distinct."""
-    import pyspark.sql.functions as F
+def _gate_dup_bands(spark, src, out):
+    """Drain the single-file parquet stream ``src`` one file per
+    micro-batch through the registered band-index gate into ``out``.
+    Returns ({doc_id: number of dup bands}, number of verdict deltas)."""
+    import os
 
     from mapreduce_simulation_spark.streaming.stateful import (
-        minhash_dedup_gate,
+        band_index_gate_drain,
     )
 
+    verdict_root = band_index_gate_drain(
+        spark.readStream.schema("doc_id bigint, text string")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src),
+        out,
+    )
+    rows = (
+        spark.read.option("recursiveFileLookup", "true")
+        .parquet(verdict_root)
+        .groupBy("doc_id")
+        .agg(F.sum("dup").alias("dup_bands"))
+        .collect()
+    )
+    n_deltas = sum(
+        1 for d in os.listdir(verdict_root) if d.startswith("delta_")
+    )
+    return {r.doc_id: r.dup_bands for r in rows}, n_deltas
+
+
+def test_minhash_gate_carries_state_across_batches(spark, tmp_path):
+    """The ingestion gate's value is CROSS-batch dedup: a batch-2 document
+    duplicating a batch-1 document must be flagged from the claims batch 1
+    committed, not from anything in its own batch. Two single-file
+    micro-batches via maxFilesPerTrigger=1; doc 30 copies doc 10's text
+    (all 8 bands shared), doc 40 is distinct."""
     dup_text = "the quick brown fox jumps over the lazy dog again and again"
     uniq = "completely different words appear in this other document body"
     batch1 = spark.createDataFrame(
@@ -975,30 +985,11 @@ def test_minhash_gate_carries_state_across_batches(spark, tmp_path):
     # trigger order is by mod time — force batch2 strictly after batch1
     _force_mtime_after(src, first)
 
-    stream = (
-        spark.readStream.schema("doc_id bigint, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    q = (
-        minhash_dedup_gate(stream)
-        .writeStream.format("memory")
-        .queryName("gate_multibatch")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    out = (
-        spark.table("gate_multibatch")
-        .groupBy("doc_id")
-        .agg(F.sum("dup").alias("dup_bands"))
-        .collect()
-    )
-    got = {r.doc_id: r.dup_bands for r in out}
-    assert got[10] == 0  # bucket minima — never flagged
+    got, n_deltas = _gate_dup_bands(spark, src, str(tmp_path / "gate_out"))
+    assert n_deltas == 2  # one verdict delta per micro-batch
+    assert got[10] == 0  # bucket owner — never flagged
     assert got[20] == 0 and got[40] == 0  # no shared buckets
-    assert got[30] == 8  # identical text → all 8 bands hit batch-1 state
+    assert got[30] == 8  # identical text → all 8 bands hit batch-1 claims
 
 
 def test_streaming_shard_ingest_multibatch_manifest_parity(spark, sf_dir):
@@ -1238,12 +1229,8 @@ def test_minhash_gate_occupied_bucket_flags_lower_id(spark, tmp_path):
     """Occupancy semantics: a LOWER doc_id arriving in a later micro-batch
     into an occupied bucket is still flagged dup — the first kept doc owns
     the bucket. A cross-batch min-id rule would emit both the earlier kept
-    doc (immutable in append mode) and the later lower-id doc as dup=0,
-    so a keep-if-not-dup consumer would retain two near-duplicates."""
-    from mapreduce_simulation_spark.streaming.stateful import (
-        minhash_dedup_gate,
-    )
-
+    doc (already committed) and the later lower-id doc as dup=0, so a
+    keep-if-not-dup consumer would retain two near-duplicates."""
     dup_text = "the quick brown fox jumps over the lazy dog again and again"
     batch1 = spark.createDataFrame(
         [(50, dup_text)], "doc_id bigint, text string"
@@ -1257,26 +1244,10 @@ def test_minhash_gate_occupied_bucket_flags_lower_id(spark, tmp_path):
     batch2.coalesce(1).write.mode("append").parquet(src)
     _force_mtime_after(src, first)
 
-    q = (
-        minhash_dedup_gate(
-            spark.readStream.schema("doc_id bigint, text string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        .writeStream.format("memory")
-        .queryName("gate_lowid")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    got, n_deltas = _gate_dup_bands(
+        spark, src, str(tmp_path / "gate_out_lowid")
     )
-    q.awaitTermination()
-    out = (
-        spark.table("gate_lowid")
-        .groupBy("doc_id")
-        .agg(F.sum("dup").alias("dup_bands"))
-        .collect()
-    )
-    got = {r.doc_id: r.dup_bands for r in out}
+    assert n_deltas == 2
     assert got[50] == 0  # first occupant keeps the bucket
     assert got[10] == 8  # later lower id flagged in every shared band
 
@@ -1304,62 +1275,21 @@ def _multibatch_doc_stage(spark, tmp_path, name):
     return src
 
 
-def test_band_index_gate_matches_python_state_gate(spark, tmp_path):
-    """The JVM band-index gate (the registered default ingest path) must
-    produce BAND-FOR-BAND the same verdicts as the applyInPandasWithState
-    demo gate on a multi-batch stream — same occupancy semantics (first
-    batch to touch a bucket: batch-global min wins; later arrivals
-    flagged), different state substrate (parquet index vs Python state
-    store)."""
-    from mapreduce_simulation_spark.streaming.stateful import (
-        band_index_gate_drain,
-        minhash_dedup_gate,
+def test_band_index_gate_multibatch_verdicts(spark, tmp_path):
+    """The band-index gate (the registered ingest path) over a three-batch
+    stream with cross-batch copies and an intra-batch near-dup: the first
+    batch to touch a bucket keeps its batch-global minimum, later arrivals
+    are flagged, and each micro-batch commits one verdict delta."""
+    src = _multibatch_doc_stage(spark, tmp_path, "gate_multi_src")
+    by_doc, n_deltas = _gate_dup_bands(
+        spark, src, str(tmp_path / "gate_multi_out")
     )
-
-    src = _multibatch_doc_stage(spark, tmp_path, "gate_equiv_src")
-
-    def stream():
-        return (
-            spark.readStream.schema("doc_id bigint, text string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-
-    verdict_root = band_index_gate_drain(
-        stream(), str(tmp_path / "gate_equiv_out")
-    )
-    new = {
-        (r.doc_id, r.band): r.dup
-        for r in spark.read.option("recursiveFileLookup", "true")
-        .parquet(verdict_root)
-        .collect()
-    }
-    q = (
-        minhash_dedup_gate(stream())
-        .writeStream.format("memory")
-        .queryName("gate_equiv_py")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    old = {
-        (r.doc_id, r.band): r.dup
-        for r in spark.table("gate_equiv_py").collect()
-    }
-    assert new == old and len(new) > 0
     # the cross-batch structure actually fired: copies flagged in all
     # 8 bands, intra-batch near-dup flagged, originals kept
-    by_doc: dict[int, int] = {}
-    for (d, _b), dup in new.items():
-        by_doc[d] = by_doc.get(d, 0) + dup
     assert by_doc[10] == 0 and by_doc[20] == 0
     assert by_doc[30] == 8 and by_doc[55] == 8 and by_doc[12] == 8
     # and the drain really ran one micro-batch per file (3 verdict deltas)
-    import os
-
-    ver = os.path.join(str(tmp_path / "gate_equiv_out"), "verdicts")
-    assert sum(1 for d in os.listdir(ver) if d.startswith("delta_")) == 3
+    assert n_deltas == 3
 
 
 def test_band_index_gate_drain_refuses_lost_checkpoint(spark, tmp_path):
@@ -1711,13 +1641,6 @@ def test_tws_mapstate_rollup_parity(spark, sf_dir):
     per-event-type rollup read BACK from the state handle must equal the
     batch GROUP BY — the store round trip (updateValue/getValue/iterator
     through the state protocol) is what's under test."""
-    import pytest as _pytest
-
-    from mapreduce_simulation_spark.streaming.stateful import _HAS_TWS
-
-    if not _HAS_TWS:
-        _pytest.skip("no protobuf runtime: TWS worker cannot start")
-
     from pyspark.sql import functions as F
 
     from mapreduce_simulation_spark.streaming.stateful import (
@@ -1755,13 +1678,6 @@ def test_tws_liststate_delta_log_parity(spark, sf_dir):
     """ListState surface of transformWithState (r13): per-user append-only
     partial-aggregate log folded at emission must equal the batch GROUP BY
     whatever the Arrow chunking (order-insensitive folds)."""
-    import pytest as _pytest
-
-    from mapreduce_simulation_spark.streaming.stateful import _HAS_TWS
-
-    if not _HAS_TWS:
-        _pytest.skip("no protobuf runtime: TWS worker cannot start")
-
     from pyspark.sql import functions as F
 
     from mapreduce_simulation_spark.streaming.stateful import (

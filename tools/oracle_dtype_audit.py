@@ -101,17 +101,12 @@ def main() -> int:
                 f"read_parquet('{sf_dir}/{t}.parquet')"
             )
 
-        from mapreduce_simulation_spark.streaming.stateful import _HAS_TWS
-
         oracles = registry.oracle_sql()
         queries = registry.queries()
         bad = 0
         warned = 0
         for name in sorted(oracles):
             if only and name not in only:
-                continue
-            if name == "stateful_user_rollup_tws" and not _HAS_TWS:
-                print(f"SKIP {name}: transformWithState needs protobuf")
                 continue
             try:
                 spdf = queries[name](spark, sf_dir).toPandas()

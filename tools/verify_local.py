@@ -74,17 +74,9 @@ def main() -> int:
     qs, oracles = e.queries(), e.oracle_sql()
     failures = 0
     n_ok = n_rows_only = 0
-    from mapreduce_simulation_spark.streaming.stateful import _HAS_TWS
 
     for name, fn in qs.items():
         if only and name not in only:
-            continue
-        if name == "stateful_user_rollup_tws" and not _HAS_TWS:
-            print(f"SKIP  {name}: transformWithState needs protobuf")
-            results[name] = {
-                "status": "skip",
-                "reason": "transformWithState needs protobuf",
-            }
             continue
         t0 = time.perf_counter()
         try:
